@@ -17,7 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from lol_data_collection_system_spark.session import get_spark  # noqa: E402
+from lol_data_collection_system_spark.session import get_spark, reset  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
@@ -88,6 +88,8 @@ def main() -> None:
     builds: dict[str, float] = {}
     execs: dict[str, float] = {}
     for _pass in range(3):
+        if _pass:
+            reset(spark)  # a later pass rebuilds the shared frames
         for name in names:
             t0 = time.perf_counter()
             df = queries[name](spark, sf_dir)
@@ -108,6 +110,7 @@ def main() -> None:
     # — cheap by construction (they are sub-second) and spread across
     # time, so at least one sample usually lands in a quiet window.
     for _pass in range(3):
+        reset(spark)
         for name in names:
             if timings[name] >= 1.0:
                 continue

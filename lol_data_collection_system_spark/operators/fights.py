@@ -364,9 +364,9 @@ def subset_merge(
     # persist each side re-executes the FULL upstream — the banded
     # enrichment join included — doubling the pipeline's dominant stage
     # (history_row warm pass at sf0.1: 8.6 → 2.1 s once the branch is
-    # materialized). Storage is the enriched fight rows for the lifetime
-    # of the frame, LRU-evictable; callers that construct once per
-    # session (the memoized plan caches) keep exactly one copy.
+    # materialized). Storage is the enriched fight rows, LRU-evictable;
+    # a repeat call over the same input plans an identical frame, which
+    # Spark's cache holds only once.
     sparse = flagged.filter(F.col("_dense") == 0).select(
         *[f.name for f in MERGED_FIGHT_SCHEMA.fields]
     )

@@ -63,9 +63,8 @@ def exclusive_prefix_sum(
     3. per-partition totals (ONE driver action, ≤ #partitions rows) →
        running offsets, broadcast-joined back.
 
-    Runs one construction-time action (the totals collect) — callers
-    that build lazily-returned query frames must memoize per session
-    (the `_KILLS_CACHE` convention). ``checkpoint=False`` keeps the
+    Runs one construction-time action (the totals collect).
+    ``checkpoint=False`` keeps the
     pre-checkpoint lineage visible for plan introspection only."""
     clash = {"_pid", "_offset", out_col} & set(df.columns)
     if clash:

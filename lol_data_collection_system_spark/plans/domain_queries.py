@@ -24,7 +24,9 @@ import os
 
 from ..operators import fights as fight_ops
 from ..operators import roles as role_ops
+from ..session import shared
 from ..sources import load_table, materialize_summary
+from ..sources.cache import summary_path
 
 N_MATCHES = 25
 VICTIM_MOD = 150
@@ -33,32 +35,13 @@ ENRICH_MS = 15_000
 MERGE_MS = 30_000
 
 
-#: (SparkSession id, sf_dir) → kills frame handle. The fight pipeline
-#: consumes the kill events on BOTH sides of its interval self-join, so an
-#: unmaterialized frame pays the parquet scan + JSON extraction twice per
-#: action. The summary itself lives as a TTL'd parquet materialization
-#: (S15, `sources.materialize_summary` — the reference memoizes its match
-#: store the same way, `utils.py:862-900`, and TTL-caches monitor
-#: summaries, `monitor/views/ratelimit.py:52-55`); this dict only memoizes
-#: the per-session read handle (persisted: ~MBs, 5 scalar cols per event).
-_KILLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: Materialization root — override for tests / read-only checkouts.
-SUMMARY_CACHE_DIR = os.environ.get(
-    "SPARK_GRAFT_SUMMARY_CACHE", "/root/repo/.summary_cache"
-)
-
-
 def synthetic_kills(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map `events` onto the kill-event shape: (match_id, ts_ms, killer,
     victim, assists). Victim ≠ killer is forced so self-kills (which the
     reference's data model cannot produce) don't arise. Served from the
     S15 parquet materialization (rebuilt when events.parquet changes),
-    persisted per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _KILLS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    shared per session: the fight pipeline reads it on both sides of its
+    interval self-join, and every fight query reads it."""
 
     def build() -> DataFrame:
         events = load_table(spark, sf_dir, "events")
@@ -77,16 +60,18 @@ def synthetic_kills(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sf_name = os.path.basename(sf_dir.rstrip("/"))
-    kills = materialize_summary(
+    return shared(
         spark,
-        os.path.join(SUMMARY_CACHE_DIR, f"kills_{sf_name}.parquet"),
-        build,
-        sources=[os.path.join(sf_dir, "events.parquet")],
-        ttl_s=None,  # fingerprint-guarded; the source table has no decay
-        fingerprint="listing",  # O(file count) serve-path staleness
-    ).persist()
-    _KILLS_CACHE[key] = kills
-    return kills
+        ("kills", sf_dir),
+        lambda: materialize_summary(
+            spark,
+            summary_path(f"kills_{sf_name}.parquet"),
+            build,
+            sources=[os.path.join(sf_dir, "events.parquet")],
+            ttl_s=None,  # fingerprint-guarded; the source table has no decay
+            fingerprint="listing",  # O(file count) serve-path staleness
+        ),
+    )
 
 
 _KILLS_SQL = f"""

@@ -14,8 +14,11 @@ AQE coalescing from a higher initial number).
 from __future__ import annotations
 
 import os
+from collections import Counter
+from collections.abc import Callable, Hashable
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -63,3 +66,50 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# ---------------------------------------------------------------------------
+# Session-frame registry: the one owner of state reused across query calls
+# ---------------------------------------------------------------------------
+#: (applicationId, key) -> value built by `shared` for that session.
+_registry: dict[tuple[str, Hashable], Any] = {}
+#: per key: how often `shared` built the value / served it from the
+#: registry, summed over sessions (never reset — read them as deltas).
+builds: Counter = Counter()
+hits: Counter = Counter()
+
+
+def _frames(value: Any) -> list[DataFrame]:
+    items = value if isinstance(value, tuple) else (value,)
+    return [v for v in items if isinstance(v, DataFrame)]
+
+
+def shared(spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
+    """The value stored for ``key`` in this session; on a miss, call
+    ``build()``, persist every DataFrame in its result (a frame or a
+    tuple of frames), and store it until `reset`.
+
+    For inputs several queries consume within a session (the kill
+    events, the shingle frame): returning the same handles lets Spark's
+    cache serve every consumer from one materialization. Artifacts
+    reused across sessions belong in `sources.materialize_summary`."""
+    slot = (spark.sparkContext.applicationId, key)
+    if slot in _registry:
+        hits[key] += 1
+        return _registry[slot]
+    value = build()
+    for df in _frames(value):
+        if not df.is_cached:
+            df.persist()
+    _registry[slot] = value
+    builds[key] += 1
+    return value
+
+
+def reset(spark: SparkSession) -> None:
+    """Unpersist every frame the registry holds for this session and
+    forget them; the next `shared` call for any key rebuilds."""
+    app = spark.sparkContext.applicationId
+    for slot in [s for s in _registry if s[0] == app]:
+        for df in _frames(_registry.pop(slot)):
+            df.unpersist()

@@ -32,6 +32,19 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: Root of the materialized summaries: ``.summary_cache`` at the checkout
+#: root, or ``$SPARK_GRAFT_SUMMARY_CACHE`` (read-only checkouts,
+#: deployments, isolated runs).
+SUMMARY_CACHE_DIR = os.environ.get(
+    "SPARK_GRAFT_SUMMARY_CACHE",
+    str(Path(__file__).resolve().parents[2] / ".summary_cache"),
+)
+
+
+def summary_path(name: str) -> str:
+    """Path of the materialization ``name`` under `SUMMARY_CACHE_DIR`."""
+    return os.path.join(SUMMARY_CACHE_DIR, name)
+
 
 def content_fingerprint(path: str) -> dict:
     """{"size", "md5"} of one file — the checkout-portable fingerprint

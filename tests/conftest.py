@@ -57,7 +57,6 @@ _SLOW_TESTS = {
     "test_corpus_ingest_stream_self_grows_and_replays_exactly",
     "test_deletion_sink_live_labels_provider_tracks_late_ingest",
     "test_entry_queries_all_plannable",
-    "test_fight_merge_matches_python_reference",
     "test_funnel_matches_python_simulator",
     "test_fuzzy_linkage_matches_python_blocking",
     "test_hamming_components_match_bruteforce",

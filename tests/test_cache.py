@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+
 from lol_data_collection_system_spark.sources import materialize_summary
 
 
@@ -58,9 +60,11 @@ def test_materialize_summary_no_sources_ttl_only(spark, tmp_path):
 def test_synthetic_kills_materializes(spark, tmp_path, monkeypatch):
     """The fight pipeline's kills summary goes through the S15 cache."""
     from lol_data_collection_system_spark.plans import domain_queries as dq
+    from lol_data_collection_system_spark.session import reset
+    from lol_data_collection_system_spark.sources import cache
 
-    monkeypatch.setattr(dq, "SUMMARY_CACHE_DIR", str(tmp_path))
-    dq._KILLS_CACHE.clear()
+    monkeypatch.setattr(cache, "SUMMARY_CACHE_DIR", str(tmp_path))
+    reset(spark)
     try:
         sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
         kills = dq.synthetic_kills(spark, sf)
@@ -68,12 +72,69 @@ def test_synthetic_kills_materializes(spark, tmp_path, monkeypatch):
         assert n > 0
         sf_name = os.path.basename(sf.rstrip("/"))
         assert os.path.exists(str(tmp_path / f"kills_{sf_name}.parquet"))
-        # memoized handle: same object second time
+        # shared handle: same object second time
         assert dq.synthetic_kills(spark, sf) is kills
     finally:
-        for df in dq._KILLS_CACHE.values():
-            df.unpersist()
-        dq._KILLS_CACHE.clear()
+        reset(spark)
+
+
+def _persisted_rdds(spark) -> set[int]:
+    """Ids of the RDDs Spark holds as persisted. Compared as sets, not
+    counts: Spark drops RDDs that were garbage-collected from this map,
+    so an unrelated earlier RDD can vanish mid-test, but none appears
+    unless something persists it."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def test_shared_registry_lifetime(spark):
+    """One build per session, hits after that, and `reset` releases
+    every persisted frame the registry holds."""
+    import __spark_entry__ as entry_mod
+
+    from lol_data_collection_system_spark import session
+
+    sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+    key = ("kills", sf)
+    q = entry_mod.queries()["fight_enrichment"]
+    session.reset(spark)
+    before = _persisted_rdds(spark)
+    builds0, hits0 = session.builds[key], session.hits[key]
+
+    first = q(spark, sf).collect()
+    assert _persisted_rdds(spark) - before
+    assert sorted(q(spark, sf).collect()) == sorted(first)
+    assert session.builds[key] - builds0 == 1
+    assert session.hits[key] - hits0 >= 1
+
+    session.reset(spark)
+    assert not _persisted_rdds(spark) - before
+    app = spark.sparkContext.applicationId
+    assert not [slot for slot in session._registry if slot[0] == app]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "history_row",
+        "serving_funnel",
+        "serving_funnel_deleted",
+        "media_funnel",
+        "fertility_window_psi",
+    ],
+)
+def test_repeat_call_adds_no_persisted_rdds(spark, name):
+    """These queries used to memoize their final frame so that a repeat
+    call would not persist a second copy of their intermediates. They
+    now rebuild the plan on every call; a second call must still cache
+    nothing new."""
+    import __spark_entry__ as entry_mod
+
+    sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+    q = entry_mod.queries()[name]
+    first = q(spark, sf).collect()
+    after_first = _persisted_rdds(spark)
+    assert sorted(q(spark, sf).collect()) == sorted(first)
+    assert not _persisted_rdds(spark) - after_first
 
 
 def test_listing_fingerprint_is_mtime_free_and_o_file_count(tmp_path):

@@ -42,22 +42,18 @@ class _Abort(Exception):
 @pytest.mark.parametrize("qname", CORPUS_PREP_QUERIES)
 def test_corpus_prep_pair_derivation_is_capped(spark, qname, monkeypatch):
     import __spark_entry__ as entry_mod
-    from lol_data_collection_system_spark.plans import corpus_queries
+    from lol_data_collection_system_spark.session import reset
 
     q = entry_mod.queries().get(qname)
     if q is None:
         pytest.skip(f"{qname} not registered")
 
     # dedup_components / component_canonicals / leakage_safe_split
-    # memoize their converged CC labels per (applicationId, sf_dir); a
-    # warm memo returns the cached frame WITHOUT calling the spied pair
-    # derivation, so this test used to fail whenever another test had
-    # already run one of those queries (order-dependent triple). Patch
-    # the memo dict to empty for the duration of the test — monkeypatch
-    # restores the real (warm) cache afterwards, so other tests keep
-    # their speed. (_DOC_SHINGLES_CACHE is NOT cleared: it feeds the
-    # spied functions as an argument, never bypasses them.)
-    monkeypatch.setattr(corpus_queries, "_DEDUP_LABELS_CACHE", {})
+    # share their converged CC labels per session; a registry hit
+    # returns the labels WITHOUT calling the spied pair derivation, so
+    # this test would fail whenever another test had already run one of
+    # those queries. Empty the session's registry first.
+    reset(spark)
 
     calls: list[tuple[str, object]] = []
 

@@ -60,7 +60,7 @@ def main() -> None:
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args()
 
-    from lol_data_collection_system_spark.session import get_spark
+    from lol_data_collection_system_spark.session import get_spark, reset
 
     import __spark_entry__ as entry_mod
 
@@ -84,6 +84,8 @@ def main() -> None:
         build_times, exec_times, jobs_per_rep = [], [], []
         stage_mark = 0
         for i in range(args.repeats):
+            if i:
+                reset(spark)  # a later rep rebuilds the shared frames
             spark.sparkContext.setJobDescription(f"{name} rep{i}")
             if args.stages and i == args.repeats - 1:
                 tracker = spark.sparkContext.statusTracker()
