@@ -3484,7 +3484,7 @@ ORDER BY o_totalprice DESC, o_orderkey LIMIT 50 OFFSET 100
 """
 
 
-_QUERIES_UNORDERED: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pricing_summary": q_pricing_summary,
     "region_priority_pivot": q_region_priority_pivot,
     "customers_per_region": q_customers_per_region,
@@ -3572,92 +3572,6 @@ _QUERIES_UNORDERED: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     **selection_queries.QUERIES,
 }
 
-# ---------------------------------------------------------------------------
-# Registry ordering. The driver samples the FIRST 50 entries of `queries()`
-# in insertion order per round (observed: CORRECTNESS_r0{1,2,3}'s key sets
-# equal the first-50 prefix of the then-current registry). Every query is
-# equally gated by the local all-entries parity twin
-# (tests/test_oracle_parity.py); this list only controls which entries the
-# DRIVER re-verifies this round, so it front-loads the ones that have never
-# received a driver row: fight_merge (whose r1 row was `no_oracle` — the
-# fixture oracle has existed since r2 but the driver never re-sampled it),
-# then everything declared after mid-round-2, then the round-4 additions.
-# Entries NOT in the list keep their natural module order after the block.
-# ---------------------------------------------------------------------------
-_FRONT: tuple[str, ...] = (
-    # ---- round-11 driver sample window (VERDICT r10 #2). Front-load
-    # ---- the never-driver-sampled soft_dedup_weights (declared after
-    # ---- the r10 rotation) and the round-11 NEW declaration, then the
-    # ---- LEAST-recently-sampled cohort: the 26 remaining names whose
-    # ---- newest driver row is round 6, then the first 22 of the
-    # ---- round-7 cohort in name order. After this round no query's
-    # ---- newest driver row is older than round 7; the remaining 28
-    # ---- r7 names are round 12's padding cohort.
-    "soft_dedup_weights",
-    "semantic_near_dup_derived",
-    # ---- newest driver row = round 6 (all 26 remaining):
-    "gap_filled_value_series",
-    "history_row",
-    "incremental_hourly_rollup",
-    "join_cardinality_profile",
-    "large_volume_customers",
-    "lineitem_correlations",
-    "local_supplier_revenue",
-    "media_golden_assets",
-    "media_near_dedup_kept",
-    "media_near_dup",
-    "order_cube_totals",
-    "order_price_percentiles",
-    "order_rollup_counts",
-    "orders_profile",
-    "orders_scd2_enriched",
-    "price_equidepth_histogram",
-    "revenue_pareto_deciles",
-    "rfm_segments",
-    "rolling_active_users",
-    "rolling_p95_rate",
-    "seasonal_adjusted_anomalies",
-    "ship_latency_by_priority",
-    "top_session_paths",
-    "top_unshipped_orders",
-    "user_growth_accounting",
-    "user_key_skew",
-    # ---- newest driver row = round 7, first 22 by name:
-    "ab_test_welch",
-    "ann_recall_eval",
-    "benford_price_audit",
-    "capped_token_budget_plan",
-    "cdc_chunk_dups",
-    "classifier_calibration",
-    "classifier_cv_eval",
-    "cms_frequency_estimates",
-    "cohort_retention",
-    "conversion_latency_quartiles",
-    "cos_sim_histogram",
-    "cross_source_dup_matrix",
-    "curriculum_pack",
-    "customer_golden_records",
-    "embedding_drift_psi",
-    "embedding_kcenter",
-    "embedding_outlier_scores",
-    "embedding_pca_components",
-    "embedding_pca_scores",
-    "event_funnel",
-    "fuzzy_part_linkage",
-    "html_stripped_docs",
-)
-
-
-def _ordered(unordered: dict) -> dict:
-    missing = [k for k in _FRONT if k not in unordered]
-    if missing:  # explicit raise: asserts vanish under python -O
-        raise KeyError(f"_FRONT names not in registry: {missing}")
-    out = {k: unordered[k] for k in _FRONT if k in unordered}
-    out.update({k: v for k, v in unordered.items() if k not in out})
-    return out
-
-
-_QUERIES = _ordered(_QUERIES_UNORDERED)
 
 _ORACLES: dict[str, str] = {
     "pricing_summary": ORACLE_PRICING_SUMMARY,

@@ -19,7 +19,6 @@ Layout
                    sliding), set ops, top-k, fight extraction, role
                    inference, dedup (exact/MinHash/SimHash/Jaccard), ANN
                    similarity, text analysis, multimodal plumbing.
-- ``functions``  — scalar helpers (version prefix, tier ordinals, hashes).
 - ``plans``      — composed pipelines (history aggregation, feature flatten).
 - ``streaming``  — Structured Streaming layer (two-phase upsert, sliding
                    rate-limit windows, session windows).

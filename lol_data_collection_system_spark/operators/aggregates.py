@@ -39,20 +39,6 @@ def grouped_pivot_count(
     )
 
 
-def two_level_mean(
-    df: DataFrame, inner_keys: list[str], outer_keys: list[str], value: Column
-) -> DataFrame:
-    """Mean of per-inner-group means (avg of avgs), grouped by outer keys.
-
-    Reference: tier averaging — per-team ordinal mean, then match-level mean
-    of the two team means (``enumerations.py:26-32`` applied at
-    ``utils.py:89-94``). Two cascaded hash aggregates; Catalyst reuses the
-    first shuffle's partitioning when inner keys prefix outer keys.
-    """
-    inner = df.groupBy(*inner_keys).agg(F.avg(value).alias("_inner_mean"))
-    return inner.groupBy(*outer_keys).agg(F.avg("_inner_mean").alias("mean_of_means"))
-
-
 def conditional_tallies(df: DataFrame, group_cols: list[str], **conds: Column) -> DataFrame:
     """Several filtered counts in one pass: ``agg(count(when(cond, 1)) ...)``.
 
@@ -85,15 +71,6 @@ def argmax_per_group(
         .filter(F.col("_rn") == 1)
         .select(*group_cols, *keep)
     )
-
-
-def histogram(df: DataFrame, bucket_col: Column, alias: str = "bucket") -> DataFrame:
-    """Count per category bucket.
-
-    Reference: per-lane game counts ``lanes[lane] += 1``
-    (``utils.py:745-752,910-912``).
-    """
-    return df.groupBy(bucket_col.alias(alias)).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def key_skew_profile(

@@ -37,7 +37,7 @@ from __future__ import annotations
 from typing import Iterable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -302,7 +302,10 @@ def _merge_fight_events_udf(groups: pd.Series, horizon: pd.Series) -> pd.Series:
     merge. The sort key mirrors the old grouped-map's stable mergesort on
     (ts, kill-before-death); Python's sort is equally stable. `horizon`
     rides in as a literal column so one compiled UDF serves any
-    horizon_ms."""
+    horizon_ms.
+
+    The nested ``array<struct>`` Arrow input is tested on PySpark 4.1.2;
+    no lower version has been verified."""
     out = []
     for evs, hz in zip(groups, horizon):
         events = sorted(

@@ -28,27 +28,6 @@ def disjunctive_contains(col: Column, needles: list[str]) -> Column:
     return reduce(or_, (col.contains(n) for n in needles))
 
 
-def null_presence_flags(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Computed boolean *_missing projection.
-
-    Reference: ``CASE WHEN x IS NULL THEN TRUE ELSE FALSE END AS x_missing``
-    (``periodical_data_repair.py:47-63``) — the incompleteness report that
-    drives the repair pipeline.
-    """
-    flags = [F.col(c).isNull().alias(f"{c}_missing") for c in cols]
-    return df.select("*", *flags)
-
-
-def version_prefix(col: Column, parts: int = 2) -> Column:
-    """major.minor prefix of a semver-like string.
-
-    Reference: ``'.'.join(semver.split('.')[0:2])``
-    (``lolapi/app_lib/utils.py:16-23``); used to match game versions across
-    patch levels. ``substring_index`` is a codegen-friendly builtin.
-    """
-    return F.substring_index(col, ".", parts)
-
-
 def composite_key_lookup(df: DataFrame, **key_values) -> DataFrame:
     """Point lookup by composite key.
 
@@ -61,14 +40,6 @@ def composite_key_lookup(df: DataFrame, **key_values) -> DataFrame:
         lambda a, b: a & b, (F.col(k) == F.lit(v) for k, v in key_values.items())
     )
     return df.filter(pred)
-
-
-def membership_filter(df: DataFrame, value, *cols: str) -> DataFrame:
-    """`v in (c1, c2, ...)` membership across columns.
-
-    Reference: smite check ``11 in (spell1, spell2)`` (``utils.py:452``).
-    """
-    return df.filter(F.array_contains(F.array(*[F.col(c) for c in cols]), value))
 
 
 def recent_window_filter(df: DataFrame, ts_col: str, interval: str) -> DataFrame:

@@ -493,7 +493,6 @@ def label_propagation(
     dst_col: str = "id_b",
     node_col: str = "node",
     label_col: str = "label",
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
     """Semi-supervised label propagation over an undirected graph
     (Zhu & Ghahramani 2002's hard-label variant): seed nodes keep their
@@ -527,21 +526,19 @@ def label_propagation(
         F.col(node_col).alias("n"),
         F.col(label_col).cast("bigint").alias("seed_label"),
     )
-    if checkpoint_rounds:
-        # `sym` and `universe` feed EVERY round: without truncating
-        # their lineage each round's plan re-derives the upstream edge
-        # construction (for kNN edges, the bucketed self-join — the
-        # expensive part) once per round. Bench: 6.9 s → this is the
-        # difference between k and 2k+1 edge builds.
-        sym = sym.localCheckpoint(eager=False)
+    # `sym` and `universe` feed EVERY round: without truncating
+    # their lineage each round's plan re-derives the upstream edge
+    # construction (for kNN edges, the bucketed self-join — the
+    # expensive part) once per round. Bench: 6.9 s → this is the
+    # difference between k and 2k+1 edge builds.
+    sym = sym.localCheckpoint(eager=False)
     universe = (
         sym.select(F.col("u").alias("n"))
         .unionByName(seed.select("n"))
         .distinct()
         .join(seed, "n", "left")
+        .localCheckpoint(eager=False)
     )
-    if checkpoint_rounds:
-        universe = universe.localCheckpoint(eager=False)
     cur = universe.select(
         "n", "seed_label", F.col("seed_label").alias("cur_label")
     )
@@ -571,9 +568,8 @@ def label_propagation(
                     "cur_label"
                 ),
             )
+            .localCheckpoint(eager=False)
         )
-        if checkpoint_rounds:
-            cur = cur.localCheckpoint(eager=False)
     return cur.select(
         F.col("n").alias(node_col),
         F.col("cur_label").alias(label_col),
@@ -589,7 +585,6 @@ def random_walks(
     salt: str = "",
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
     """Deterministic 'random'-walk sampling over an undirected graph —
     the DeepWalk/node2vec corpus generator: one walk starts at every
@@ -617,9 +612,8 @@ def random_walks(
             edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v"))
         )
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if checkpoint_rounds:
-        sym = sym.localCheckpoint(eager=False)
     frontier = sym.select(F.col("u").alias("walk_id")).distinct().select(
         "walk_id", F.col("walk_id").alias("cur")
     )
@@ -644,16 +638,14 @@ def random_walks(
             16,
             10,
         ).cast("bigint")
-        nxt = (
+        frontier = (
             frontier.join(sym, frontier.cur == sym.u)
             .select("walk_id", "v", draw.alias("h"))
             .groupBy("walk_id")
             .agg(F.min(F.struct("h", "v")).alias("s"))
             .select("walk_id", F.col("s.v").alias("cur"))
+            .localCheckpoint(eager=False)
         )
-        if checkpoint_rounds:
-            nxt = nxt.localCheckpoint(eager=False)
-        frontier = nxt
         out = out.unionByName(
             frontier.select(
                 "walk_id",

@@ -273,24 +273,6 @@ def asof_join_banded(
     return out.drop("_side", "_bucket", *[f"_carry_{c}" for c in vcols])
 
 
-def set_equality_filter(
-    df: DataFrame, group_cols: list[str], item_col: str, required: list[str]
-) -> DataFrame:
-    """Groups whose distinct item set equals `required` exactly.
-
-    Reference: historical spells/runes set equality
-    (``utils.py:1074-1083``) — `{spell1, spell2} == set(...)`. Spark: sorted
-    collect_set equality; the sort makes it order-insensitive like the
-    Python set compare.
-    """
-    want = F.array_sort(F.array(*[F.lit(x) for x in sorted(required)]))
-    return (
-        df.groupBy(*group_cols)
-        .agg(F.array_sort(F.collect_set(item_col)).alias("item_set"))
-        .filter(F.col("item_set") == want)
-    )
-
-
 def salted_skew_join(
     big: DataFrame,
     small: DataFrame,

@@ -60,7 +60,7 @@ def rp_signs(
 
 def _dot_signs_sql(vec_sql: str, signs: list[float]) -> str:
     """Ordered-fold dot of a vector column against a literal sign row —
-    same summation order as `similarity.dot`, so DuckDB's
+    same summation order as `similarity.dot_sql`, so DuckDB's
     `list_dot_product` over the same literals reproduces it exactly.
     One parsed SQL string: the Column-API build of 16 zip_with/aggregate
     lambdas over 64 literals each cost ~1.1 s of py4j round-trips per
@@ -73,45 +73,19 @@ def _dot_signs_sql(vec_sql: str, signs: list[float]) -> str:
     )
 
 
-def project_sql(
+def project(
     vec_sql: str,
     in_dim: int = RP_IN_DIM,
     out_dim: int = RP_OUT_DIM,
     seed: str = RP_SEED,
-) -> str:
-    """`project` as one SQL string over a column SQL fragment."""
-    signs = rp_signs(in_dim, out_dim, seed)
-    return (
-        "array("
-        + ",".join(_dot_signs_sql(vec_sql, row) for row in signs)
-        + ")"
-    )
-
-
-def project(
-    vec: Column | str,
-    in_dim: int = RP_IN_DIM,
-    out_dim: int = RP_OUT_DIM,
-    seed: str = RP_SEED,
 ) -> Column:
-    """`vec` projected to `out_dim` doubles (unscaled — cosine is
-    scale-invariant, so the 1/√out_dim JL factor is dropped). Pass the
-    column as a SQL fragment string to get the single-parse build; a
-    Column works too (stringified via its SQL name when possible)."""
-    if isinstance(vec, str):
-        return F.expr(project_sql(vec, in_dim, out_dim, seed))
+    """The column named by the SQL fragment `vec_sql`, projected to
+    `out_dim` doubles (unscaled — cosine is scale-invariant, so the
+    1/√out_dim JL factor is dropped), built as one parsed SQL string."""
     signs = rp_signs(in_dim, out_dim, seed)
-    acc = F.lit(0.0)
-
-    def dot(row: list[float]) -> Column:
-        prod = F.zip_with(
-            vec,
-            F.array(*[F.lit(s) for s in row]),
-            lambda x, y: x.cast("double") * y,
-        )
-        return F.aggregate(prod, acc, lambda a, v: a + v)
-
-    return F.array(*[dot(row) for row in signs])
+    return F.expr(
+        "array(" + ",".join(_dot_signs_sql(vec_sql, row) for row in signs) + ")"
+    )
 
 
 def rp_topk(

@@ -2,13 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def novel_keys(fresh: DataFrame, known: DataFrame, on) -> DataFrame:
-    """X1 — difference via left-anti (``utils.py:28-29``)."""
-    return fresh.join(known, on, "left_anti")
 
 
 def sorted_set_signature(item_col: str) -> Column:
@@ -18,8 +13,3 @@ def sorted_set_signature(item_col: str) -> Column:
     equality/hashing is type-stable.
     """
     return F.array_join(F.array_sort(F.collect_set(item_col)), ",")
-
-
-def is_subset(a: Column, b: Column) -> Column:
-    """X4 — ``all(v in b for v in a)`` (``utils.py:596,608``)."""
-    return F.size(F.array_except(a, b)) == 0

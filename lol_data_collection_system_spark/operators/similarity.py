@@ -19,8 +19,6 @@ same join shape, better balance on anisotropic embeddings.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -75,11 +73,12 @@ def quote_ident(name: str) -> str:
 
 
 def dot_sql(a: str, b: str) -> str:
-    """`dot` as a SQL string over column/field SQL fragments — ONE
-    parsed expression instead of ~15 py4j round-trips per higher-order
-    lambda build (measured ~33 ms per HOF Column construction, ×26 per
-    IVF query = ~0.85 s of pure driver time; the parse is ~ms and the
-    resolved expression is identical, so results are bit-identical)."""
+    """Ordered-fold dot product in double precision (deterministic
+    left-to-right summation — reproducible across engines) as a SQL
+    string over column/field SQL fragments — ONE parsed expression
+    instead of ~15 py4j round-trips per higher-order lambda build
+    (measured ~33 ms per HOF Column construction, ×26 per IVF query =
+    ~0.85 s of pure driver time)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
         f"CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
@@ -87,7 +86,7 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def l2_sql(a: str) -> str:
-    """`l2_norm` as a SQL string (see `dot_sql`)."""
+    """L2 norm in double precision as a SQL string (see `dot_sql`)."""
     return (
         f"sqrt(aggregate({a}, 0.0D, (acc, v) -> acc + CAST(v AS DOUBLE) * "
         f"CAST(v AS DOUBLE)))"
@@ -95,8 +94,7 @@ def l2_sql(a: str) -> str:
 
 
 def cosine_sql(a: str, b: str) -> str:
-    """`cosine` as a SQL string (see `dot_sql`): same dot/(‖a‖·‖b‖)
-    op order, so doubles are bit-identical."""
+    """Cosine as a SQL string (see `dot_sql`): dot/(‖a‖·‖b‖)."""
     return f"({dot_sql(a, b)} / ({l2_sql(a)} * {l2_sql(b)}))"
 
 
@@ -121,30 +119,6 @@ def probe_cells_sql(cents_sql: str, qvec_sql: str, nprobe: int) -> str:
         f"'neg_sim', -round({cosine_sql(qvec_sql, 'c.cvec')}, 6), "
         f"'cid', c.cid))), 1, {int(nprobe)})"
     )
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Ordered-fold dot product in double precision (deterministic
-    left-to-right summation — reproducible across engines)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            a,
-            F.lit(0.0),
-            lambda acc, v: acc + v.cast("double") * v.cast("double"),
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def sign_lsh_bucket(vec: Column, bits: int = 8) -> Column:
@@ -409,7 +383,6 @@ def kmeans_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_vec: bool = False,
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
     """Deterministic Lloyd k-means (cosine flavor): `iters` rounds of
     assign-to-nearest-centroid → recompute centroids; returns the final
@@ -426,24 +399,14 @@ def kmeans_assign(
       reassembly. A centroid that attracts no members disappears
       (standard Lloyd behavior, identical in the oracle).
 
-    Seeds are the vectors with id < k (deterministic, engine-portable).
-    Per round the label frame is lazily checkpointed — `iters` is small
-    and fixed, but the assign→update cycle would otherwise double the
-    plan per round (same rationale as `graph.connected_components`).
+    Seeds are the vectors with id < k (deterministic, engine-portable);
+    the rounds run in `kmeans_fit`.
 
     ``keep_vec=True`` also returns the embedding column — the trained-IVF
     search path consumes (id, vec, cid) directly, skipping a corpus
-    self-join back onto the vectors. ``checkpoint_rounds=False`` keeps
-    the full lineage (plan tests inspect the join/agg shape through it).
+    self-join back onto the vectors.
     """
-    if not checkpoint_rounds:
-        assigned, _ = _lloyd_rounds(
-            emb, k, iters, id_col, vec_col, checkpoint_rounds
-        )
-    else:
-        assigned, _ = kmeans_fit(
-            emb, k, iters, id_col, vec_col, need_cents=False
-        )
+    assigned, _ = kmeans_fit(emb, k, iters, id_col, vec_col, need_cents=False)
     out = [F.col(id_col)]
     if keep_vec:
         out.append(F.col(vec_col))
@@ -475,15 +438,15 @@ def kmeans_fit(
     vec_col: str = "embedding",
     need_cents: bool = True,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """One Lloyd loop, both artifacts: ``(assignment, centroids)`` with
+    """The Lloyd loop, both artifacts: ``(assignment, centroids)`` with
     the centroid set carried through the rounds as a DRIVER-SIDE list of
     k×dim doubles (collected once per round, re-emitted as a literal
-    array — the standard Lloyd driver pattern). Values are bit-identical
-    to `_lloyd_rounds`: the per-round update is the same
-    posexplode → DECIMAL(38,10) sum → double mean aggregation, and a
+    array — the standard Lloyd driver pattern). The per-round update is
+    a posexplode → DECIMAL(38,10) sum → double mean aggregation, and a
     collected double re-literalized is the same IEEE-754 value, so every
-    cosine downstream sees identical inputs (seed centroids are
-    float32 → exact doubles; `dot`/`l2_norm` cast to double either way).
+    cosine downstream sees exactly the aggregated centroids (seed
+    centroids are float32 → exact doubles; `dot_sql`/`l2_sql` cast to
+    double either way).
 
     Why (r11, guide §1.2/§7.3): the lazy loop re-embedded each round's
     full plan inside the next round's crossJoin, so (a) driver-side
@@ -499,8 +462,9 @@ def kmeans_fit(
 
     ``need_cents=False`` skips the final centroid recompute job
     (assign-only callers need centroids only through round iters-1).
-    Falls back to `_lloyd_rounds` when no seed vectors exist (empty or
-    id-shifted frames keep the legacy degenerate behavior)."""
+    With no seed vectors (empty or id-shifted frames) every cid is NULL
+    and the centroids are the NULL group's per-dim mean (no rows for an
+    empty frame)."""
     spark = emb.sparkSession
     seed_rows = (
         emb.filter(F.col(id_col) < k)
@@ -510,29 +474,17 @@ def kmeans_fit(
         )
         .collect()
     )
-    if not seed_rows:
-        assigned, cents = _lloyd_rounds(emb, k, iters, id_col, vec_col, True)
-        if not need_cents:
-            return assigned, None
-        return assigned, cents.select(F.explode("cents").alias("_c")).select(
-            F.col("_c.cid").alias("cid"), F.col("_c.cvec").alias("cvec")
-        )
     cents: list[tuple[int, list[float]]] = sorted(
         (r["cid"], [float(x) for x in r["cvec"]]) for r in seed_rows
     )
 
-    def lit_cents_sql() -> str | None:
+    def best_cid() -> Column:
         # ONE parsed SQL expression instead of k×dim Column objects:
         # building literals per element costs a py4j round-trip each
         # (~1 s for 6×64 — measured), the string parse is ~ms. repr()
-        # is the shortest exactly-roundtripping decimal form and
-        # CAST(str AS DOUBLE) parses correctly rounded, so values
-        # stay bit-identical. None = non-finite values present, take
-        # the Column-literal fallback.
-        if not all(
-            math.isfinite(v) for _, vec in cents for v in vec
-        ):  # pragma: no cover - synthetic corpora are finite
-            return None
+        # is the shortest exactly-roundtripping decimal form (also for
+        # inf, nan and subnormals) and CAST(str AS DOUBLE) parses
+        # correctly rounded, so values stay bit-identical.
         structs = ",".join(
             "named_struct('cid', CAST(%d AS INT), 'cvec', array(%s))"
             % (
@@ -541,43 +493,9 @@ def kmeans_fit(
             )
             for cid, vec in cents
         )
-        return "array(%s)" % structs
-
-    def lit_cents(s: str | None) -> Column:
-        if s is None:  # pragma: no cover - synthetic corpora are finite
-            return F.array(
-                *[
-                    F.struct(
-                        F.lit(cid).cast("int").alias("cid"),
-                        F.array(
-                            *[F.lit(v).cast("double") for v in vec]
-                        ).alias("cvec"),
-                    )
-                    for cid, vec in cents
-                ]
-            )
-        return F.expr(s)
-
-    def best_cid(s: str | None) -> Column:
-        # the centroid SQL string is built ONCE per round by the caller
-        # and shared with lit_cents() — rebuilding the k×dim literal
-        # (and re-running its isfinite sweep) per consumer is the exact
-        # duplicated work the py4j-cost comments argue against (ADVICE
-        # r11).
-        if s is not None:
-            # whole argmax as ONE parsed string (guide §7.3): the HOF
-            # lambda builders cost ~33 ms of py4j each; resolved
-            # expression identical to the Column form below
-            return F.expr(best_centroid_sql(s, quote_ident(vec_col)))
-
-        def centroid_sim(c: Column) -> Column:  # pragma: no cover
-            return F.struct(
-                F.round(cosine(F.col(vec_col), c["cvec"]), 6).alias("sim"),
-                (-c["cid"]).alias("neg_cid"),
-                c["cid"].alias("cid"),
-            )
-
-        return F.array_max(F.transform(lit_cents(s), centroid_sim))["cid"]
+        return F.expr(
+            best_centroid_sql("array(%s)" % structs, quote_ident(vec_col))
+        )
 
     def update_rows(assigned: DataFrame) -> list[tuple[int, list[float]]]:
         ex = assigned.select(
@@ -605,84 +523,23 @@ def kmeans_fit(
         )
         return sorted((r["cid"], [float(x) for x in r["cvec"]]) for r in rows)
 
-    assigned = None
-    for rnd in range(iters):
+    # no seed row: nothing to assign to, every cid stays NULL and the
+    # centroids are the NULL group's per-dim mean
+    assigned = emb.select(
+        F.col(id_col), F.col(vec_col), F.lit(None).cast("int").alias("cid")
+    )
+    for rnd in range(iters if cents else 0):
+        if rnd:
+            cents = update_rows(assigned)
         assigned = emb.select(
-            F.col(id_col), F.col(vec_col), best_cid(lit_cents_sql()).alias("cid")
+            F.col(id_col), F.col(vec_col), best_cid().alias("cid")
         )
-        if rnd < iters - 1 or need_cents:
-            new_cents = update_rows(assigned)
-        if rnd < iters - 1:
-            cents = new_cents
     if not need_cents:
         return assigned, None
     cents_df = spark.createDataFrame(
-        [(cid, vec) for cid, vec in new_cents],
-        schema="cid int, cvec array<double>",
+        update_rows(assigned), schema="cid int, cvec array<double>"
     )
     return assigned, cents_df
-
-
-def _lloyd_rounds(
-    emb: DataFrame,
-    k: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    checkpoint_rounds: bool,
-):
-    """Shared Lloyd loop: returns (final assignment frame with vectors,
-    1-row centroid frame recomputed from that assignment)."""
-    cents = emb.filter(F.col(id_col) < k).agg(
-        F.collect_list(
-            F.struct(
-                F.col(id_col).cast("int").alias("cid"),
-                F.col(vec_col).alias("cvec"),
-            )
-        ).alias("cents")
-    )
-
-    def best_cid() -> Column:
-        def centroid_sim(c: Column) -> Column:
-            return F.struct(
-                F.round(cosine(F.col(vec_col), c["cvec"]), 6).alias("sim"),
-                (-c["cid"]).alias("neg_cid"),
-                c["cid"].alias("cid"),
-            )
-
-        return F.array_max(F.transform(F.col("cents"), centroid_sim))["cid"]
-
-    assigned = None
-    for _ in range(iters):
-        assigned = emb.crossJoin(F.broadcast(cents)).select(
-            F.col(id_col), F.col(vec_col), best_cid().alias("cid")
-        )
-        if checkpoint_rounds:
-            assigned = assigned.localCheckpoint(eager=False)
-        ex = assigned.select(
-            "cid", F.posexplode(F.col(vec_col)).alias("dim", "val")
-        )
-        per_dim = ex.groupBy("cid", "dim").agg(
-            F.sum(F.col("val").cast("double").cast("decimal(38,10)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        new_cents = per_dim.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("dim"),
-                            (F.col("s").cast("double") / F.col("n")).alias("m"),
-                        )
-                    )
-                ),
-                lambda st: st["m"],
-            ).alias("cvec")
-        )
-        cents = new_cents.agg(
-            F.collect_list(F.struct("cid", "cvec")).alias("cents")
-        )
-    return assigned, cents
 
 
 def quantize_embeddings(
@@ -1876,7 +1733,6 @@ def kcenter_select(
     k: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
     """Greedy k-center (farthest-first traversal, Gonzalez 1985) in cosine
     space — the coreset-selection primitive behind diversity-maximizing
@@ -1943,9 +1799,7 @@ def kcenter_select(
                 )
             )
             .alias("best_sim"),
-        )
-        if checkpoint_rounds:
-            state = state.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         # Farthest point = least similar to the selected set; 1-row agg.
         pick = state.select(
             F.min(F.struct("best_sim", "id", "vec")).alias("s")

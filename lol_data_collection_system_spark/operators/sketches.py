@@ -154,49 +154,6 @@ def frequent_terms(
     )
 
 
-def cms_cells(
-    terms: DataFrame,
-    term_col: str = "term",
-    width: int = 256,
-    depth: int = 4,
-    salt: str = "cms-v1",
-) -> DataFrame:
-    """Count-Min sketch as a DataFrame aggregate: (row, bucket, cnt),
-    depth·width cells TOTAL regardless of corpus size (the whole point —
-    the shuffle after the map-side combine carries ≤ partitions·d·w
-    cells). Hashing is the repo's engine-portable md5 bucket, so unlike
-    HLL/GK the ENTIRE sketch is reproducible in DuckDB and the estimate
-    query can be hash-gated end-to-end (`cms_frequency_estimates`).
-    """
-    from .sampling import sample_bucket
-
-    # Aggregate BEFORE hashing (r11, guide §2.3): a cell count is the
-    # sum of its colliding terms' frequencies, so one count-by-term
-    # shuffle first makes the md5 bucket hash run once per DISTINCT
-    # (term, row) instead of once per OCCURRENCE — identical cnt values
-    # (exact long sums either way), hash cost ∝ vocabulary, not corpus.
-    freqs = terms.groupBy(F.col(term_col).alias("_t")).agg(
-        F.count(F.lit(1)).alias("_f")
-    )
-    rows = freqs.select(
-        "_t",
-        "_f",
-        F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("_r"),
-    )
-    bucket = (
-        sample_bucket(
-            F.concat(F.col("_r").cast("string"), F.lit(":"), F.col("_t")),
-            salt,
-        )
-        % width
-    )
-    return (
-        rows.select("_r", bucket.alias("_b"), "_f")
-        .groupBy("_r", "_b")
-        .agg(F.sum("_f").alias("cnt"))
-    )
-
-
 def cms_estimates(
     terms: DataFrame,
     term_col: str = "term",

@@ -106,32 +106,6 @@ def bpe_ish_piece_count(text: Column) -> Column:
     return F.size(pieces)
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality signals: token count, distinct-token ratio
-    (repetition detector), mean token length, stopword ratio.
-
-    The classic pre-training quality filters (length / repetition /
-    stopword-density) expressed as one projection.
-    """
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    stop_hits = F.size(
-        F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS["en"]))
-    )
-    return df.select(
-        "*",
-        n.alias("n_tokens"),
-        (F.size(F.array_distinct(toks)).cast("double") / n).alias("distinct_ratio"),
-        (
-            F.aggregate(
-                toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
-            ).cast("double")
-            / n
-        ).alias("mean_token_len"),
-        (stop_hits.cast("double") / n).alias("stopword_ratio"),
-    )
-
-
 def language_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document stopword-hit counts for each candidate language plus the
     argmax prediction (`lang_pred`). Ties break in LANG_STOPWORDS order.
@@ -290,37 +264,21 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalized_text(text))
 
 
-def winnow_signature(text: Column, gram: int = 4, keep: int = 3) -> Column:
-    """Rolling-hash-style signature: hash every `gram`-token window
-    (concat → md5, the distributed stand-in for a rolling hash) and keep
-    the `keep` smallest hashes, comma-joined.
-
-    A winnowing-lite fingerprint: near-identical documents share most
-    minimal window hashes even when prefixes shift. All array expressions —
-    no explode needed for the per-doc signature.
-    """
-    toks = tokens(normalized_text(text))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - gram, F.lit(0)))
-    windows = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, gram)))
-    )
-    return F.array_join(F.slice(F.array_sort(windows), 1, keep), ",")
-
-
 def winnow_signatures_df(
     df, id_col: str, text_col: str, gram: int = 4, keep: int = 3
 ):
-    """DataFrame-level winnowing: explode tokens → lead() window strings →
-    one codegen'd md5 per window → per-doc smallest-`keep` join.
+    """Rolling-hash-style winnowing signature per doc: hash every
+    `gram`-token window (concat → md5, the distributed stand-in for a
+    rolling hash) and keep the `keep` smallest hashes, comma-joined —
+    near-identical documents share most minimal window hashes even when
+    prefixes shift.
 
-    Semantically identical to `winnow_signature` but ~an order of
-    magnitude faster at scale: the per-doc array formulation evaluates
-    md5 inside interpreted higher-order functions and re-slices the token
-    array per window; here hashing runs in a codegen'd projection after a
-    single (doc, position) shuffle, and the aggregation combines
-    map-side. Window rows past position n−gram are dropped to mirror the
-    array version's clamped slice (short docs keep their single partial
+    Plan: explode tokens → lead() window strings → one codegen'd md5 per
+    window → per-doc smallest-`keep` join. Hashing runs in a codegen'd
+    projection after a single (doc, position) shuffle, and the
+    aggregation combines map-side (~an order of magnitude faster at scale
+    than md5 inside per-doc higher-order functions). Window rows past
+    position n−gram are dropped (short docs keep their single partial
     window).
     """
     from pyspark.sql import Window

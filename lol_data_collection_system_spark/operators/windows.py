@@ -13,24 +13,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def trailing_mean(
-    df: DataFrame,
-    partition: list[str],
-    order: list[Column],
-    value: Column,
-    k: int,
-    alias: str,
-) -> DataFrame:
-    """Mean of the current + previous k-1 rows per partition.
-
-    Reference: delta2/3/4 — means of the last 2/3/4 games' k/d/a per
-    (player, lane_role) (``find_recurrent_delta_across_n_games.py:171-195``).
-    Frame: ``rowsBetween(-(k-1), 0)``.
-    """
-    w = Window.partitionBy(*partition).orderBy(*order).rowsBetween(-(k - 1), 0)
-    return df.withColumn(alias, F.avg(value).over(w))
-
-
 def cumulative_sum(
     df: DataFrame,
     partition: list[str],

@@ -2112,7 +2112,7 @@ def _coarse_cte_parts_with_final(
 ) -> list[str]:
     """`_kmeans_cte_parts` plus the FINAL centroid recompute
     (``ex_{iters}``/``cent_{iters}``) that the trained-IVF oracle never
-    needs but residual quantization does: Spark's `_lloyd_rounds`
+    needs but residual quantization does: Spark's `kmeans_fit`
     returns the centroids recomputed from the final assignment, and the
     residual of every vector is taken against exactly those."""
     parts = _kmeans_cte_parts(k, iters, dim, src)

@@ -45,11 +45,6 @@ def write_ratelimit_log(df: DataFrame, path: str, mode: str = "append") -> None:
     df.write.mode(mode).csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S10/S11: JSON result sink (one document per row)."""
-    df.write.mode(mode).json(path)
-
-
 def major_minor(semver_col) -> "F.Column":
     """'8.11.1.123' → '8.11' — the version-prefix normalization every
     reference comparison uses (`utils.py:16-23`, P9)."""

@@ -27,7 +27,6 @@ Spark-first redesign:
 
 from __future__ import annotations
 
-import json
 import time
 from collections import deque
 from collections.abc import Callable, Iterator
@@ -193,13 +192,6 @@ def parallel_fetch(
             yield pd.DataFrame(out)
 
     return urls_df.mapInPandas(run, FETCH_SCHEMA)
-
-
-def decode_fetched(df: DataFrame, schema: T.StructType, alias: str = "doc") -> DataFrame:
-    """fetched bodies → typed docs (`from_json`), the S6 step."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn(alias, F.from_json("body", schema))
 
 
 def hydrate_missing(

@@ -34,9 +34,7 @@ __all__ = [
     "k_anon_release_sink",
     "k_anon_release_stream",
     "l_div_release_sink",
-    "l_div_release_stream",
     "t_close_release_sink",
-    "t_close_release_stream",
     "read_released",
 ]
 
@@ -392,29 +390,6 @@ def l_div_release_sink(
     return sink
 
 
-def l_div_release_stream(
-    rows_stream: DataFrame,
-    store_root: str,
-    checkpoint_dir: str,
-    quasi_cols: list[str],
-    l: int,
-    sensitive_col: str,
-    id_col: str = "row_id",
-):
-    """Wire a row stream through the l-diversity release gate; read the
-    published side with `read_released`."""
-    return (
-        rows_stream.writeStream.foreachBatch(
-            l_div_release_sink(
-                store_root, quasi_cols, l, sensitive_col, id_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def t_close_release_sink(
     store_root: str,
     quasi_cols: list[str],
@@ -629,27 +604,3 @@ def t_close_release_sink(
         )
 
     return sink
-
-
-def t_close_release_stream(
-    rows_stream: DataFrame,
-    store_root: str,
-    checkpoint_dir: str,
-    quasi_cols: list[str],
-    t: float,
-    sensitive_col: str,
-    id_col: str = "row_id",
-):
-    """Wire a row stream through the t-closeness release gate; read the
-    published side with `read_released` (see `t_close_release_sink`
-    for the non-monotonicity contract)."""
-    return (
-        rows_stream.writeStream.foreachBatch(
-            t_close_release_sink(
-                store_root, quasi_cols, t, sensitive_col, id_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

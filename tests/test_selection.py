@@ -91,14 +91,10 @@ def test_rp_projection_shape_and_determinism(spark):
          for i in range(30)],
         ["vec_id", "embedding"],
     )
-    proj = emb.select(
-        proj_ops.project(F.col("embedding")).alias("p")
-    ).collect()
+    proj = emb.select(proj_ops.project("embedding").alias("p")).collect()
     assert all(len(r.p) == proj_ops.RP_OUT_DIM for r in proj)
     # Same seed twice → identical projections.
-    again = emb.select(
-        proj_ops.project(F.col("embedding")).alias("p")
-    ).collect()
+    again = emb.select(proj_ops.project("embedding").alias("p")).collect()
     assert [r.p for r in proj] == [r.p for r in again]
 
 

@@ -391,3 +391,74 @@ def test_cms_forced_collisions_still_bounded(spark):
     for r in cms_estimates(terms, width=8, depth=2).collect():
         assert r["cms_est"] >= r["exact_freq"]
         assert r["cms_est"] <= r["exact_freq"] + total
+
+
+# ---------------------------------------------------------------------------
+# k-means on degenerate inputs: no seed ids, no rows, non-finite seeds
+# ---------------------------------------------------------------------------
+def _vectors(spark, rows):
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+
+
+def test_kmeans_without_seed_ids_assigns_nothing(spark):
+    """No row has id < k, so no centroid is seeded: every cid is NULL
+    and the centroid frame is the single NULL group with its per-dim
+    mean."""
+    from lol_data_collection_system_spark.operators.similarity import (
+        kmeans_assign,
+        kmeans_centroids,
+    )
+
+    df = _vectors(
+        spark, [(10, [1.0, 2.0]), (11, [3.0, -2.0]), (12, [2.0, 0.5])]
+    )
+    got = sorted((r.vec_id, r.cid) for r in kmeans_assign(df, k=3).collect())
+    assert got == [(10, None), (11, None), (12, None)]
+    cents = kmeans_centroids(df, k=3)
+    assert cents.dtypes == [("cid", "int"), ("cvec", "array<double>")]
+    assert [(r.cid, list(r.cvec)) for r in cents.collect()] == [
+        (None, [2.0, 0.5 / 3])
+    ]
+
+
+def test_kmeans_empty_input_gives_no_rows(spark):
+    from lol_data_collection_system_spark.operators.similarity import (
+        kmeans_assign,
+        kmeans_centroids,
+    )
+
+    df = _vectors(spark, [])
+    assert kmeans_assign(df, k=3).collect() == []
+    assert kmeans_centroids(df, k=3).collect() == []
+
+
+def test_kmeans_non_finite_seeds_assign_exactly(spark):
+    """Seed vectors holding inf, nan and a subnormal travel into the
+    centroid literal unchanged. A non-finite seed scores NaN against
+    every vector and Spark orders NaN above every number, so the
+    smallest non-finite cid (2) takes every finite row; a non-finite
+    row scores NaN everywhere and the cid tie-break sends it to 0."""
+    from lol_data_collection_system_spark.operators.similarity import (
+        kmeans_assign,
+    )
+
+    inf, nan = float("inf"), float("nan")
+    df = _vectors(
+        spark,
+        [
+            (0, [1.0, 0.0]),
+            (1, [1e-320, 1.0]),
+            (2, [inf, 1.0]),
+            (3, [nan, 0.0]),
+            (4, [0.0, 1.0]),
+            (5, [-1.0, 2.0]),
+            (6, [inf, -inf]),
+            (7, [2.0, 2.0]),
+        ],
+    )
+    got = sorted(
+        (r.vec_id, r.cid) for r in kmeans_assign(df, k=4, iters=1).collect()
+    )
+    assert got == [
+        (0, 2), (1, 2), (2, 0), (3, 0), (4, 2), (5, 2), (6, 0), (7, 2)
+    ]
