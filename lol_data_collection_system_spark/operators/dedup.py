@@ -92,7 +92,7 @@ def shingles(
     )
     # the window projection as parsed strings (one py4j round-trip per
     # expression instead of per lead/count/greatest node — see
-    # `minhash_signatures_from_shingles`); resolved plan identical:
+    # `minhash_signatures`); resolved plan identical:
     # same lead() defaults, same unbounded count frame, same greatest
     ow = f"OVER (PARTITION BY {quote_ident(id_col)} ORDER BY pos)"
     parts = ", ".join(
@@ -142,16 +142,25 @@ def cap_shingles(
     )
 
 
+def _capped(sh: DataFrame, id_col: str, max_doc_freq: int | None) -> DataFrame:
+    """`cap_shingles`, persisted when it derives a new frame: the capped
+    frame feeds several consumers (set sizes, both join sides), and
+    Spark recomputes an uncached subtree once per consumer. An uncapped
+    call returns the caller's frame as passed — the caller owns its
+    caching (the session-shared corpus frame is already persisted)."""
+    if max_doc_freq is None:
+        return sh
+    return cap_shingles(sh, id_col, max_doc_freq).persist()
+
+
 def ngram_jaccard_pairs(
-    df: DataFrame,
+    sh: DataFrame,
     id_col: str,
-    text_col: str,
-    k: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-duplicate pairs by exact Jaccard over word k-gram shingle sets.
+    """Near-duplicate pairs by exact Jaccard over the (id, shingle) sets
+    of `sh` (a `shingles` frame).
 
     Candidate generation = self-join on shingle (only docs sharing ≥1
     shingle are ever compared); |A∩B| = shared-shingle count, |A∪B| =
@@ -165,28 +174,7 @@ def ngram_jaccard_pairs(
     space, the standard stop-shingle removal. None = exact/off (the
     oracle-checked default).
     """
-    # Lazily checkpointed: the (capped) shingle frame is consumed by the
-    # size aggregate AND both self-join sides, and Spark recomputes an
-    # uncached subtree (scan + explode + two windows) once per consumer.
-    # ``shingles_df`` (a prebuilt (id, shingle) frame, e.g. a session-
-    # shared persisted derivation) skips the tokenize+window pass — the
-    # cap and everything downstream are bit-identical either way.
-    sh = cap_shingles(
-        shingles(df, id_col, text_col, k)
-        if shingles_df is None
-        else shingles_df,
-        id_col,
-        max_doc_freq,
-    ).persist()
-    return jaccard_pairs_from_shingles(sh, id_col, threshold)
-
-
-def jaccard_pairs_from_shingles(
-    sh: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Jaccard pairs from a prebuilt (id, shingle) frame (see
-    `minhash_signatures_from_shingles` for why callers share it).
-    `sh` should already be checkpointed/capped by the caller."""
+    sh = _capped(sh, id_col, max_doc_freq)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -225,20 +213,19 @@ def minhash_perm(i: int):
 
 
 def minhash_signatures(
-    df: DataFrame,
+    sh: DataFrame,
     id_col: str,
-    text_col: str,
-    k: int = 3,
     n_hashes: int = 16,
     max_doc_freq: int | None = None,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
-    """n_hashes-wide MinHash signature per document.
+    """n_hashes-wide MinHash signature per document of `sh` (a
+    `shingles` frame — callers that also need the shingles themselves,
+    e.g. the Jaccard truth side, build it once and share it).
 
-    Plan shape (the scale path): explode shingles → ONE md5 per shingle
-    (60-bit prefix as bigint, reduced mod p) → n cheap integer permutations
-    (a_i·h + b_i mod p) → groupBy(doc) min per permutation. Partial
-    aggregation shrinks the shuffle to n longs per doc per partition.
+    Plan shape (the scale path): ONE md5 per shingle (60-bit prefix as
+    bigint, reduced mod p) → n cheap integer permutations (a_i·h + b_i
+    mod p) → groupBy(doc) min per permutation. Partial aggregation
+    shrinks the shuffle to n longs per doc per partition.
 
     `max_doc_freq` caps the shingle document frequency (see
     `cap_shingles`) — signatures are then MinHash over the capped shingle
@@ -250,22 +237,7 @@ def minhash_signatures(
     nested array exprs — n md5s per shingle plus shingle-array recompute
     per signature column; 60× slower at sf0.1.)
     """
-    sh = cap_shingles(
-        shingles(df, id_col, text_col, k)
-        if shingles_df is None
-        else shingles_df,
-        id_col,
-        max_doc_freq,
-    )
-    return minhash_signatures_from_shingles(sh, id_col, n_hashes)
-
-
-def minhash_signatures_from_shingles(
-    sh: DataFrame, id_col: str, n_hashes: int = 16
-) -> DataFrame:
-    """Signatures from a prebuilt (id, shingle) frame — lets callers that
-    also need the shingles themselves (Jaccard truth side, calibration)
-    build the expensive shingle assembly ONCE and share it."""
+    sh = cap_shingles(sh, id_col, max_doc_freq)
     # one parsed string per permutation instead of ~8 py4j round-trips
     # each (measured ~0.45 s of pure construction per call at n=16 —
     # r11, guide §7.3); the resolved arithmetic is identical: the md5
@@ -286,18 +258,16 @@ def minhash_signatures_from_shingles(
 
 
 def lsh_candidate_pairs(
-    df: DataFrame,
+    sh: DataFrame,
     id_col: str,
-    text_col: str,
-    k: int = 3,
     n_hashes: int = 16,
     band_size: int = 4,
     max_doc_freq: int | None = None,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs: band the signature (n_hashes/band_size
-    bands of band_size rows), hash each band, self-join on (band_idx,
-    band_hash). Documents agreeing on any band become a candidate pair.
+    """MinHash-LSH candidate pairs over `sh` (a `shingles` frame): band
+    the signature (n_hashes/band_size bands of band_size rows), hash
+    each band, self-join on (band_idx, band_hash). Documents agreeing on
+    any band become a candidate pair.
 
     The join key is the band hash → the shuffle distributes by bucket;
     bucket sizes are small for non-pathological corpora, keeping the pair
@@ -305,10 +275,7 @@ def lsh_candidate_pairs(
     the shingle-side skew feeding the signatures. Returns distinct
     (id_a < id_b).
     """
-    sig = minhash_signatures(
-        df, id_col, text_col, k, n_hashes, max_doc_freq,
-        shingles_df=shingles_df,
-    )
+    sig = minhash_signatures(sh, id_col, n_hashes, max_doc_freq)
     return _candidate_pairs_from_signatures(sig, id_col, n_hashes, band_size)
 
 
@@ -623,42 +590,28 @@ def benchmark_contamination(
 def token_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The (id, md5-of-distinct-token) frame BOTH SimHash widths hash
     from — one tokenize + one md5 per (doc, distinct token). Factored
-    out (VERDICT r9 #4) so a suite can persist it ONCE and feed every
-    SimHash consumer via their ``hashed_df`` pass-through, the same
-    shared-scan lever the MinHash family gets from `shingles`'
-    ``shingles_df``: the 16-bit and 128-bit signatures read different
-    substrings of the SAME md5, so the frame serves both bit-identically."""
+    out (VERDICT r9 #4) so a suite can persist it ONCE and feed it to
+    every SimHash consumer, the same shared-scan lever the MinHash family
+    gets from `shingles`: the 16-bit and 128-bit signatures read
+    different substrings of the SAME md5, so the frame serves both
+    bit-identically."""
     toks = F.array_distinct(tokens(normalized_text(F.col(text_col))))
     return df.select(F.col(id_col), F.explode(toks).alias("t")).select(
         F.col(id_col), F.md5(F.col("t")).alias("m")
     )
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 16,
-    hashed_df: DataFrame | None = None,
-) -> DataFrame:
-    """`bits`-bit SimHash per document from token hashes.
+def simhash(hashed: DataFrame, id_col: str, bits: int = 16) -> DataFrame:
+    """`bits`-bit SimHash per document of `hashed` (a `token_md5` frame).
 
     Token hash = first 4 hex chars of md5 (16 bits, engine-portable via
     base conversion). Bit i of the signature is the sign of
     Σ_tokens (2·bit_i(h) − 1). Distinct tokens are used (weight 1), making
     the oracle form a simple unnest+group.
 
-    Plan shape: explode distinct tokens → one md5 per token → `bits`
-    integer partial sums per doc (map-side combine) → sign + pack. (The
-    per-doc array-fold formulation recomputed the md5 once per bit.)
-    ``hashed_df`` (a `token_md5` frame, typically persisted and shared
-    with the 128-bit consumers) replaces the tokenize+md5 pass;
-    bit-identical by construction."""
-    hashed = (
-        hashed_df
-        if hashed_df is not None
-        else token_md5(df, id_col, text_col)
-    )
+    Plan shape: `bits` integer partial sums per doc over the token md5s
+    (map-side combine) → sign + pack. (The per-doc array-fold
+    formulation recomputed the md5 once per bit.)"""
     h = F.conv(F.substring(F.col("m"), 1, 4), 16, 10).cast("bigint")
     contribs = hashed.select(
         F.col(id_col),
@@ -677,19 +630,16 @@ def simhash(
 
 
 def simhash128(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    hashed_df: DataFrame | None = None,
-    lane_bits: int = 16,
+    md5_frame: DataFrame, id_col: str, lane_bits: int = 16
 ) -> DataFrame:
-    """128-bit SimHash as TWO 64-bit word columns ``(simhash_w0,
-    simhash_w1)`` — the wide-fingerprint geometry that keeps Hamming
-    banding out of the quadratic regime (`hamming_candidate_edges`'
-    SCALE CEILING note: 8 bands over 64 bits = 256 buckets/band and the
-    candidate join goes quadratic past ~64k distinct hashes; the same 8
-    bands over 128 bits are 16-bit slices with 65536 buckets/band —
-    the `dhash128` remedy applied to TEXT fingerprints).
+    """128-bit SimHash of each document of `md5_frame` (a `token_md5`
+    frame) as TWO 64-bit word columns ``(simhash_w0, simhash_w1)`` —
+    the wide-fingerprint geometry that keeps Hamming banding out of the
+    quadratic regime (`hamming_candidate_edges`' SCALE CEILING note: 8
+    bands over 64 bits = 256 buckets/band and the candidate join goes
+    quadratic past ~64k distinct hashes; the same 8 bands over 128 bits
+    are 16-bit slices with 65536 buckets/band — the `dhash128` remedy
+    applied to TEXT fingerprints).
 
     Same contract as `simhash`: distinct tokens of the normalized text,
     weight 1; bit i of word w = sign of Σ_tokens (2·bit(h) − 1), where
@@ -725,15 +675,10 @@ def simhash128(
     if 64 % lane_bits or not 8 <= lane_bits <= 32:
         raise ValueError(f"lane_bits must be 8/16/32, got {lane_bits}")
     lanes_per_long = 64 // lane_bits
-    md5_frame = (
-        hashed_df
-        if hashed_df is not None
-        else token_md5(df, id_col, text_col)
-    )
     # both projections as parsed strings (one py4j round-trip per
     # expression instead of per shift/mask/multiply node — measured
     # ~0.7 s of pure construction per call; see
-    # `minhash_signatures_from_shingles`); resolved arithmetic is
+    # `minhash_signatures`); resolved arithmetic is
     # identical: same shifts, masks, literal widths and promotions
     hashed = md5_frame.selectExpr(
         quote_ident(id_col),
@@ -822,15 +767,14 @@ def simhash128(
 
 
 def simhash_components(
-    df: DataFrame,
+    hashed: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: int = 3,
     n_bands: int = 8,
     pair_budget: int | str | None = "auto",
-    hashed_df: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, component_id) SimHash near-duplicate grouping over text —
+    """(id, component_id) SimHash near-duplicate grouping over the
+    documents of `hashed` (a `token_md5` frame) —
     Charikar/Manku-style web near-dedup: documents whose 128-bit
     SimHash fingerprints are within `threshold` Hamming bits are
     connected; component id = the minimum member id.
@@ -847,14 +791,8 @@ def simhash_components(
     """
     # the signature frame feeds BOTH the rep groupBy and the final
     # member rejoin inside hamming_components — checkpoint it so the
-    # token explode + lane aggregate runs once, not per consumer.
-    # ``hashed_df`` (a shared persisted `token_md5` frame) additionally
-    # drops the tokenize+md5 pass this query otherwise pays alone
-    # (VERDICT r9 #4: the suite's most expensive query re-tokenized
-    # what the MinHash family shares)
-    sigs = simhash128(
-        df, id_col, text_col, hashed_df=hashed_df
-    ).persist()
+    # lane aggregate runs once, not per consumer
+    sigs = simhash128(hashed, id_col).persist()
     return hamming_components(
         sigs,
         id_col,
@@ -1240,18 +1178,13 @@ def corpus_diff(
 
 
 def minhash_jaccard_calibration(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    n_hashes: int = 16,
-    band_size: int = 4,
-    shingles_df: DataFrame | None = None,
+    sh: DataFrame, id_col: str, n_hashes: int = 16, band_size: int = 4
 ) -> DataFrame:
-    """Sketch-quality audit: for every LSH candidate pair, the MinHash
-    ESTIMATE of Jaccard (fraction of agreeing signature components)
-    against the TRUE shingle Jaccard, with the absolute error — the
-    calibration table that justifies (or indicts) a chosen
+    """Sketch-quality audit over `sh` (a `shingles` frame, used as
+    passed — the caller owns its caching): for every LSH candidate pair,
+    the MinHash ESTIMATE of Jaccard (fraction of agreeing signature
+    components) against the TRUE shingle Jaccard, with the absolute
+    error — the calibration table that justifies (or indicts) a chosen
     (n_hashes, band_size) geometry before trusting it at corpus scale.
 
     Returns (id_a, id_b, est_jaccard, true_jaccard, abs_err).
@@ -1265,19 +1198,15 @@ def minhash_jaccard_calibration(
     side restricts the shingle join to candidate pairs FIRST (join
     pairs→shingles on id_a, then equi-join on (id_b, shingle)), so the
     exact computation is pair-bounded, never the corpus-wide shingle
-    self-join. The signature and shingle frames are persisted — each is
-    consumed by 2-3 join sides, and Spark has no automatic subplan reuse
-    across sides (same rationale as the fight frames; sf0.1 warm:
-    3.9 s → 3.3 s). persist() rather than localCheckpoint(eager=False):
-    the lazy checkpoint re-ran ~1 s of toRdd planning at EVERY
-    construction (per-pass bench cost), where persist is plan-only;
-    a caller-provided shingles_df is used as-is (the shared corpus
-    frame is already persisted by its cache).
+    self-join. The signature frame is persisted — it is consumed by 3
+    join sides, and Spark has no automatic subplan reuse across sides
+    (same rationale as the fight frames; sf0.1 warm: 3.9 s → 3.3 s).
+    persist() rather than localCheckpoint(eager=False): the lazy
+    checkpoint re-ran ~1 s of toRdd planning at EVERY construction
+    (per-pass bench cost), where persist is plan-only.
     """
     qid = quote_ident(id_col)
-    sig = minhash_signatures(
-        df, id_col, text_col, k, n_hashes, shingles_df=shingles_df
-    ).persist()
+    sig = minhash_signatures(sh, id_col, n_hashes).persist()
     pairs = _candidate_pairs_from_signatures(sig, id_col, n_hashes, band_size)
     sig_a = sig.selectExpr(
         f"{qid} AS id_a", *[f"mh_{i} AS a_{i}" for i in range(n_hashes)]
@@ -1287,11 +1216,6 @@ def minhash_jaccard_calibration(
     )
     agree_sql = " + ".join(
         f"CAST(a_{i} = b_{i} AS INT)" for i in range(n_hashes)
-    )
-    sh = (
-        shingles(df, id_col, text_col, k).persist()
-        if shingles_df is None
-        else shingles_df
     )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
@@ -1655,9 +1579,7 @@ def write_corpus_index(
     band_df = None
     if bands is not None:
         n_hashes, band_size = bands
-        band_df = minhash_signatures_from_shingles(
-            c_sh, id_col, n_hashes
-        ).select(
+        band_df = minhash_signatures(c_sh, id_col, n_hashes).select(
             F.col(id_col),
             F.posexplode(_band_hashes(n_hashes, band_size)).alias(
                 "band_idx", "band_hash"
@@ -1927,9 +1849,7 @@ def append_corpus_index(
         subs.append(
             (
                 "bands",
-                minhash_signatures_from_shingles(
-                    d_sh, id_col, n_hashes
-                ).select(
+                minhash_signatures(d_sh, id_col, n_hashes).select(
                     F.col(id_col),
                     F.posexplode(
                         _band_hashes(n_hashes, band_size)
@@ -2263,15 +2183,13 @@ def incremental_dedup(
             F.col(id_col).alias("cid"), "band_idx", "band_hash"
         )
     else:
-        c_band = minhash_signatures_from_shingles(
-            c_sh, id_col, n_hashes
-        ).select(
+        c_band = minhash_signatures(c_sh, id_col, n_hashes).select(
             F.col(id_col).alias("cid"),
             F.posexplode(_band_hashes(n_hashes, band_size)).alias(
                 "band_idx", "band_hash"
             ),
         )
-    d_band = minhash_signatures_from_shingles(d_sh, id_col, n_hashes).select(
+    d_band = minhash_signatures(d_sh, id_col, n_hashes).select(
         F.col(id_col).alias("did"),
         F.posexplode(_band_hashes(n_hashes, band_size)).alias(
             "band_idx", "band_hash"
@@ -2353,16 +2271,13 @@ def incremental_dedup(
 # Asymmetric containment (quote / subset-duplicate detection)
 # ---------------------------------------------------------------------------
 def containment_pairs(
-    df: DataFrame,
+    sh: DataFrame,
     id_col: str,
-    text_col: str,
-    k: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Directed near-containment pairs: C(A→B) = |A∩B| / |A| over word
-    k-gram shingle sets — "how much of A appears inside B". Catches
+    """Directed near-containment pairs: C(A→B) = |A∩B| / |A| over the
+    (id, shingle) sets of `sh` (a `shingles` frame) — "how much of A appears inside B". Catches
     subset duplicates (a doc quoted or embedded in a longer one) that
     symmetric Jaccard misses: a 50-shingle doc fully contained in a
     1000-shingle doc has Jaccard ≈ 0.05 but containment 1.0.
@@ -2373,13 +2288,7 @@ def containment_pairs(
     is asymmetric. One extra output row per unordered pair, no extra
     shuffle (the intersection aggregate serves both directions).
     """
-    sh = cap_shingles(
-        shingles(df, id_col, text_col, k)
-        if shingles_df is None
-        else shingles_df,
-        id_col,
-        max_doc_freq,
-    ).persist()
+    sh = _capped(sh, id_col, max_doc_freq)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")

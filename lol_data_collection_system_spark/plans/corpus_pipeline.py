@@ -154,8 +154,8 @@ def _stages(
     ).persist()
 
     pairs = dedup_ops.ngram_jaccard_pairs(
-        canonical, id_col, text_col, SHINGLE_K, JACCARD_THRESHOLD,
-        max_doc_freq=SHINGLE_MAX_DF,
+        dedup_ops.shingles(canonical, id_col, text_col, SHINGLE_K),
+        id_col, JACCARD_THRESHOLD, max_doc_freq=SHINGLE_MAX_DF,
     )
     clusters = graph_ops.dedup_clusters(canonical, pairs, id_col)
     survivors = canonical.join(

@@ -265,10 +265,11 @@ FROM (SELECT doc_id, {_NTOKS} AS t FROM documents)
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The k=3 shingle frame over the full documents table, shared per
     session: the tokenize+window+distinct pass every MinHash/Jaccard-
-    family query pays (one shared scan instead of six). Hash-neutral:
-    consumers feed it through the operators' ``shingles_df``
-    pass-through / ``_from_shingles`` variants, which are bit-identical
-    to the text-based derivation."""
+    family query pays (one shared scan instead of six). Every consumer
+    passes it straight to the shingle-frame operators
+    (`ngram_jaccard_pairs`, `lsh_candidate_pairs`,
+    `minhash_jaccard_calibration`, `containment_pairs`), which persist
+    only the capped frames they derive from it."""
     return shared(
         spark,
         ("doc_shingles", sf_dir),
@@ -279,10 +280,8 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
     return dedup_ops.ngram_jaccard_pairs(
-        docs, "doc_id", "text", SHINGLE_K, JACCARD_THRESHOLD,
-        shingles_df=_doc_shingles(spark, sf_dir),
+        _doc_shingles(spark, sf_dir), "doc_id", JACCARD_THRESHOLD
     )
 
 
@@ -311,11 +310,9 @@ def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the doc-frequency-capped shingle space (stop-shingle removal).
     Capped results are a subset of the uncapped pairs (pinned in
     tests/test_oracle_parity.py::test_jaccard_doc_freq_cap)."""
-    docs = load_table(spark, sf_dir, "documents")
     return dedup_ops.ngram_jaccard_pairs(
-        docs, "doc_id", "text", SHINGLE_K, JACCARD_THRESHOLD,
+        _doc_shingles(spark, sf_dir), "doc_id", JACCARD_THRESHOLD,
         max_doc_freq=SHINGLE_MAX_DF,
-        shingles_df=_doc_shingles(spark, sf_dir),
     )
 
 
@@ -348,10 +345,8 @@ WHERE ROUND(CAST(n_inter AS DOUBLE) / (sa.set_size + sb.set_size - n_inter), 6)
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
     return dedup_ops.lsh_candidate_pairs(
-        docs, "doc_id", "text", SHINGLE_K, MINHASH_N, MINHASH_BAND,
-        shingles_df=_doc_shingles(spark, sf_dir),
+        _doc_shingles(spark, sf_dir), "doc_id", MINHASH_N, MINHASH_BAND
     )
 
 
@@ -360,11 +355,9 @@ def q_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture (signature cost and band-bucket skew both bounded). NOT a
     subset of the uncapped run: removing a shingle can flip a band hash
     either way, so this is its own oracle-gated query."""
-    docs = load_table(spark, sf_dir, "documents")
     return dedup_ops.lsh_candidate_pairs(
-        docs, "doc_id", "text", SHINGLE_K, MINHASH_N, MINHASH_BAND,
+        _doc_shingles(spark, sf_dir), "doc_id", MINHASH_N, MINHASH_BAND,
         max_doc_freq=SHINGLE_MAX_DF,
-        shingles_df=_doc_shingles(spark, sf_dir),
     )
 
 
@@ -435,7 +428,8 @@ def _doc_token_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, md5-of-distinct-token) frame, shared per session —
     the SimHash family's analog of `_doc_shingles`: the 16-bit and
     128-bit signatures read different substrings of the SAME md5, so
-    one tokenize+hash scan serves both."""
+    one tokenize+hash scan serves both, passed straight to `simhash`
+    and `simhash_components`."""
     return shared(
         spark,
         ("doc_token_md5", sf_dir),
@@ -446,10 +440,8 @@ def _doc_token_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
     return dedup_ops.simhash(
-        docs, "doc_id", "text", SIMHASH_BITS,
-        hashed_df=_doc_token_md5(spark, sf_dir),
+        _doc_token_md5(spark, sf_dir), "doc_id", SIMHASH_BITS
     )
 
 
@@ -480,10 +472,9 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components. The text near-dup family's third member
     (MinHash/Jaccard = set overlap, embeddings = semantic, SimHash =
     weighted-token direction at 16 bytes/doc of pair-time state)."""
-    docs = load_table(spark, sf_dir, "documents")
     return dedup_ops.simhash_components(
-        docs, "doc_id", "text", threshold=SIMHASH_ND_THRESHOLD,
-        hashed_df=_doc_token_md5(spark, sf_dir),
+        _doc_token_md5(spark, sf_dir), "doc_id",
+        threshold=SIMHASH_ND_THRESHOLD,
     )
 
 
@@ -730,9 +721,8 @@ def _dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         pairs = dedup_ops.ngram_jaccard_pairs(
-            docs, "doc_id", "text", SHINGLE_K, JACCARD_THRESHOLD,
+            _doc_shingles(spark, sf_dir), "doc_id", JACCARD_THRESHOLD,
             max_doc_freq=SHINGLE_MAX_DF,
-            shingles_df=_doc_shingles(spark, sf_dir),
         )
         return graph_ops.dedup_clusters(docs, pairs)
 
@@ -875,14 +865,12 @@ def q_lsh_pair_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two sides see the same shingle space).
 
     The expensive shingle assembly (scan + explode + two windows) is
-    built ONCE, checkpointed, and shared by the signature side and the
-    exact-Jaccard side via the `_from_shingles` operator variants."""
+    the session-shared `_doc_shingles` frame, read by both sides."""
     sh = _doc_shingles(spark, sf_dir)
-    sig = dedup_ops.minhash_signatures_from_shingles(sh, "doc_id", MINHASH_N)
-    cand = dedup_ops._candidate_pairs_from_signatures(
-        sig, "doc_id", MINHASH_N, MINHASH_BAND
+    cand = dedup_ops.lsh_candidate_pairs(
+        sh, "doc_id", MINHASH_N, MINHASH_BAND
     )
-    truth = dedup_ops.jaccard_pairs_from_shingles(
+    truth = dedup_ops.ngram_jaccard_pairs(
         sh, "doc_id", JACCARD_THRESHOLD
     ).select("id_a", "id_b")
     return dedup_ops.pair_quality(cand, truth)
@@ -3534,10 +3522,8 @@ FROM plan
 # MinHash-vs-true-Jaccard calibration
 # ---------------------------------------------------------------------------
 def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
     return dedup_ops.minhash_jaccard_calibration(
-        docs, "doc_id", "text", SHINGLE_K, MINHASH_N, MINHASH_BAND,
-        shingles_df=_doc_shingles(spark, sf_dir),
+        _doc_shingles(spark, sf_dir), "doc_id", MINHASH_N, MINHASH_BAND
     )
 
 
@@ -3604,10 +3590,8 @@ def q_lsh_plan_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     / false-candidate stickiness over the corpus's OBSERVED
     candidate-pair Jaccard distribution (the calibration frame). The
     tuning table behind `minhash_lsh_pairs`' geometry."""
-    docs = load_table(spark, sf_dir, "documents")
     cal = dedup_ops.minhash_jaccard_calibration(
-        docs, "doc_id", "text", SHINGLE_K, MINHASH_N, MINHASH_BAND,
-        shingles_df=_doc_shingles(spark, sf_dir),
+        _doc_shingles(spark, sf_dir), "doc_id", MINHASH_N, MINHASH_BAND
     )
     return dedup_ops.lsh_plan_eval(cal, MINHASH_N, JACCARD_THRESHOLD)
 
@@ -4585,11 +4569,9 @@ WHERE rank <= {KNN_K}
 
 
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
     return dedup_ops.containment_pairs(
-        docs, "doc_id", "text", SHINGLE_K, CONTAINMENT_THRESHOLD,
+        _doc_shingles(spark, sf_dir), "doc_id", CONTAINMENT_THRESHOLD,
         max_doc_freq=SHINGLE_MAX_DF,
-        shingles_df=_doc_shingles(spark, sf_dir),
     )
 
 
@@ -4993,9 +4975,8 @@ FROM contrib GROUP BY 1
 def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup_ops.ngram_jaccard_pairs(
-        docs, "doc_id", "text", SHINGLE_K, JACCARD_THRESHOLD,
+        _doc_shingles(spark, sf_dir), "doc_id", JACCARD_THRESHOLD,
         max_doc_freq=SHINGLE_MAX_DF,
-        shingles_df=_doc_shingles(spark, sf_dir),
     )
     return dedup_ops.cross_source_dup_matrix(docs, pairs)
 

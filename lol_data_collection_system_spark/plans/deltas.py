@@ -45,9 +45,7 @@ def recurrent_deltas(
     kills/deaths/assists and delta{k}_{stat} columns (null before the
     reference's idx ≥ k threshold).
     """
-    entries = _walk_entries(
-        anchors, matchlist, max_weeks, max_games=0
-    ).drop("rn")
+    entries = _walk_entries(anchors, matchlist, max_weeks).drop("rn")
     on_champ = entries.filter(
         F.col("champion_id") == F.col("anchor_champion")
     )

@@ -29,6 +29,14 @@ Bit-exact quirks reproduced declaratively:
   fights (`utils.py:631-644`).
 - primary/secondary lane ties break in TOP, JUNGLE, MID, BOTTOM, SUPPORT
   order (Python dict-key order of `utils.py:746-752`).
+- FK gaps: an in-window matchlist entry whose match is missing from the
+  store still counts toward `num_games`, `num_matches` and
+  `num_matches_as_champion` and takes its walk slot under the
+  `max_games` cap (the reference increments its counters before it
+  fetches the match, `utils.py:861`, `:1019-1021`). It contributes no
+  per-game stat, lane, streak, fight, spell or rune count: its NULL
+  `game_duration` fails every remake and non-remake filter, so it is
+  never decremented either.
 """
 
 from __future__ import annotations
@@ -44,10 +52,7 @@ LANE_ORDER = ["TOP", "JUNGLE", "MID", "BOTTOM", "SUPPORT"]
 
 
 def _walk_entries(
-    anchors: DataFrame,
-    matchlist: DataFrame,
-    max_weeks: int,
-    max_games: int,
+    anchors: DataFrame, matchlist: DataFrame, max_weeks: int
 ) -> DataFrame:
     """Anchor ⋈ matchlist restricted to the 3-week lookback, tagged with
     the walk order (week outward, newest-first within week — the order
@@ -89,14 +94,17 @@ def walk_entries_with_matches(
 ) -> DataFrame:
     """The persisted walk frame both history AND availability fold over:
     in-window matchlist entries tagged with walk order, game_duration,
-    the remake flag, and the processing gate. Built once and shared —
-    `stats_availability` used to re-derive the identical anchor⋈matchlist
-    walk and matches join as a second subtree (one extra exchange chain
-    per history_row run)."""
-    entries = _walk_entries(anchors, matchlist, max_weeks, max_games)
+    the remake flag, and the processing gate. Built once and shared by
+    `stats_history` and `stats_availability`.
+
+    `matches` is LEFT-joined: an entry whose match is missing from the
+    store keeps its row (and its walk slot) with NULL game_duration and
+    NULL is_remake — see the FK-gap quirk in the module docstring."""
+    entries = _walk_entries(anchors, matchlist, max_weeks)
     entries = entries.join(
         matches.select(F.col("match_id").alias("game_id"), "game_duration"),
         "game_id",
+        "left",
     ).withColumn("is_remake", F.col("game_duration") < 300)
 
     walk = Window.partitionBy("account_id", "anchor_ts").orderBy("rn")
@@ -112,35 +120,20 @@ def walk_entries_with_matches(
 
 
 def stats_history(
+    entries: DataFrame,
     anchors: DataFrame,
-    matchlist: DataFrame,
-    matches: DataFrame,
     participants: DataFrame,
     lane_map: DataFrame,
     kill_events: DataFrame,
-    max_weeks: int = 3,
-    max_games: int = 40,
-    entries_df: DataFrame | None = None,
 ) -> DataFrame:
-    """One wide history row per account.
+    """One wide history row per anchor.
 
+    entries:      `walk_entries_with_matches` over these anchors
     anchors:      (account_id, reallane, match_time_ms)
-    matchlist:    MATCHLIST_ENTRY-shaped rows
-    matches:      (match_id, game_duration)
     participants: exploded participant rows (sources.documents)
     lane_map:     champion_lane_mapping output
     kill_events:  (match_id, ts_ms, killer, victim, assists) CHAMPION_KILLs
-    entries_df:   optional pre-built `walk_entries_with_matches` frame
-                  (same anchors/matchlist/matches/max_weeks/max_games) so
-                  a caller computing availability too shares one walk
     """
-    entries = (
-        entries_df
-        if entries_df is not None
-        else walk_entries_with_matches(
-            anchors, matchlist, matches, max_weeks, max_games
-        )
-    )
 
     # The participant the account played: champion-based lookup — account
     # ids churn historically, champion is stable in-match (utils.py:921-922)
@@ -372,48 +365,34 @@ def stats_history(
 
 
 def stats_availability(
+    entries: DataFrame,
     anchors: DataFrame,
-    matchlist: DataFrame,
-    matches: DataFrame,
     participants: DataFrame,
     lane_map: DataFrame,
-    max_weeks: int = 3,
-    entries_df: DataFrame | None = None,
 ) -> DataFrame:
     """Availability counters (`get_stats_availability`,
     `utils.py:990-1098`; SURVEY.md A16): per account, how many recent
     matches exist overall / on the current champion / with the current
     summoner-spell pair / rune sextet / in-role.
 
+    entries: `walk_entries_with_matches` over these anchors — the walk
+    is cap-independent (`max_games` only sets the `processed` column,
+    unused here), so `stats_history`'s frame serves as-is.
     anchors: (account_id, reallane, current_champion, spells_set
     array<int>, runes_set array<long>, match_time_ms).
 
-    entries_df: optional pre-built `walk_entries_with_matches` frame over
-    the SAME anchors/matchlist/matches/max_weeks — the walk itself is
-    cap-independent (`max_games` only affects the `processed` column,
-    unused here), so `stats_history`'s frame is reusable as-is.
-
     Faithful reference quirks:
     - NO games cap — every in-window matchlist entry is examined;
-    - `num_matches` and `num_matches_as_champion` count remakes too
-      (incremented before the duration check, never decremented);
+    - `num_matches` and `num_matches_as_champion` count remakes and
+      FK-gap entries too (incremented before the match is fetched,
+      never decremented);
     - `num_matches_in_role` counts `lane_then != reallane`
       (`utils.py:1070-1071` — the comparison is inverted in the
       reference; reproduced as-is for parity);
     - spell/rune comparisons are Python *set* equality →
       sorted-distinct array equality.
     """
-    if entries_df is not None:
-        entries = entries_df
-        nonremake = entries.filter(F.col("game_duration") >= 300)
-    else:
-        entries = _walk_entries(
-            anchors, matchlist, max_weeks, max_games=0
-        ).drop("rn")
-        nonremake = entries.join(
-            matches.select(F.col("match_id").alias("game_id"), "game_duration"),
-            "game_id",
-        ).filter(F.col("game_duration") >= 300)
+    nonremake = entries.filter(F.col("game_duration") >= 300)
     top = entries.groupBy("account_id", "anchor_ts").agg(
         F.count(F.lit(1)).alias("num_matches"),
         F.count(

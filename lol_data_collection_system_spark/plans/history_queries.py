@@ -185,12 +185,10 @@ def q_history_row(spark: SparkSession, sf_dir: str) -> DataFrame:
         anchors, matchlist, matches, MAX_WEEKS, MAX_GAMES
     )
     hist = history_plan.stats_history(
-        anchors, matchlist, matches, participants, lane_map, kills,
-        max_weeks=MAX_WEEKS, max_games=MAX_GAMES, entries_df=entries,
+        entries, anchors, participants, lane_map, kills
     )
     avail = history_plan.stats_availability(
-        anchors, matchlist, matches, participants, lane_map,
-        max_weeks=MAX_WEEKS, entries_df=entries,
+        entries, anchors, participants, lane_map
     )
     return hist.join(avail, "account_id")
 

@@ -83,12 +83,12 @@ def minhash_bands_local(
     trade for per-event latency; interpreted HOFs cost more CPU per row
     than the codegen'd batch shape (see `minhash_signatures`' history).
     """
-    return bands_from_shingles(
+    return bands_of_shingle_array(
         row_shingles(text_col, k), n_hashes, band_size
     )
 
 
-def bands_from_shingles(
+def bands_of_shingle_array(
     sh, n_hashes: int = 16, band_size: int = 4
 ):
     """Row-local band structs from a precomputed shingle-array column —
@@ -618,13 +618,10 @@ def corpus_guard_stream(
     `near_dedup_stream`'s emit stage. Batch frames take the same plan
     minus the watermark, so stream==batch parity is testable.
     """
-    from ..operators.dedup import (
-        _band_hashes,
-        minhash_signatures,
-        minhash_signatures_from_shingles,
-    )
+    from ..operators.dedup import _band_hashes, minhash_signatures, shingles
 
     n_bands = n_hashes // band_size
+    stored_bands = None
     if corpus_index is not None:
         # STORED index (write_corpus_index/read_corpus_index triple):
         # the corpus never gets scanned at guard start. This guard bands
@@ -649,33 +646,20 @@ def corpus_guard_stream(
                 "guard; write a dedicated uncapped index for the guard"
             )
         corpus_fp = fp_tbl.select("fp").distinct()
-        stored_bands = (
-            corpus_index.bands_for(n_hashes, band_size)
-            if hasattr(corpus_index, "bands_for")
-            else None
-        )
-        if stored_bands is not None:
-            # band index persisted at this geometry: the guard starts
-            # with a parquet read instead of re-banding the shingles
-            corpus_bands = stored_bands.select(
-                "band_idx", "band_hash"
-            ).distinct()
-        else:
-            corpus_bands = (
-                minhash_signatures_from_shingles(c_sh, id_col, n_hashes)
-                .select(
-                    F.posexplode(_band_hashes(n_hashes, band_size)).alias(
-                        "band_idx", "band_hash"
-                    )
-                )
-                .distinct()
-            )
+        if hasattr(corpus_index, "bands_for"):
+            stored_bands = corpus_index.bands_for(n_hashes, band_size)
     else:
         corpus_fp = corpus.select(
             fingerprint(F.col(text_col)).alias("fp")
         ).distinct()
+        c_sh = shingles(corpus, id_col, text_col, k)
+    if stored_bands is not None:
+        # band index persisted at this geometry: the guard starts with a
+        # parquet read instead of re-banding the shingles
+        corpus_bands = stored_bands.select("band_idx", "band_hash").distinct()
+    else:
         corpus_bands = (
-            minhash_signatures(corpus, id_col, text_col, k, n_hashes)
+            minhash_signatures(c_sh, id_col, n_hashes)
             .select(
                 F.posexplode(_band_hashes(n_hashes, band_size)).alias(
                     "band_idx", "band_hash"
@@ -812,7 +796,7 @@ def classify_stream(
         _band_hashes,
         corpus_shingle_index,
         fingerprint,
-        minhash_signatures_from_shingles,
+        minhash_signatures,
     )
 
     # ---- static corpus index ----
@@ -902,9 +886,7 @@ def classify_stream(
         # bands=): skip the per-start shingle→minhash→band derivation
         banded = stored_bands.select(id_col, "band_idx", "band_hash")
     else:
-        banded = minhash_signatures_from_shingles(
-            c_sh, id_col, n_hashes
-        ).select(
+        banded = minhash_signatures(c_sh, id_col, n_hashes).select(
             F.col(id_col),
             F.posexplode(_band_hashes(n_hashes, band_size)).alias(
                 "band_idx", "band_hash"
@@ -954,7 +936,7 @@ def classify_stream(
     )
     bands = F.when(
         F.size("_d_set") > 0,
-        bands_from_shingles(F.col("_d_set"), n_hashes, band_size),
+        bands_of_shingle_array(F.col("_d_set"), n_hashes, band_size),
     )
     exploded = base.select(
         id_col, ts_col, "_exact_mid", "_d_set", F.explode(bands).alias("_b")

@@ -49,7 +49,6 @@ _SLOW_TESTS = {
     "test_classify_stream_exact_status_parity",
     "test_classify_stream_from_stored_corpus_index",
     "test_classify_stream_reobserved_id_classifies_in_each_window",
-    "test_containment_dominates_jaccard",
     "test_corpus_guard_stream_filters_against_static_corpus",
     "test_corpus_index_autocompacts_content_identical",
     "test_corpus_index_delete_serves_like_purged_rebuild",
@@ -81,7 +80,6 @@ _SLOW_TESTS = {
     "test_stored_band_index_serves_identically",
     "test_stream_equals_batch",
     "test_streaming_deletion_queue_folds_both_stores",
-    "test_two_anchors_per_account_do_not_interleave",
 }
 
 #: keep every 5th oracle-parity param in the default run (deterministic,

@@ -388,7 +388,11 @@ def oracle_history(
     account_id, reallane, match_time, matchlist, docs, timelines,
     max_weeks=3, max_games=40,
 ):
-    """Clean-room walk with the reference's exact fold (utils.py:736-987)."""
+    """Clean-room walk with the reference's exact fold (utils.py:736-987).
+
+    A matchlist entry whose match is missing from `docs` (an FK gap) is
+    skipped after the counter increment and the cap check: it keeps its
+    count and its walk slot, and it is never remake-decremented."""
     lanes = {l: 0 for l in ["TOP", "JUNGLE", "MID", "BOTTOM", "SUPPORT"]}
     num_games = 0
     in_lane = 0
@@ -410,7 +414,9 @@ def oracle_history(
             num_games += 1
             if num_games > max_games:
                 continue
-            doc = docs[m_ref["game_id"]]
+            doc = docs.get(m_ref["game_id"])
+            if doc is None:
+                continue
             if doc["gameDuration"] < 300:
                 num_games -= 1
                 continue
@@ -496,8 +502,9 @@ def oracle_availability(
     match_time, matchlist, docs, timelines, max_weeks=3,
 ):
     """Clean-room walk of get_stats_availability (utils.py:990-1098),
-    including its quirks: no games cap, remakes counted in num_matches
-    and num_matches_as_champion, and the inverted in-role comparison."""
+    including its quirks: no games cap, remakes and FK-gap entries
+    (match missing from `docs`) counted in num_matches and
+    num_matches_as_champion, and the inverted in-role comparison."""
     num_matches = 0
     as_champ = 0
     in_role = 0
@@ -513,7 +520,9 @@ def oracle_availability(
             num_matches += 1
             if m_ref["champion_id"] == current_champion:
                 as_champ += 1
-            doc = docs[m_ref["game_id"]]
+            doc = docs.get(m_ref["game_id"])
+            if doc is None:
+                continue
             if doc["gameDuration"] < 300:
                 continue
             champ = m_ref["champion_id"]

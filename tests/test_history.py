@@ -15,20 +15,35 @@ from lol_data_collection_system_spark.sources import documents as doc_src
 
 from lol_fixture import (
     T0,
+    champion_of,
     historical_match_rows,
+    oracle_availability,
     oracle_history,
     scenario,
 )
 
 MAX_GAMES = 6
+#: account 1001's g2: in the window and under the cap. The FK-gap test
+#: removes it from the match store and keeps its matchlist entry.
+GAP_MATCH = 2
+#: availability anchors: 1001's current loadout is g1's MID champion,
+#: non-smite spells and the runes of the (odd pid, odd match) variant
+AVAIL_ANCHORS = [
+    (1001, "MID", champion_of(1, 5), [4, 12],
+     [9100 + 7 + 31 + i for i in range(6)], T0),
+    (1002, "TOP", 1, [4, 12], [1, 2, 3, 4, 5, 6], T0),
+    (1003, "BOTTOM", 1, [4, 12], [1, 2, 3, 4, 5, 6], T0),
+]
+AVAIL_SCHEMA = (
+    "account_id long, reallane string, current_champion long, "
+    "spells_set array<int>, runes_set array<long>, match_time_ms long"
+)
 
 
-@pytest.fixture(scope="module")
-def pipeline_result(spark):
-    anchors, matchlist, docs, timelines = scenario()
-    anchors_df = spark.createDataFrame(
-        anchors, ["account_id", "reallane", "match_time_ms"]
-    )
+def _walk(spark, anchors_df, matchlist, docs, timelines):
+    """(entries, participants, lane_map, kills): the one walk frame
+    `stats_history` and `stats_availability` both read, plus the
+    per-match frames decoded from the match documents in `docs`."""
     ml_df = spark.createDataFrame(
         [tuple(m[f.name] for f in schemas.MATCHLIST_ENTRY.fields) for m in matchlist],
         schemas.MATCHLIST_ENTRY,
@@ -51,17 +66,43 @@ def pipeline_result(spark):
             F.col("assists").cast("array<long>").alias("assists"),
         )
     )
-    matches_dim = decoded.select("match_id", "game_duration")
-    result = history_plan.stats_history(
-        anchors_df,
-        ml_df,
-        matches_dim,
-        participants,
-        lane_map,
-        kills,
-        max_weeks=3,
-        max_games=MAX_GAMES,
+    entries = history_plan.walk_entries_with_matches(
+        anchors_df, ml_df, decoded.select("match_id", "game_duration"),
+        3, MAX_GAMES,
     )
+    return entries, participants, lane_map, kills
+
+
+def _history(spark, anchors_df, matchlist, docs, timelines):
+    entries, participants, lane_map, kills = _walk(
+        spark, anchors_df, matchlist, docs, timelines
+    )
+    return history_plan.stats_history(
+        entries, anchors_df, participants, lane_map, kills
+    )
+
+
+def _assert_equal(got, want, label):
+    for key, want_val in want.items():
+        assert key in got, f"{label}: missing field {key}"
+        got_val = got[key]
+        if want_val is None:
+            assert got_val is None, f"{label}.{key}: {got_val} != None"
+        elif isinstance(want_val, float):
+            assert got_val == pytest.approx(want_val, rel=1e-9), (
+                f"{label}.{key}: {got_val} != {want_val}"
+            )
+        else:
+            assert got_val == want_val, f"{label}.{key}: {got_val} != {want_val}"
+
+
+@pytest.fixture(scope="module")
+def pipeline_result(spark):
+    anchors, matchlist, docs, timelines = scenario()
+    anchors_df = spark.createDataFrame(
+        anchors, ["account_id", "reallane", "match_time_ms"]
+    )
+    result = _history(spark, anchors_df, matchlist, docs, timelines)
     rows = {r.account_id: r.asDict() for r in result.collect()}
     expected = {
         acct: oracle_history(acct, lane, t, matchlist, docs, timelines,
@@ -79,18 +120,7 @@ def test_all_accounts_present(pipeline_result):
 @pytest.mark.parametrize("acct", [1001, 1002, 1003])
 def test_history_matches_oracle(pipeline_result, acct):
     rows, expected = pipeline_result
-    got, want = rows[acct], expected[acct]
-    for key, want_val in want.items():
-        assert key in got, f"{acct}: missing field {key}"
-        got_val = got[key]
-        if want_val is None:
-            assert got_val is None, f"{acct}.{key}: {got_val} != None"
-        elif isinstance(want_val, float):
-            assert got_val == pytest.approx(want_val, rel=1e-9), (
-                f"{acct}.{key}: {got_val} != {want_val}"
-            )
-        else:
-            assert got_val == want_val, f"{acct}.{key}: {got_val} != {want_val}"
+    _assert_equal(rows[acct], expected[acct], acct)
 
 
 def test_lane_mapping_forced_slots(spark):
@@ -130,48 +160,72 @@ def test_cap_and_remake_quirks(pipeline_result):
 
 
 def test_availability_matches_oracle(spark):
-    from lol_fixture import champion_of, oracle_availability
-
     anchors, matchlist, docs, timelines = scenario()
-    # current loadouts: champion from g1's MID slot; non-smite spells;
-    # runes of the (odd pid, odd match) variant
-    avail_anchors = [
-        (1001, "MID", champion_of(1, 5), [4, 12],
-         [9100 + 7 + 31 + i for i in range(6)], T0),
-        (1003, "BOTTOM", 1, [4, 12], [1, 2, 3, 4, 5, 6], T0),
-    ]
-    anchors_df = spark.createDataFrame(
-        avail_anchors,
-        "account_id long, reallane string, current_champion long, "
-        "spells_set array<int>, runes_set array<long>, match_time_ms long",
+    anchors_df = spark.createDataFrame(AVAIL_ANCHORS, AVAIL_SCHEMA)
+    entries, participants, lane_map, _ = _walk(
+        spark, anchors_df, matchlist, docs, timelines
     )
-    ml_df = spark.createDataFrame(
-        [tuple(m[f.name] for f in schemas.MATCHLIST_ENTRY.fields) for m in matchlist],
-        schemas.MATCHLIST_ENTRY,
-    )
-    hm_df = spark.createDataFrame(
-        historical_match_rows(docs, timelines), schemas.HISTORICAL_MATCH
-    )
-    decoded = doc_src.decode_match_documents(hm_df)
-    participants = doc_src.explode_participants(decoded)
-    pframes = doc_src.explode_participant_frames(decoded)
-    lane_map = lanes_plan.champion_lane_mapping(participants, pframes)
     got = {
         r.account_id: r.asDict()
         for r in history_plan.stats_availability(
-            anchors_df, ml_df, decoded.select("match_id", "game_duration"),
-            participants, lane_map,
+            entries, anchors_df, participants, lane_map
         ).collect()
     }
-    for acct, lane, champ, spells, runes, t in avail_anchors:
+    for acct, lane, champ, spells, runes, t in AVAIL_ANCHORS:
         want = oracle_availability(
             acct, champ, lane, spells, runes, t, matchlist, docs, timelines
         )
-        for k, v in want.items():
-            assert got[acct][k] == v, f"{acct}.{k}: {got[acct][k]} != {v}"
+        _assert_equal(got[acct], want, acct)
     assert got[1001]["num_matches"] == 10
     assert got[1001]["num_matches_as_champion"] == 1
     assert got[1001]["num_matches_with_runes"] == 4
+
+
+def test_fk_gap_history_and_availability_match_oracle(spark):
+    """A matchlist entry whose match is missing from the store (an FK
+    gap) counts toward num_games, num_matches and
+    num_matches_as_champion and takes its walk slot under the cap, but
+    adds no per-game stat — the reference's walk, read by history and
+    availability from one walk frame."""
+    anchors, matchlist, docs, timelines = scenario()
+    docs = {mid: doc for mid, doc in docs.items() if mid != GAP_MATCH}
+    assert any(m["game_id"] == GAP_MATCH for m in matchlist)
+    anchors_df = spark.createDataFrame(AVAIL_ANCHORS, AVAIL_SCHEMA)
+    entries, participants, lane_map, kills = _walk(
+        spark, anchors_df, matchlist, docs, timelines
+    )
+    hist = {
+        r.account_id: r.asDict()
+        for r in history_plan.stats_history(
+            entries, anchors_df, participants, lane_map, kills
+        ).collect()
+    }
+    avail = {
+        r.account_id: r.asDict()
+        for r in history_plan.stats_availability(
+            entries, anchors_df, participants, lane_map
+        ).collect()
+    }
+    for acct, lane, champ, spells, runes, t in AVAIL_ANCHORS:
+        _assert_equal(
+            hist[acct],
+            oracle_history(acct, lane, t, matchlist, docs, timelines,
+                           max_weeks=3, max_games=MAX_GAMES),
+            f"history {acct}",
+        )
+        _assert_equal(
+            avail[acct],
+            oracle_availability(
+                acct, champ, lane, spells, runes, t, matchlist, docs,
+                timelines,
+            ),
+            f"availability {acct}",
+        )
+    assert hist[1001]["num_games"] == 9       # the gap keeps its count
+    assert avail[1001]["num_matches"] == 10
+    # g1, g5, g7 are processed MID games: the gap's walk slot keeps the
+    # MID win g8 past the cap
+    assert hist[1001]["num_games_in_current_lane"] == 3
 
 
 def test_normalized_match_documents_roundtrip(spark):
@@ -223,48 +277,10 @@ def test_two_anchors_per_account_do_not_interleave(spark):
     anchors_df = spark.createDataFrame(
         two, ["account_id", "reallane", "match_time_ms"]
     )
-    ml_df = spark.createDataFrame(
-        [tuple(m[f.name] for f in schemas.MATCHLIST_ENTRY.fields) for m in matchlist],
-        schemas.MATCHLIST_ENTRY,
-    )
-    hm_df = spark.createDataFrame(
-        historical_match_rows(docs, timelines), schemas.HISTORICAL_MATCH
-    )
-    decoded = doc_src.decode_match_documents(hm_df)
-    participants = doc_src.explode_participants(decoded)
-    pframes = doc_src.explode_participant_frames(decoded)
-    lane_map = lanes_plan.champion_lane_mapping(participants, pframes)
-    kills = (
-        doc_src.explode_timeline_events(decoded)
-        .filter(F.col("type") == "CHAMPION_KILL")
-        .select(
-            "match_id",
-            "ts_ms",
-            F.col("killer_id").cast("long").alias("killer"),
-            F.col("victim_id").cast("long").alias("victim"),
-            F.col("assists").cast("array<long>").alias("assists"),
-        )
-    )
-    matches_dim = decoded.select("match_id", "game_duration")
-    result = history_plan.stats_history(
-        anchors_df, ml_df, matches_dim, participants, lane_map, kills,
-        max_weeks=3, max_games=MAX_GAMES,
-    )
+    result = _history(spark, anchors_df, matchlist, docs, timelines)
     rows = {r.match_time_ms: r.asDict() for r in result.collect()}
     assert set(rows) == {t_new, t_old}, "one history row per anchor"
     for t in (t_new, t_old):
         want = oracle_history(acct, lane, t, matchlist, docs, timelines,
                               max_weeks=3, max_games=MAX_GAMES)
-        got = rows[t]
-        for key, want_val in want.items():
-            got_val = got[key]
-            if want_val is None:
-                assert got_val is None, f"anchor {t} field {key}"
-            elif isinstance(want_val, float):
-                assert got_val == pytest.approx(want_val, rel=1e-9), (
-                    f"anchor {t} field {key}: {got_val} != {want_val}"
-                )
-            else:
-                assert got_val == want_val, (
-                    f"anchor {t} field {key}: {got_val} != {want_val}"
-                )
+        _assert_equal(rows[t], want, f"anchor {t}")

@@ -96,7 +96,9 @@ def test_containment_asymmetry(spark):
     )
     rows = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in dedup.containment_pairs(df, "doc_id", "text", 3, 0.1).collect()
+        for r in dedup.containment_pairs(
+            dedup.shingles(df, "doc_id", "text", 3), "doc_id", 0.1
+        ).collect()
     }
     assert rows[(1, 2)] == 1.0
     assert rows[(2, 1)] == pytest.approx(3 / 8)

@@ -102,6 +102,7 @@ def test_jaccard_doc_freq_cap(spark):
 
     from lol_data_collection_system_spark.operators.dedup import (
         ngram_jaccard_pairs,
+        shingles,
     )
 
     rows = [
@@ -110,10 +111,9 @@ def test_jaccard_doc_freq_cap(spark):
         (3, "a completely different document entirely here now"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    full = ngram_jaccard_pairs(df, "doc_id", "text", k=3, threshold=0.0)
-    capped = ngram_jaccard_pairs(
-        df, "doc_id", "text", k=3, threshold=0.0, max_doc_freq=1
-    )
+    sh = shingles(df, "doc_id", "text", 3)
+    full = ngram_jaccard_pairs(sh, "doc_id", threshold=0.0)
+    capped = ngram_jaccard_pairs(sh, "doc_id", threshold=0.0, max_doc_freq=1)
     full_pairs = {(r.id_a, r.id_b) for r in full.collect()}
     capped_pairs = {(r.id_a, r.id_b) for r in capped.collect()}
     assert (1, 2) in full_pairs          # share 'the quick brown'

@@ -302,18 +302,22 @@ def test_containment_dominates_jaccard(spark, texts):
     from lol_data_collection_system_spark.operators.dedup import (
         containment_pairs,
         ngram_jaccard_pairs,
+        shingles,
     )
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    sh = shingles(
+        spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+        ),
+        "doc_id", "text", 2,
     )
     jac = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", 2, 0.0).collect()
+        for r in ngram_jaccard_pairs(sh, "doc_id", 0.0).collect()
     }
     con = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in containment_pairs(df, "doc_id", "text", 2, 0.0).collect()
+        for r in containment_pairs(sh, "doc_id", 0.0).collect()
     }
     for (a, b), j in jac.items():
         assert max(con.get((a, b), 0.0), con.get((b, a), 0.0)) >= j - 1e-9

@@ -142,6 +142,7 @@ def test_token_budget_plan_sums_and_epochs(spark):
 def test_minhash_calibration_bounds(spark):
     from lol_data_collection_system_spark.operators.dedup import (
         minhash_jaccard_calibration,
+        shingles,
     )
 
     base = "the quick brown fox jumps over the lazy dog again and again"
@@ -152,7 +153,9 @@ def test_minhash_calibration_bounds(spark):
         (4, "completely different words everywhere nothing shared at all"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = minhash_jaccard_calibration(df, "doc_id", "text").collect()
+    out = minhash_jaccard_calibration(
+        shingles(df, "doc_id", "text"), "doc_id"
+    ).collect()
     got = {(r.id_a, r.id_b): r for r in out}
     assert (1, 2) in got
     r12 = got[(1, 2)]

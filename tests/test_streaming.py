@@ -1949,7 +1949,10 @@ def test_simhash128_local_matches_batch_operator(spark):
     the batch fingerprint space."""
     from pyspark.sql import functions as F2
 
-    from lol_data_collection_system_spark.operators.dedup import simhash128
+    from lol_data_collection_system_spark.operators.dedup import (
+        simhash128,
+        token_md5,
+    )
     from lol_data_collection_system_spark.streaming.dedup import (
         simhash128_local,
     )
@@ -1966,7 +1969,9 @@ def test_simhash128_local_matches_batch_operator(spark):
     )
     want = {
         r.doc_id: (r.simhash_w0, r.simhash_w1)
-        for r in simhash128(docs, "doc_id", "text").collect()
+        for r in simhash128(
+            token_md5(docs, "doc_id", "text"), "doc_id"
+        ).collect()
     }
     got = {
         r.doc_id: (r.s.w0, r.s.w1)

@@ -730,11 +730,17 @@ def test_strip_html_blocks_tags_entities_and_decode_order(spark):
 
 def test_simhash128_word_packing_matches_python(spark):
     """Each 64-bit word reproduces the documented md5-slice convention,
-    including the MIN_VALUE packing of bit 63 — checked against a pure
-    Python reimplementation on small token sets."""
+    including the MIN_VALUE packing of bit 63, and the 16-bit `simhash`
+    its md5-prefix convention — both widths read ONE `token_md5` frame
+    and are checked against a pure Python reimplementation on small
+    token sets."""
     import hashlib
 
-    from lol_data_collection_system_spark.operators.dedup import simhash128
+    from lol_data_collection_system_spark.operators.dedup import (
+        simhash,
+        simhash128,
+        token_md5,
+    )
 
     docs = [
         (0, "alpha beta gamma delta"),
@@ -761,44 +767,29 @@ def test_simhash128_word_packing_matches_python(spark):
             out.append(v)
         return tuple(out)
 
+    def py_sig16(text):
+        hs = [
+            int(hashlib.md5(t.encode()).hexdigest()[:4], 16)
+            for t in set(text.split())
+        ]
+        return sum(
+            1 << i
+            for i in range(16)
+            if sum(((h >> i) & 1) * 2 - 1 for h in hs) > 0
+        )
+
+    hashed = token_md5(
+        spark.createDataFrame(docs, ["doc_id", "text"]), "doc_id", "text"
+    )
     got = {
         r.doc_id: (r.simhash_w0, r.simhash_w1)
-        for r in simhash128(
-            spark.createDataFrame(docs, ["doc_id", "text"]), "doc_id", "text"
-        ).collect()
+        for r in simhash128(hashed, "doc_id").collect()
     }
+    got16 = {r.doc_id: r.simhash for r in simhash(hashed, "doc_id", 16).collect()}
     for i, text in docs:
         assert got[i] == py_sig(text), (i, got[i], py_sig(text))
+        assert got16[i] == py_sig16(text), (i, got16[i], py_sig16(text))
     assert got[0] == got[1]
-
-    # the shared token-md5 pass-through (VERDICT r9 #4) is bit-identical
-    # for BOTH widths — one tokenize+md5 scan serves the whole family
-    from lol_data_collection_system_spark.operators.dedup import (
-        simhash,
-        token_md5,
-    )
-
-    frame = spark.createDataFrame(docs, ["doc_id", "text"])
-    shared = token_md5(frame, "doc_id", "text").persist()
-    via_shared = {
-        r.doc_id: (r.simhash_w0, r.simhash_w1)
-        for r in simhash128(
-            frame, "doc_id", "text", hashed_df=shared
-        ).collect()
-    }
-    assert via_shared == got
-    direct16 = {
-        r.doc_id: r.simhash
-        for r in simhash(frame, "doc_id", "text", 16).collect()
-    }
-    shared16 = {
-        r.doc_id: r.simhash
-        for r in simhash(
-            frame, "doc_id", "text", 16, hashed_df=shared
-        ).collect()
-    }
-    assert shared16 == direct16
-    shared.unpersist()
 
 
 def test_simhash_components_match_bruteforce_union_find(spark):
@@ -808,6 +799,7 @@ def test_simhash_components_match_bruteforce_union_find(spark):
     from lol_data_collection_system_spark.operators.dedup import (
         simhash128,
         simhash_components,
+        token_md5,
     )
 
     base = "the quick brown fox jumps over the lazy dog near the river bank "
@@ -819,12 +811,14 @@ def test_simhash_components_match_bruteforce_union_find(spark):
             docs.append((i, base + f"variant{i // 3}"))  # exact dup of i-1
         else:
             docs.append((i, f"totally different text number {i} " * 3))
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    hashed = token_md5(
+        spark.createDataFrame(docs, ["doc_id", "text"]), "doc_id", "text"
+    )
 
     sigs = {
         r.doc_id: ((r.simhash_w0 ^ 0) & ((1 << 64) - 1),
                    (r.simhash_w1 ^ 0) & ((1 << 64) - 1))
-        for r in simhash128(df, "doc_id", "text").collect()
+        for r in simhash128(hashed, "doc_id").collect()
     }
     ids = sorted(sigs)
     parent = {i: i for i in ids}
@@ -849,7 +843,7 @@ def test_simhash_components_match_bruteforce_union_find(spark):
 
     got = {
         r.doc_id: r.component_id
-        for r in simhash_components(df, threshold=3).collect()
+        for r in simhash_components(hashed, threshold=3).collect()
     }
     assert got == want
     # the exact dups really did land together (fixture sanity)
@@ -863,28 +857,32 @@ def test_simhash128_lane_overflow_guard_and_escape_hatch(spark):
     bit-identical signatures (r11 lane repack contract)."""
     import pytest
 
-    from lol_data_collection_system_spark.operators.dedup import simhash128
+    from lol_data_collection_system_spark.operators.dedup import (
+        simhash128,
+        token_md5,
+    )
 
     big = " ".join(f"tok{i}" for i in range(300))  # 300 distinct tokens
-    docs = spark.createDataFrame(
-        [(0, big), (1, "alpha beta gamma")], "doc_id long, text string"
+    docs = token_md5(
+        spark.createDataFrame(
+            [(0, big), (1, "alpha beta gamma")], "doc_id long, text string"
+        ),
+        "doc_id", "text",
     )
     # 8-bit lanes cap at 128 distinct tokens (top lane borders the
     # sign bit): the 300-token doc raises — Spark's ANSI overflow or
     # the operator's own guard, loud either way
     with pytest.raises(Exception, match="(?i)overflow"):
-        simhash128(docs, "doc_id", "text", lane_bits=8).collect()
+        simhash128(docs, "doc_id", lane_bits=8).collect()
     # default 16-bit lanes and the 32-bit escape hatch agree exactly
     d16 = {
         r["doc_id"]: (r["simhash_w0"], r["simhash_w1"])
-        for r in simhash128(docs, "doc_id", "text").collect()
+        for r in simhash128(docs, "doc_id").collect()
     }
     d32 = {
         r["doc_id"]: (r["simhash_w0"], r["simhash_w1"])
-        for r in simhash128(
-            docs, "doc_id", "text", lane_bits=32
-        ).collect()
+        for r in simhash128(docs, "doc_id", lane_bits=32).collect()
     }
     assert d16 == d32 and len(d16) == 2
     with pytest.raises(ValueError, match="lane_bits"):
-        simhash128(docs, "doc_id", "text", lane_bits=12)
+        simhash128(docs, "doc_id", lane_bits=12)
