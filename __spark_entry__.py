@@ -42,6 +42,7 @@ from lol_data_collection_system_spark.plans import (
     selection_queries,
 )
 from lol_data_collection_system_spark.sources import load_table
+from lol_data_collection_system_spark.streaming import rollup
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -632,41 +633,25 @@ def q_incremental_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count→sum, sum→sum, max→max, min over decimal). The oracle is the
     FULL recompute over all events, so the hash gate proves the merge is
     lossless — the property that lets a 100 TB rollup pay only
-    O(delta + touched groups) per refresh instead of a full scan.
+    O(delta + touched groups) per refresh instead of a full scan. States,
+    merge and finalization are `streaming.rollup`'s, so the gate
+    certifies the definitions the hourly stream store uses.
     """
     events = _t(spark, sf_dir, "events")
-    keys = [
-        F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("hour_ms"),
-        F.col("event_type"),
-    ]
-    val = F.col("value").cast("decimal(18,2)")
-    states = [
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(val).alias("_sum_value"),
-        F.max(val).alias("_max_value"),
-        F.min("event_id").alias("_first_event"),
-    ]
     cut = F.col("ts") < F.timestamp_millis(F.lit(ROLLUP_CUTOFF_MS))
-    base = events.filter(cut).groupBy(*keys).agg(*states)
-    delta = events.filter(~cut).groupBy(*keys).agg(*states)
+    base = rollup.hourly_partial(events.filter(cut))
+    delta = rollup.hourly_partial(events.filter(~cut))
     merged = (
         base.unionByName(delta)
-        .groupBy("hour_ms", "event_type")
+        .groupBy(*rollup.HOURLY_KEYS)
         .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("_sum_value").alias("_s"),
-            F.max("_max_value").alias("max_value"),
-            F.min("_first_event").alias("first_event"),
+            *[
+                rollup.MERGE_FNS[kind](c).alias(c)
+                for c, kind in rollup.HOURLY_MERGE.items()
+            ]
         )
     )
-    return merged.select(
-        "hour_ms",
-        "event_type",
-        "n_events",
-        F.col("_s").cast("decimal(18,2)").cast("double").alias("sum_value"),
-        F.col("max_value").cast("double").alias("max_value"),
-        "first_event",
-    )
+    return rollup.finalize_hourly(merged)
 
 
 ORACLE_INCREMENTAL_HOURLY_ROLLUP = """

@@ -17,12 +17,13 @@ Pipeline shape (Spark-first decomposition):
    merges a later fight into an earlier one (≤30 s ahead) when its victim
    set is a subset; partial overlaps subtract the shared victims; a
    superset ahead absorbs the current fight and breaks (`utils.py:586-626`).
-   This fold is order-dependent and non-associative — per the survey it is
-   implemented as a grouped `applyInPandas` (Arrow-batched, one group per
-   (match, actor), kills and deaths merged jointly in one ts-sorted list,
-   matching the reference's ``sorted(kills+deaths)`` fold); groups are ≤ a
-   few hundred rows so Python cost is bounded, and groups distribute
-   across executors.
+   This fold is order-dependent and non-associative, so it runs per
+   (match, actor) group over one totally sorted event array — kills and
+   deaths merged jointly, matching the reference's ``sorted(kills+deaths)``
+   fold — as a single SQL higher-order expression (`aggregate` over the
+   event indexes). Catalyst plans it like any other expression; no row
+   crosses into a Python worker. `merge_fight_group` is the same fold in
+   plain Python, the reference the tests compare against.
 4. **Outcome bucketing** (`outcome_buckets`): solo/skirmish/team ×
    win/neutral/loss counts and the ratio/aggro profile
    (`utils.py:630-726`) — a single conditional aggregation.
@@ -36,10 +37,8 @@ from __future__ import annotations
 
 from typing import Iterable
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 # ---------------------------------------------------------------------------
@@ -71,25 +70,25 @@ def kill_death_perspectives(
         contributors.alias("contributors"),
         F.col(victim_col).alias("victim"),
     )
-    kill_rows = base.select(
+    # one kill row per contributor, then the victim's death row
+    rows = (
+        "concat(transform(contributors, a -> named_struct('actor', a, "
+        "'perspective', 'kill', 'allies', contributors, 'enemies', array(victim))), "
+        "array(named_struct('actor', victim, 'perspective', 'death', "
+        "'allies', array(victim), 'enemies', contributors)))"
+    )
+    exploded = base.select(
+        "match_id", "ts_ms", "victim", F.explode(F.expr(rows)).alias("_p")
+    )
+    return exploded.select(
         "match_id",
-        F.explode("contributors").alias("actor"),
-        F.lit("kill").alias("perspective"),
+        "_p.actor",
+        "_p.perspective",
         "ts_ms",
-        F.col("contributors").alias("allies"),
-        F.array("victim").alias("enemies"),
+        "_p.allies",
+        "_p.enemies",
         F.array("victim").alias("victims"),
     )
-    death_rows = base.select(
-        "match_id",
-        F.col("victim").alias("actor"),
-        F.lit("death").alias("perspective"),
-        "ts_ms",
-        F.array("victim").alias("allies"),
-        F.col("contributors").alias("enemies"),
-        F.array("victim").alias("victims"),
-    )
-    return kill_rows.unionByName(death_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -219,21 +218,8 @@ def enrich_adjacent_sets(
 
 
 # ---------------------------------------------------------------------------
-# Stage 3 — +30 s subset-merge (order-dependent → grouped applyInPandas)
+# Stage 3 — +30 s subset-merge (order-dependent → one array fold per group)
 # ---------------------------------------------------------------------------
-MERGED_FIGHT_SCHEMA = T.StructType(
-    [
-        T.StructField("match_id", T.LongType()),
-        T.StructField("actor", T.LongType()),
-        T.StructField("perspective", T.StringType()),
-        T.StructField("ts_ms", T.LongType()),
-        T.StructField("allies", T.ArrayType(T.LongType())),
-        T.StructField("enemies", T.ArrayType(T.LongType())),
-        T.StructField("victims", T.ArrayType(T.LongType())),
-    ]
-)
-
-
 def merge_fight_group(events: list[dict], horizon_ms: int = 30_000) -> list[dict]:
     """The reference's exact forward subset-merge (`utils.py:586-626`),
     over one (match, actor)'s ts-ordered fight events.
@@ -281,48 +267,72 @@ def merge_fight_group(events: list[dict], horizon_ms: int = 30_000) -> list[dict
     return [e for e in evs if len(e["victims"])]
 
 
-#: array<struct> element type carried through the merge UDF — one entry
-#: per fight event, grouped per (match, actor).
-_EVENTS_ARR = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("perspective", T.StringType()),
-            T.StructField("ts_ms", T.LongType()),
-            T.StructField("allies", T.ArrayType(T.LongType())),
-            T.StructField("enemies", T.ArrayType(T.LongType())),
-            T.StructField("victims", T.ArrayType(T.LongType())),
-        ]
+def _merge_sql(evs: str, horizon_ms: int) -> str:
+    """`merge_fight_group` over the sorted event array `evs` as ONE SQL
+    higher-order expression string (see `similarity.dot_sql`): an
+    `aggregate` over the event indexes whose step i rewrites the array.
+
+    Step i (skipped when event i's victims are already empty or no later
+    event lies within `horizon_ms`) looks at the later events within the
+    horizon that still have victims. `b` is the first of them whose
+    victims strictly contain event i's (``size(acc)`` if none). Every
+    looked-at event before `b` loses event i's victims — all of them when
+    its victims are a subset, the shared ones on a partial overlap — and
+    event i gains the allies/enemies of those it emptied. If `b` exists it
+    gains event i's grown sets and event i's victims are cleared. Events
+    left without victims drop."""
+    vi = "acc[i].victims"
+    # x (index k) is a later event within the horizon that still has victims
+    seen = (
+        f"k > i AND x.ts_ms <= acc[i].ts_ms + {horizon_ms} AND size(x.victims) > 0"
     )
-)
+    inside = f"size(array_except(x.victims, {vi})) = 0"
+    covers = f"size(array_except({vi}, x.victims)) = 0"
+    brk = (
+        f"coalesce(array_min(transform(acc, (x, k) -> IF({seen} "
+        f"AND {covers} AND NOT {inside}, k, NULL))), size(acc))"
+    )
 
-
-@F.pandas_udf(_EVENTS_ARR)
-def _merge_fight_events_udf(groups: pd.Series, horizon: pd.Series) -> pd.Series:
-    """Fold one collected event-array per row through the reference
-    merge. The sort key mirrors the old grouped-map's stable mergesort on
-    (ts, kill-before-death); Python's sort is equally stable. `horizon`
-    rides in as a literal column so one compiled UDF serves any
-    horizon_ms.
-
-    The nested ``array<struct>`` Arrow input is tested on PySpark 4.1.2;
-    no lower version has been verified."""
-    out = []
-    for evs, hz in zip(groups, horizon):
-        events = sorted(
-            (
-                {
-                    "perspective": e["perspective"],
-                    "ts_ms": int(e["ts_ms"]),
-                    "allies": list(e["allies"]),
-                    "enemies": list(e["enemies"]),
-                    "victims": list(e["victims"]),
-                }
-                for e in evs
-            ),
-            key=lambda e: (e["ts_ms"], 0 if e["perspective"] == "kill" else 1),
+    def grown(f: str) -> str:
+        # append-if-absent in event order == one array_union over the concat
+        return (
+            f"array_union(acc[i].{f}, flatten(transform(acc, (x, k) -> "
+            f"IF({seen} AND k < b AND {inside}, x.{f}, array()))))"
         )
-        out.append(merge_fight_group(events, int(hz)))
-    return pd.Series(out)
+
+    def field(f: str) -> str:
+        return (
+            f"CASE WHEN j = i THEN {grown(f)} "
+            f"WHEN j = b THEN array_union(e.{f}, {grown(f)}) ELSE e.{f} END"
+        )
+
+    # for i < j < b inside the horizon, array_except empties a subset and
+    # strips the shared victims of a partial overlap; a disjoint or empty
+    # set passes through unchanged
+    victims = (
+        f"CASE WHEN j = i THEN IF(b < size(acc), array(), e.victims) "
+        f"WHEN j < b THEN array_except(e.victims, {vi}) ELSE e.victims END"
+    )
+    # only events i..b inside the horizon can change; the rest pass as is
+    rewrite = (
+        f"transform(acc, (e, j) -> IF(j < i OR j > b OR "
+        f"e.ts_ms > acc[i].ts_ms + {horizon_ms}, e, "
+        f"named_struct('ts_ms', e.ts_ms, "
+        f"'death', e.death, 'allies', {field('allies')}, "
+        f"'enemies', {field('enemies')}, 'victims', {victims}, "
+        f"'perspective', e.perspective)))"
+    )
+    # ts-sorted: if the next event is beyond the horizon, so are the rest.
+    # A one-element aggregate binds b once per step.
+    step = (
+        f"IF(size({vi}) = 0 OR i = size(acc) - 1 "
+        f"OR acc[i + 1].ts_ms > acc[i].ts_ms + {horizon_ms}, acc, "
+        f"aggregate(array({brk}), acc, (s, b) -> {rewrite}))"
+    )
+    return (
+        f"filter(aggregate(sequence(0, size({evs}) - 1), {evs}, "
+        f"(acc, i) -> {step}), e -> size(e.victims) > 0)"
+    )
 
 
 def subset_merge(
@@ -332,69 +342,34 @@ def subset_merge(
     one participant's kills AND deaths in a single ts-sorted list
     (``sorted(kills+deaths)``, `utils.py:582`; kills sort before deaths on
     ts ties because Python's sort is stable over the concatenation) — then
-    run the exact reference fold per group.
+    run the exact reference fold per group as one Catalyst expression
+    (`_merge_sql`), with no Python worker.
 
-    The Python boundary is ONE Arrow pandas_udf over per-group
-    ``collect_list`` arrays (the grouping/sorting work stays in the JVM).
-    The previous grouped-map ``applyInPandas`` built a pandas DataFrame
-    per (match, actor) group — ~5-7 ms of constructor overhead per group
-    that dwarfed the actual fold on the typical 2-5 row group (history_row
-    dominant stage, ~12 s executor time for ~1600 groups; full-volume
-    merge 57 s → 2.4 s with the array fold at sf0.1)."""
-    # Fast path: a (match, actor) group where no event lies within
-    # `horizon_ms` of its predecessor cannot merge anything — the fold is
-    # the identity — so those groups never cross the Python boundary.
-    # For sparse event streams (most of a large corpus) this sends only
-    # the dense clusters through Arrow.
-    w = Window.partitionBy("match_id", "actor").orderBy(
-        F.col("ts_ms").asc(),
-        F.when(F.col("perspective") == "kill", 0).otherwise(1).asc(),
-    )
-    gap = F.col("ts_ms") - F.lag("ts_ms").over(w)
-    flagged = enriched.withColumn(
-        "_dense",
-        F.max(
-            F.when(gap.isNotNull() & (gap <= horizon_ms), F.lit(1)).otherwise(
-                F.lit(0)
-            )
-        ).over(
-            Window.partitionBy("match_id", "actor").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ),
-    ).persist()
-    # ^ two consumers (the sparse and dense filters below): without the
-    # persist each side re-executes the FULL upstream — the banded
-    # enrichment join included — doubling the pipeline's dominant stage
-    # (history_row warm pass at sf0.1: 8.6 → 2.1 s once the branch is
-    # materialized). Storage is the enriched fight rows, LRU-evictable;
-    # a repeat call over the same input plans an identical frame, which
-    # Spark's cache holds only once.
-    sparse = flagged.filter(F.col("_dense") == 0).select(
-        *[f.name for f in MERGED_FIGHT_SCHEMA.fields]
-    )
-    dense = flagged.filter(F.col("_dense") == 1)
-    grouped = dense.groupBy("match_id", "actor").agg(
+    The list is `array_sort`ed on a total key — ts, kill before death,
+    then allies, enemies, victims — so the fold never depends on the
+    order `collect_list` happened to see, which a shuffle does not fix."""
+    evs = F.array_sort(
         F.collect_list(
-            F.struct("perspective", "ts_ms", "allies", "enemies", "victims")
-        ).alias("_evs")
+            F.struct(
+                "ts_ms",
+                (F.col("perspective") != "kill").alias("death"),
+                "allies",
+                "enemies",
+                "victims",
+                "perspective",
+            )
+        )
     )
-    merged_dense = grouped.select(
+    merged = enriched.groupBy("match_id", "actor").agg(evs.alias("_evs"))
+    return merged.select(
         "match_id",
         "actor",
-        F.explode(
-            _merge_fight_events_udf(F.col("_evs"), F.lit(horizon_ms))
-        ).alias("_e"),
+        F.explode(F.expr(_merge_sql("_evs", horizon_ms))).alias("_e"),
     ).select(
         "match_id",
         "actor",
-        F.col("_e.perspective").alias("perspective"),
-        F.col("_e.ts_ms").alias("ts_ms"),
-        F.col("_e.allies").alias("allies"),
-        F.col("_e.enemies").alias("enemies"),
-        F.col("_e.victims").alias("victims"),
+        *[f"_e.{c}" for c in ("perspective", "ts_ms", "allies", "enemies", "victims")],
     )
-    return merged_dense.unionByName(sparse)
 
 
 def parse_fights(

@@ -485,7 +485,6 @@ def frame_sample_plan(
 #: encoded bytes.
 AUDIO_RATE = 16_000
 VIDEO_W = VIDEO_H = 2
-_VIDEO_FRAME_BYTES = len("P6\n2 2\n255\n") + VIDEO_W * VIDEO_H * 3  # 23
 
 
 def synth_media_row(doc_id: int, n_chars: int) -> tuple[str, bytes, dict]:

@@ -325,8 +325,8 @@ HOURLY_MERGE = {
 
 
 def hourly_partial(events: DataFrame) -> DataFrame:
-    """The same per-(hour, type) algebraic states
-    `q_incremental_hourly_rollup` aggregates (decimal money math)."""
+    """The per-(hour, type) algebraic states (decimal money math) that
+    the hourly stream store and `q_incremental_hourly_rollup` merge."""
     val = F.col("value").cast("decimal(18,2)")
     return events.groupBy(
         F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("hour_ms"),
@@ -340,8 +340,8 @@ def hourly_partial(events: DataFrame) -> DataFrame:
 
 
 def finalize_hourly(states: DataFrame) -> DataFrame:
-    """State → presentation columns, matching the batch query's output
-    (and therefore its DuckDB oracle) exactly."""
+    """State → presentation columns: `q_incremental_hourly_rollup`'s
+    output, which its DuckDB oracle hashes."""
     return states.select(
         "hour_ms",
         "event_type",

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import duckdb
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,39 +50,135 @@ def test_fight_merge_matches_python_reference(spark):
     assert spark_rows == expected
 
 
-def test_merge_invariants_no_victim_in_two_surviving_fights():
-    """Property from SURVEY.md §5: after the merge, within one group no
-    victim appears in two surviving fights that are within the horizon."""
-    events = [
-        {"ts_ms": 0, "allies": [1], "enemies": [2], "victims": [2]},
-        {"ts_ms": 10_000, "allies": [1], "enemies": [2, 3], "victims": [2, 3]},
-        {"ts_ms": 20_000, "allies": [1], "enemies": [2], "victims": [2]},
+_FIGHT_ROW = (
+    "match_id BIGINT, actor BIGINT, perspective STRING, ts_ms BIGINT, "
+    "allies ARRAY<BIGINT>, enemies ARRAY<BIGINT>, victims ARRAY<BIGINT>"
+)
+_FIELDS = ("perspective", "ts_ms", "allies", "enemies", "victims")
+
+
+def _reference_merge(events: list[dict]) -> list[tuple]:
+    """`merge_fight_group` over the events in `subset_merge`'s total
+    order: ts, kill before death, then allies, enemies, victims."""
+    # the fold appends to allies/enemies in place; copy them first
+    ordered = sorted(
+        ({**e, "allies": [*e["allies"]], "enemies": [*e["enemies"]]} for e in events),
+        key=lambda e: (
+            e["ts_ms"], e["perspective"] != "kill", e["allies"], e["enemies"], e["victims"]
+        ),
+    )
+    return [tuple(e[f] for f in _FIELDS) for e in fight_ops.merge_fight_group(ordered, 30_000)]
+
+
+def _spark_merge(spark, groups: dict[int, list[dict]]) -> dict[int, list[tuple]]:
+    """`subset_merge` over one (match 1, actor = key) group per entry,
+    each group's surviving fights in the fold's output order."""
+    rows = [
+        (1, actor, *(e[f] for f in _FIELDS))
+        for actor, events in groups.items()
+        for e in events
     ]
-    kept = fight_ops.merge_fight_group(events, 30_000)
-    # event 1 absorbs event 0 (superset ahead) and event 2 (subset ahead)
-    assert len(kept) == 1
-    assert sorted(kept[0]["victims"]) == [2, 3]
-    assert sorted(kept[0]["allies"]) == [1]
+    out: dict[int, list[tuple]] = {actor: [] for actor in groups}
+    merged = fight_ops.subset_merge(spark.createDataFrame(rows, _FIGHT_ROW), 30_000)
+    for r in merged.collect():
+        out[r.actor].append(tuple(r[f] for f in _FIELDS))
+    return out
 
 
-def test_merge_partial_overlap_subtracts():
-    events = [
-        {"ts_ms": 0, "allies": [1], "enemies": [2, 3], "victims": [2, 3]},
-        {"ts_ms": 5_000, "allies": [4], "enemies": [3, 5], "victims": [3, 5]},
-    ]
-    kept = fight_ops.merge_fight_group(events, 30_000)
-    # partial overlap: victim 3 removed from the later fight, both survive
-    assert len(kept) == 2
-    assert kept[1]["victims"] == [5]
+def _kill(ts_ms: int, allies: list, enemies: list, victims: list) -> dict:
+    return {
+        "perspective": "kill", "ts_ms": ts_ms,
+        "allies": allies, "enemies": enemies, "victims": victims,
+    }
 
 
-def test_merge_beyond_horizon_untouched():
-    events = [
-        {"ts_ms": 0, "allies": [1], "enemies": [2], "victims": [2]},
-        {"ts_ms": 31_000, "allies": [1], "enemies": [2], "victims": [2]},
-    ]
-    kept = fight_ops.merge_fight_group(events, 30_000)
-    assert len(kept) == 2
+@pytest.mark.parametrize(
+    "events, kept_victims",
+    [
+        pytest.param(
+            # event 1 absorbs event 0 (superset ahead) and event 2 (subset
+            # ahead): within the horizon no victim survives in two fights
+            [
+                _kill(0, [1], [2], [2]),
+                _kill(10_000, [1], [2, 3], [2, 3]),
+                _kill(20_000, [1], [2], [2]),
+            ],
+            [[2, 3]],
+            id="invariants_no_victim_in_two_surviving_fights",
+        ),
+        pytest.param(
+            # partial overlap: victim 3 leaves the later fight, both survive
+            [_kill(0, [1], [2, 3], [2, 3]), _kill(5_000, [4], [3, 5], [3, 5])],
+            [[2, 3], [5]],
+            id="partial_overlap_subtracts",
+        ),
+        pytest.param(
+            [_kill(0, [1], [2], [2]), _kill(31_000, [1], [2], [2])],
+            [[2], [2]],
+            id="beyond_horizon_untouched",
+        ),
+    ],
+)
+def test_merge_rule_spark_matches_reference(spark, events, kept_victims):
+    """Each merge rule through both folds: `subset_merge` (Spark) and
+    `merge_fight_group` (Python reference) give the same fights."""
+    expected = _reference_merge(events)
+    assert [list(e[-1]) for e in expected] == kept_victims
+    assert _spark_merge(spark, {1: events})[1] == expected
+
+
+def test_merge_random_groups_spark_matches_reference(spark):
+    """Seeded random groups of 1-14 events — ts ties, kills and deaths,
+    empty victims, subsets, supersets and partial overlaps."""
+    rng = random.Random(20)
+    groups = {}
+    for actor in range(200):
+        groups[actor] = [
+            {
+                "perspective": rng.choice(["kill", "death"]),
+                "ts_ms": rng.choice([0, 5_000, 10_000, 20_000, 31_000, 61_000])
+                + rng.choice([0, 0, 1]),
+                "allies": rng.sample(range(1, 7), rng.randint(1, 3)),
+                "enemies": rng.sample(range(1, 7), rng.randint(0, 3)),
+                "victims": rng.sample(range(1, 7), rng.randint(0, 4)),
+            }
+            for _ in range(rng.randint(1, 14))
+        ]
+    got = _spark_merge(spark, groups)
+    mismatched = [a for a, evs in groups.items() if got[a] != _reference_merge(evs)]
+    assert mismatched == []
+
+
+def test_merge_tie_order_is_total(spark):
+    """Two kills at one ts whose victims partially overlap: the result
+    depends on which folds first. Whatever order the rows arrive in and
+    however the group is shuffled, the fold sees one sorted order."""
+    tie = [_kill(0, [1], [2, 3], [2, 3]), _kill(0, [1], [3, 4], [3, 4])]
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    outputs = []
+    try:
+        for partitions in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+            for events in (tie, tie[::-1]):
+                outputs.append(_spark_merge(spark, {1: events})[1])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert outputs == [_reference_merge(tie)] * 4
+
+
+def test_parse_fights_persists_nothing(spark):
+    """The fight pipeline owns no cache: running it leaves no persisted
+    RDD behind."""
+    from test_cache import _persisted_rdds
+
+    kills = spark.createDataFrame(
+        [(1, 0, 1, 5, [2]), (1, 4_000, 5, 2, []), (1, 9_000, 2, 6, [1])],
+        "match_id BIGINT, ts_ms BIGINT, killer BIGINT, victim BIGINT, "
+        "assists ARRAY<BIGINT>",
+    )
+    before = _persisted_rdds(spark)
+    fight_ops.parse_fights(kills).write.format("noop").mode("overwrite").save()
+    assert not _persisted_rdds(spark) - before
 
 
 def test_fight_merge_fixture_oracle(spark):
