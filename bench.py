@@ -3,9 +3,10 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Execution is forced with the noop sink (full pipeline runs, nothing is
-collected to the driver) so timings measure the distributed plan, not
-result serialization.
+Each query runs through `session.run_query` with the noop sink (full
+pipeline runs, nothing is collected to the driver) so timings measure
+the distributed plan, not result serialization; BENCH_FULL.json keeps
+the record of each query's fastest run under ``records``.
 """
 
 from __future__ import annotations
@@ -13,11 +14,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from lol_data_collection_system_spark.session import get_spark, reset  # noqa: E402
+from lol_data_collection_system_spark import session  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
@@ -54,12 +54,8 @@ def main() -> None:
         )
         sys.exit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = get_spark(
-        app_name="lol-dcs-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
+    cpus = session.default_parallelism()
+    spark = session.get_spark(app_name="lol-dcs-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entry_mod.queries()
@@ -75,32 +71,26 @@ def main() -> None:
     # concurrent verification runs sharing the cores — observed inflating
     # single-pass wall-clock up to ~2.6×).
     #
-    # Each pass additionally records the split between CONSTRUCTION (the
-    # query-function call: py4j expression building, Catalyst analysis,
-    # any eager training actions) and EXECUTION (the noop write of the
-    # final plan). The split is measurement-only — t0→t2 is the same
-    # total the bench always reported; t1 is just read between the two
-    # phases — and exists because at sf0.1 many per-query totals are
-    # driver-construction-bound, which makes total-time core-scaling
-    # ratios ≈1 regardless of plan shape (VERDICT r11 "scaling blind
-    # spot"). Exec-only mins are the signal that scales with cores.
-    timings: dict[str, float] = {}
-    builds: dict[str, float] = {}
-    execs: dict[str, float] = {}
+    # Each record splits CONSTRUCTION (query-function call: py4j, Catalyst,
+    # eager training actions) from EXECUTION (the noop sink): at sf0.1 many
+    # totals are construction-bound, so total-time core-scaling ratios are
+    # ≈1 whatever the plan (VERDICT r11 "scaling blind spot"); exec-only
+    # times scale with cores. The record of each query's fastest run is kept.
+    best: dict[str, dict] = {}
+
+    def run_s(record: dict) -> float:
+        return record["build_s"] + record["exec_s"]
+
+    def run(name: str) -> None:
+        record, _ = session.run_query(spark, name, queries[name], sf_dir)
+        if name not in best or run_s(record) < run_s(best[name]):
+            best[name] = record
+
     for _pass in range(3):
         if _pass:
-            reset(spark)  # a later pass rebuilds the shared frames
+            session.reset(spark)  # a later pass rebuilds the shared frames
         for name in names:
-            t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            elapsed = round(t2 - t0, 3)
-            timings[name] = min(timings.get(name, elapsed), elapsed)
-            b, e = round(t1 - t0, 3), round(t2 - t1, 3)
-            builds[name] = min(builds.get(name, b), b)
-            execs[name] = min(execs.get(name, e), e)
+            run(name)
 
     # Sub-second queries are the most contention-hostage: a concurrent
     # verification run stealing cores for 300 ms doubles a 0.4 s query,
@@ -110,19 +100,14 @@ def main() -> None:
     # — cheap by construction (they are sub-second) and spread across
     # time, so at least one sample usually lands in a quiet window.
     for _pass in range(3):
-        reset(spark)
+        session.reset(spark)
         for name in names:
-            if timings[name] >= 1.0:
-                continue
-            t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            t1 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t2 = time.perf_counter()
-            timings[name] = min(timings[name], round(t2 - t0, 3))
-            builds[name] = min(builds[name], round(t1 - t0, 3))
-            execs[name] = min(execs[name], round(t2 - t1, 3))
+            if run_s(best[name]) < 1.0:
+                run(name)
 
+    timings = {n: round(run_s(r), 3) for n, r in best.items()}
+    builds = {n: round(r["build_s"], 3) for n, r in best.items()}
+    execs = {n: round(r["exec_s"], 3) for n, r in best.items()}
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # The full per-query map (190+ entries, one giant line) overflows the
@@ -163,7 +148,13 @@ def main() -> None:
     }
     with open(full_path, "w") as f:
         json.dump(
-            {**out, "queries": timings, "build": builds, "exec": execs},
+            {
+                **out,
+                "queries": timings,
+                "build": builds,
+                "exec": execs,
+                "records": best,
+            },
             f,
             indent=0,
             sort_keys=True,

@@ -28,9 +28,9 @@ standard BPE semantics — where a shared-delimiter encoding ("|a|a|a|a|"
 with pattern "|a|a|") consumes the boundary and under-merges. Replace
 semantics are identical in Spark's UTF8String.replace and DuckDB's
 replace, which makes the whole training loop oracle-checkable.
-Rounds are bounded (`n_merges`), state is lazily localCheckpoint'ed per
-round to keep lineage flat, exactly like the Lloyd loop in
-``similarity.kmeans_assign``.
+Rounds are bounded (`n_merges`), state is localCheckpoint'ed (which runs
+jobs when called) per round to keep lineage flat, exactly like the Lloyd
+loop in ``similarity.kmeans_assign``.
 """
 
 from __future__ import annotations

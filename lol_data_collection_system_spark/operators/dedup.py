@@ -306,24 +306,16 @@ def _candidate_pairs_from_signatures(
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs agreeing on ≥1 band of `sig`.
 
-    The banded frame is lazily checkpointed before the self-join: the
-    two sides project different aliases BELOW the exchange, so Spark's
+    The banded frame is persisted before the self-join: the two sides
+    project different aliases BELOW the exchange, so Spark's
     ReuseExchange cannot deduplicate them and the whole signature
     subtree (md5 + n permutations + min-aggregate over every shingle)
     would otherwise execute once PER SIDE (measured at sf0.1: the two
     ~12 s-executor signature stages of `lsh_pair_quality` collapse to
-    one). The checkpoint is (id, band_idx, band_hash) — n_bands rows
-    per document, far smaller than the shingle input it replaces.
-
-    Deployment note (ADVICE r11): `localCheckpoint` is NON-REPLICATED —
-    executor storage, lineage truncated — so on a real cluster an
-    executor loss after materialization fails the job (Spark recomputes
-    from lineage it no longer has), and repeated calls retain executor
-    blocks until the RDD is GC'd driver-side. That trade is right for
-    this short-lived query-scoped frame (single-machine bench + one
-    consumer plan); a long-lived session or cluster deployment should
-    prefer `df.persist()` + explicit `unpersist()` or a reliable
-    `checkpoint()` directory."""
+    one). The cache is (id, band_idx, band_hash) — n_bands rows per
+    document, far smaller than the shingle input it replaces. Nothing
+    here unpersists it: `session.run_query` releases it once the
+    query's sink has finished."""
     banded = sig.select(
         F.col(id_col),
         F.posexplode(_band_hashes(n_hashes, band_size)).alias(

@@ -23,10 +23,10 @@ Scale notes
   the only driver action is the convergence count.
 - `localCheckpoint` after each round truncates lineage: without it the
   plan doubles per iteration and Catalyst analysis time explodes by
-  round ~10. Checkpoints are LAZY (`eager=False`): each round's
-  convergence-sum action is what materializes that round's frame, so a
-  round costs one job, not a checkpoint job plus an aggregate job —
-  measured 1.34 s -> 1.09 s warm for the 6-round sf0.1 loop.
+  round ~10. `eager=False` is NOT lazy on PySpark 4.1.2: the call runs
+  the frame's stages before it returns, so each checkpoint costs jobs at
+  construction (measured 1.34 s -> 1.09 s warm for the 6-round sf0.1
+  loop when `eager=False` went in).
 - Labels are monotonically non-increasing, so convergence is guaranteed
   and checkable by counting strict decreases (0 = fixed point).
 """
@@ -50,7 +50,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    driver_edge_bound: int | None = CC_DRIVER_EDGE_BOUND,
 ) -> DataFrame:
     """(node, component_id) for every node that appears in `edges`;
     component_id = the minimum node id in the component.
@@ -68,14 +67,15 @@ def connected_components(
     integral ordering, and Python str comparison is codepoint order,
     which equals Spark's UTF-8 binary string ordering) and the result
     returns as a local relation. One driver action replaces the
-    seed-sum + per-round convergence actions. Edge sets past the bound
-    — the at-scale regime — fall through to the distributed loop
+    seed-sum + per-round convergence actions. Edge sets past
+    `CC_DRIVER_EDGE_BOUND` (read at call time; 0 disables the fast
+    path) — the at-scale regime — fall through to the distributed loop
     unchanged."""
     from pyspark.sql.types import IntegralType, NumericType, StringType
 
     id_type = edges.schema[src].dataType
     if (
-        driver_edge_bound
+        CC_DRIVER_EDGE_BOUND
         and isinstance(id_type, (IntegralType, StringType))
         and isinstance(
             edges.schema[dst].dataType, (IntegralType, StringType)
@@ -84,11 +84,11 @@ def connected_components(
     ):
         rows = (
             edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .limit(driver_edge_bound + 1)
+            .limit(CC_DRIVER_EDGE_BOUND + 1)
             .collect()
         )
         has_null = any(r["u"] is None or r["v"] is None for r in rows)
-        if len(rows) <= driver_edge_bound and not has_null:
+        if len(rows) <= CC_DRIVER_EDGE_BOUND and not has_null:
             parent: dict[int, int] = {}
 
             def find(x: int) -> int:
@@ -332,8 +332,8 @@ def pagerank(
     directed path folds the dangling sum into the SAME round as a
     broadcast 1-row aggregate joined into the rank update, so either
     way a round is ONE job, not a dangling-collect job plus a rank job.
-    Lineage is truncated per round with a lazy localCheckpoint, same
-    loop discipline as `connected_components`.
+    Lineage is truncated per round with a localCheckpoint (which runs
+    jobs when called), same loop discipline as `connected_components`.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not directed:
@@ -507,8 +507,8 @@ def label_propagation(
     Scale shape (the `pagerank`/`connected_components` discipline):
     per round ONE edge⋈label join + ONE (node, label)-keyed count agg +
     ONE argmax struct-max agg — everything keyed and partial-agg'd;
-    state is (node, label) pairs only; rounds are lazily
-    localCheckpoint'd so the plan stays linear in `iters`. Labels
+    state is (node, label) pairs only; rounds are localCheckpoint'd
+    (jobs at call time) so the plan stays linear in `iters`. Labels
     propagate at one hop per round (`iters` bounds the reach radius,
     matching the CC short-diameter argument for near-dup graphs).
 
@@ -600,9 +600,9 @@ def random_walks(
 
     Per step: ONE frontier⋈edges equi-join + ONE per-walk struct-min
     aggregate — frontier stays one row per walk, so step cost is
-    O(edges touched), state O(nodes). Steps are lazily checkpointed
-    (the `pagerank` discipline: the plan would otherwise double per
-    step, and the symmetrized edge frame is reused by every step).
+    O(edges touched), state O(nodes). Steps are localCheckpoint'd, with
+    jobs at call time (the `pagerank` discipline: the plan would
+    otherwise double per step, and every step reuses the edge frame).
 
     Returns (walk_id, step, node): step 0 is the start node.
     """

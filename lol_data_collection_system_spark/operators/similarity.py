@@ -1755,8 +1755,9 @@ def kcenter_select(
       joins back as a broadcast single row. No ``collect()`` in the loop.
     - Picked points set ``best_sim = 2.0`` (> any cosine), excluding them
       from later argmins without an anti-join.
-    - Rounds are lazily localCheckpoint'd: k is small and fixed, and the
-      update→argmin cycle would otherwise double the plan per round.
+    - Rounds are localCheckpoint'd, which runs jobs at call time: k is
+      small and fixed, and the update→argmin cycle would otherwise
+      double the plan per round.
 
     Determinism: cosines round to 6 dp and ties break toward the smaller
     id (the family's standard contract), so the selection is reproducible

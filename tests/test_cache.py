@@ -9,6 +9,7 @@ import os
 import time
 
 import pytest
+from test_oracle_parity import SF_DIR
 
 from lol_data_collection_system_spark.sources import materialize_summary
 
@@ -86,16 +87,22 @@ def _persisted_rdds(spark) -> set[int]:
     return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
-def test_shared_registry_lifetime(spark):
+@pytest.mark.parametrize(
+    "name, key",
+    [("fight_enrichment", "kills"), ("bpe_merge_table", "bpe_merges")],
+    ids=["fight_enrichment", "bpe_merge_table"],
+)
+def test_shared_registry_lifetime(spark, name, key):
     """One build per session, hits after that, and `reset` releases
-    every persisted frame the registry holds."""
+    every persisted frame the registry holds and every RDD its build
+    persisted or checkpointed (the BPE training rounds)."""
     import __spark_entry__ as entry_mod
 
     from lol_data_collection_system_spark import session
 
     sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    key = ("kills", sf)
-    q = entry_mod.queries()["fight_enrichment"]
+    key = (key, sf)
+    q = entry_mod.queries()[name]
     session.reset(spark)
     before = _persisted_rdds(spark)
     builds0, hits0 = session.builds[key], session.hits[key]
@@ -110,6 +117,86 @@ def test_shared_registry_lifetime(spark):
     assert not _persisted_rdds(spark) - before
     app = spark.sparkContext.applicationId
     assert not [slot for slot in session._registry if slot[0] == app]
+
+
+def test_run_query_record_schema(spark):
+    import __spark_entry__ as entry_mod
+
+    from lol_data_collection_system_spark.session import run_query
+
+    sf = SF_DIR
+    name = "fight_enrichment"
+    record, result = run_query(spark, name, entry_mod.queries()[name], sf)
+    assert result is None
+    assert set(record) == {
+        "name", "sink", "build_s", "exec_s", "catalyst", "jobs", "shared",
+        "released",
+    }
+    assert (record["name"], record["sink"]) == (name, "noop")
+    assert all(isinstance(record[k], float) for k in ("build_s", "exec_s"))
+    assert set(record["catalyst"]) == {"analysis", "optimization", "planning"}
+    assert all(isinstance(v, float) for v in record["catalyst"].values())
+    assert set(record["jobs"]) == {"build", "exec"}
+    assert all(
+        isinstance(j, int) for ids in record["jobs"].values() for j in ids
+    )
+    assert record["jobs"]["exec"]
+    assert set(record["shared"]) == {"built", "hit"}
+    assert ("kills", sf) in record["shared"]["built"] + record["shared"]["hit"]
+    assert all(isinstance(i, int) for i in record["released"])
+
+
+def test_run_query_releases_what_the_registry_does_not_own(spark):
+    """pagerank's rounds checkpoint their state; after the sink, only
+    the registry's RDDs may stay persisted."""
+    import __spark_entry__ as entry_mod
+
+    from lol_data_collection_system_spark.session import owned_rdds, run_query
+
+    sf = SF_DIR
+    name = "pagerank_scores"
+    before = _persisted_rdds(spark)
+    record, _ = run_query(spark, name, entry_mod.queries()[name], sf)
+    after = _persisted_rdds(spark)
+    assert record["released"]
+    assert not after & set(record["released"])
+    assert not after - before - owned_rdds(spark)
+
+
+def test_registry_survives_a_release(spark, monkeypatch):
+    """The connected-components rounds behind ("dedup_labels", sf) are
+    checkpoints made while the registry built the key: releasing the
+    first query's caches must leave them for the next consumer, and
+    `reset` must release them."""
+    import __spark_entry__ as entry_mod
+
+    from lol_data_collection_system_spark import session
+    from lol_data_collection_system_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_BOUND", 0)
+    sf = SF_DIR
+    qs = entry_mod.queries()
+    session.reset(spark)
+    before = _persisted_rdds(spark)
+    first, _ = session.run_query(
+        spark, "dedup_components", qs["dedup_components"], sf
+    )
+    assert ("dedup_labels", sf) in first["shared"]["built"]
+    made = _persisted_rdds(spark) - before
+    second, got = session.run_query(
+        spark, "component_canonicals", qs["component_canonicals"], sf,
+        sink="pandas",
+    )
+    assert ("dedup_labels", sf) in second["shared"]["hit"]
+    made |= _persisted_rdds(spark) - before
+    made |= set(first["released"]) | set(second["released"])
+    direct = qs["component_canonicals"](spark, sf).toPandas()
+    assert sorted(map(tuple, got.values.tolist())) == sorted(
+        map(tuple, direct.values.tolist())
+    )
+
+    session.reset(spark)
+    assert not made & _persisted_rdds(spark)
 
 
 @pytest.mark.parametrize(

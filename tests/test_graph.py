@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from lol_data_collection_system_spark.operators import graph
 from lol_data_collection_system_spark.operators.graph import (
     connected_components,
     dedup_clusters,
@@ -41,19 +42,15 @@ def test_components_self_loops_and_dups(spark):
     assert got == [(5, 5), (6, 5)]
 
 
-def test_components_nonconvergence_raises(spark):
+def test_components_nonconvergence_raises(spark, monkeypatch):
     # the distributed loop (driver fast path disabled) must still raise
     # when max_iter rounds don't reach the fixed point
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_BOUND", 0)
     with pytest.raises(RuntimeError):
-        _cc(
-            spark,
-            [(i, i + 1) for i in range(12)],
-            max_iter=2,
-            driver_edge_bound=None,
-        )
+        _cc(spark, [(i, i + 1) for i in range(12)], max_iter=2)
 
 
-def test_components_driver_path_matches_distributed(spark):
+def test_components_driver_path_matches_distributed(spark, monkeypatch):
     # the r11 bounded union-find fast path must agree exactly with the
     # distributed label-propagation loop on every graph shape the suite
     # relies on (chains, triangles, dups, self-loops, singleton pairs)
@@ -62,7 +59,8 @@ def test_components_driver_path_matches_distributed(spark):
         + [(20, 21), (21, 22), (20, 22), (30, 30), (40, 41), (41, 40)]
     )
     fast = _cc(spark, pairs)
-    slow = _cc(spark, pairs, driver_edge_bound=None)
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_BOUND", 0)
+    slow = _cc(spark, pairs)
     assert fast == slow
 
 

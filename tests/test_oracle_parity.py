@@ -5,18 +5,20 @@ column names, and order-insensitive values.
 
 from __future__ import annotations
 
-import math
 import os
+import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
 
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+
+from verify_local import TABLES, _canon, _values_equal  # noqa: E402  (tools/ is not a package)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def _duck(sql: str):
@@ -26,39 +28,6 @@ def _duck(sql: str):
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
     return con.execute(sql).df()
-
-
-def _canon(df_pandas):
-    """Sort columns by name, rows by all values — order-insensitive form."""
-    cols = sorted(df_pandas.columns)
-    out = df_pandas[cols].copy()
-    for c in cols:
-        if out[c].dtype == object:
-            out[c] = out[c].astype(str)
-    return out.sort_values(by=cols, kind="mergesort").reset_index(drop=True)
-
-
-def _values_equal(a, b) -> bool:
-    if a.shape != b.shape:
-        return False
-    for c in a.columns:
-        for x, y in zip(a[c].tolist(), b[c].tolist()):
-            xn = isinstance(x, float) and math.isnan(x)
-            yn = isinstance(y, float) and math.isnan(y)
-            if xn or yn:
-                if not (xn and yn):
-                    return False
-                continue
-            if x is None or y is None:
-                if not (x is None and y is None):
-                    return False
-                continue
-            if isinstance(x, float) or isinstance(y, float):
-                if float(x) != float(y):  # exact: mirrors the driver's hash
-                    return False
-            elif str(x) != str(y):
-                return False
-    return True
 
 
 QUERY_NAMES = sorted(entry_mod.queries().keys())

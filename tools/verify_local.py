@@ -3,6 +3,9 @@
 Runs every ``queries()`` entry against its ``oracle_sql()`` twin on the
 same parquet tables (DuckDB side), compares row count, column names, and
 order-insensitive values, and writes a VERIFY_LOCAL-style JSON artifact.
+Each query runs through `session.run_query` (pandas sink) in a
+`get_spark()` session, so a full sweep leaves only the session
+registry's caches persisted; a line before GREEN reports it.
 
 Usage::
 
@@ -67,24 +70,21 @@ def main() -> int:
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
+
+    from lol_data_collection_system_spark.session import get_spark, owned_rdds, run_query
 
     import __spark_entry__ as entry_mod
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("verify-local")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="verify-local")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     names = sorted(qs) if not args.only else args.only.split(",")
 
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
     results = {}
     n_green = 0
     for name in names:
@@ -98,19 +98,12 @@ def main() -> int:
             "wall_sec_incl_oracle": None,
         }
         try:
-            spark_df = qs[name](spark, args.sf_dir).toPandas()
+            _, spark_df = run_query(spark, name, qs[name], args.sf_dir, sink="pandas")
             row["rows"] = int(spark_df.shape[0])
             if name not in oracles:
                 row["status"] = "NO_ORACLE"
             else:
-                con = duckdb.connect()
-                for t in TABLES:
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"'{args.sf_dir}/{t}.parquet'"
-                    )
                 duck_df = con.execute(oracles[name]).df()
-                con.close()
                 row["oracle_rows"] = int(duck_df.shape[0])
                 row["cols_match"] = sorted(spark_df.columns) == sorted(
                     duck_df.columns
@@ -137,6 +130,10 @@ def main() -> int:
         flag = "ok" if row["status"] == "OK" else "** " + str(row["status"])
         print(f"{name}: {flag} ({row['wall_sec_incl_oracle']}s)", flush=True)
 
+    con.close()
+    persisted = {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+    unowned = len(persisted - owned_rdds(spark))
+    print(f"persisted RDDs at end: {len(persisted)}, not owned by the registry: {unowned}")
     artifact = {"n_queries": len(names), "n_green": n_green, "queries": results}
     if args.out:
         Path(args.out).write_text(json.dumps(artifact))
