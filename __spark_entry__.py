@@ -1165,8 +1165,7 @@ FROM ks, sizes GROUP BY k
 """
 
 
-# Exact per-group percentiles (the exact twin of the GK-sketch quantile
-# family in operators/sketches.py): Spark `percentile` and DuckDB
+# Exact per-group percentiles: Spark `percentile` and DuckDB
 # `quantile_cont` share the p·(n−1) linear-interpolation definition, so
 # a 6-dp round absorbs only last-ulp float noise.
 def q_order_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -101,28 +101,6 @@ def stratified_hash_sample(
     return df.filter(sample_bucket(F.col(key_col), salt) < rate)
 
 
-def weighted_mix(
-    sources: Mapping[str, tuple[DataFrame, float]],
-    key_col: str,
-    salt: str = "",
-) -> DataFrame:
-    """Corpus mixing: hash-sample each named source at its own rate and
-    union with a `mix_source` tag. Sources must be union-compatible.
-    Each source's salt is suffixed with its (delimited) name so identical
-    keys in different sources draw independently — the delimiter keeps
-    (salt='a', source='bc') and (salt='ab', source='c') distinct."""
-    parts = [
-        hash_sample(df, key_col, frac, f"{salt}\x1f{name}").withColumn(
-            "mix_source", F.lit(name)
-        )
-        for name, (df, frac) in sources.items()
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 #: 2^60 — the hash-uniform denominator (15 hex chars of md5).
 _HASH_SPAN = 1 << 60
 
@@ -557,8 +535,8 @@ def interleave_sources(
     GLOBAL position such that reading in position order alternates
     sources as evenly as their sizes allow — the balanced-mix schedule
     a multi-source training run streams (no long single-source runs,
-    unlike a plain hash shuffle, and no rate tables to maintain,
-    unlike `weighted_mix`).
+    unlike a plain hash shuffle, and no per-source rate tables to
+    maintain).
 
     position = within_source_rank * n_sources + source_index, where the
     within-source rank follows the seeded hash order (`md5(salt, id)`)

@@ -1,93 +1,19 @@
-"""Sketch-based approximate aggregation — the cardinality/quantile ops a
-100 TB corpus profile runs where exact answers would shuffle the world.
+"""Sketch-based aggregation — the heavy-hitter and point-frequency
+summaries a 100 TB corpus profile runs where a full vocabulary shuffle
+would move the world.
 
-- `approx_distinct_tokens`: HyperLogLog++ (`approx_count_distinct`)
-  vocabulary size per group. Exact distinct-token counting shuffles
-  every (group, token) pair; the sketch keeps a fixed few-KB state per
-  group and merges map-side — the only viable shape for vocabulary
-  stats over a web-scale corpus.
-- `length_quantiles`: `percentile_approx` (Greenwald-Khanna) document
-  length distribution per group — same fixed-state, mergeable property.
-
-Gating note: sketch outputs are algorithm-specific (Spark's HLL++ and
-DuckDB's HLL give different estimates for the same input), so these ops
-are gated by pytest ERROR-BOUND tests against their exact twins rather
-than a cross-engine value-hash oracle — a hash match is impossible by
-construction, and rows-only driver checks would be weaker than the
-bound tests.
-
-Each function exposes `exact=True` to compute the exact twin with the
-same output schema: the tests' ground truth, and the honest fallback
-when a caller needs exactness at small scale.
+- `frequent_terms`: distributed Misra-Gries candidates, then an exact
+  recount, so the output is exact.
+- `cms_estimates`: a Count-Min sketch with its exact side, so the
+  overestimate is visible per term.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import tokens
-
-#: approx_count_distinct rsd: 1.6% standard error (HLL++ p=14-ish state).
-DEFAULT_RSD = 0.016
-
-
-def approx_distinct_tokens(
-    docs: DataFrame,
-    by: str = "source",
-    text_col: str = "text",
-    rsd: float = DEFAULT_RSD,
-    exact: bool = False,
-) -> DataFrame:
-    """(group, n_docs, vocab_size): per-group document count and
-    (approximate) distinct-token vocabulary size.
-
-    Plan: explode tokens → ONE aggregation with a mergeable HLL state —
-    partial sketches combine map-side, so the shuffle carries one sketch
-    per (partition, group), never the token stream. The exact twin
-    (`exact=True`) pays the full (group, token) distinct shuffle."""
-    tok = docs.select(
-        F.col(by), F.explode(tokens(F.col(text_col))).alias("tok")
-    )
-    vocab = (
-        F.count_distinct("tok")
-        if exact
-        else F.approx_count_distinct("tok", rsd)
-    )
-    per_doc = docs.groupBy(by).agg(F.count(F.lit(1)).alias("n_docs"))
-    return per_doc.join(
-        tok.groupBy(by).agg(vocab.alias("vocab_size")), by
-    )
-
-
-def length_quantiles(
-    docs: DataFrame,
-    by: str = "source",
-    text_col: str = "text",
-    probs: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
-    accuracy: int = 10_000,
-    exact: bool = False,
-) -> DataFrame:
-    """Per-group document-length quantiles (token counts).
-
-    `percentile_approx` keeps a bounded GK summary per group (mergeable,
-    map-side combined); `exact=True` switches to `percentile`, which
-    buffers every value — the small-data ground truth only."""
-    n_tok = F.size(tokens(F.col(text_col))).cast("double")
-    lengths = docs.select(F.col(by), n_tok.alias("n_tok"))
-    parr = F.array(*[F.lit(p) for p in probs])
-    q = (
-        F.percentile("n_tok", parr)
-        if exact
-        else F.percentile_approx("n_tok", parr, F.lit(accuracy))
-    )
-    out = lengths.groupBy(by).agg(q.alias("_q"))
-    cols = [F.col(by)] + [
-        F.col("_q")[i].alias(f"p{int(p * 100)}") for i, p in enumerate(probs)
-    ]
-    return out.select(*cols)
 
 
 def frequent_terms(

@@ -19,37 +19,6 @@ from pyspark.sql import types as T
 # ---------------------------------------------------------------------------
 # Relational spine (models.py)
 # ---------------------------------------------------------------------------
-REGION = T.StructType(
-    [
-        T.StructField("region_id", T.LongType()),
-        T.StructField("name", T.StringType()),
-    ]
-)
-
-GAME_VERSION = T.StructType(
-    [
-        T.StructField("game_version_id", T.LongType()),
-        T.StructField("semver", T.StringType()),
-    ]
-)
-
-SUMMONER = T.StructType(
-    [
-        T.StructField("summoner_id", T.LongType()),
-        T.StructField("account_id", T.LongType()),
-        T.StructField("region_id", T.LongType()),
-        T.StructField("latest_name", T.StringType()),
-    ]
-)
-
-SUMMONER_TIER_HISTORY = T.StructType(
-    [
-        T.StructField("summoner_id", T.LongType()),
-        T.StructField("at_time", T.TimestampType()),
-        T.StructField("tier", T.StringType()),
-    ]
-)
-
 HISTORICAL_MATCH = T.StructType(
     [
         T.StructField("match_id", T.LongType()),
@@ -72,14 +41,6 @@ MATCHLIST_ENTRY = T.StructType(
         T.StructField("lane", T.StringType()),
         T.StructField("role", T.StringType()),
         T.StructField("game_creation_ms", T.LongType()),
-    ]
-)
-
-ITEM_DIM = T.StructType(
-    [
-        T.StructField("semver", T.StringType()),
-        T.StructField("item_id", T.LongType()),
-        T.StructField("gold_total", T.LongType()),
     ]
 )
 

@@ -93,7 +93,28 @@ def _persisted(spark: SparkSession) -> set[int]:
     return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
-def _unpersist(spark: SparkSession, ids: Iterable[int]) -> None:
+def _release(spark: SparkSession, ids: Iterable[int]) -> None:
+    """Unpersist the RDDs ``ids``. A DataFrame cache among them also
+    leaves Spark's cache manager: an entry whose blocks are gone would
+    otherwise serve a later `persist()` of the same plan, which then
+    recomputes on every read. Spark lists the entries only in the
+    manager's private ``cachedData`` field, read through reflection."""
+    ids = set(ids)
+    if not ids:
+        return
+    jspark = spark._jsparkSession
+    cache = jspark.sharedState().cacheManager()
+    field = cache.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cache)
+    for i in range(entries.size()):
+        entry = entries.apply(i)
+        builder = entry.cachedRepresentation().cacheBuilder()
+        if (
+            builder.isCachedColumnBuffersLoaded()
+            and builder.cachedColumnBuffers().id() in ids
+        ):
+            cache.uncacheQuery(jspark, entry.plan(), False, False)
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     for i in ids:
         rdd = rdds.get(i)
@@ -157,7 +178,7 @@ def reset(spark: SparkSession) -> None:
         value, built = _registry.pop(slot)
         for df in _frames(value):
             df.unpersist()
-        _unpersist(spark, built)
+        _release(spark, built)
 
 
 # ---------------------------------------------------------------------------
@@ -177,7 +198,8 @@ def run_query(
     between the spans), ``jobs`` per tag, the registry keys ``shared``
     built and hit, and the RDD ids ``released``: after the sink (or a
     failure), every RDD persisted or checkpointed during the call that
-    the registry does not own is unpersisted."""
+    the registry does not own is unpersisted, and a DataFrame cache
+    among them leaves Spark's cache manager."""
     if sink not in ("noop", "pandas"):
         raise ValueError(f"unknown sink {sink!r}")
     sc = spark.sparkContext
@@ -211,7 +233,7 @@ def run_query(
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         released = _persisted(spark) - before - owned_rdds(spark)
-        _unpersist(spark, released)
+        _release(spark, released)
     return {
         "name": name,
         "sink": sink,

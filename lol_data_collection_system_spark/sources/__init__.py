@@ -2,14 +2,13 @@
 
 from .cache import materialize_summary
 from .snapshot import create_snapshot, load_snapshot, snapshot_status
-from .tables import TABLE_NAMES, load_table, load_tables, register_views
+from .tables import TABLE_NAMES, load_table, register_views
 
 __all__ = [
     "TABLE_NAMES",
     "create_snapshot",
     "load_snapshot",
     "load_table",
-    "load_tables",
     "materialize_summary",
     "register_views",
     "snapshot_status",

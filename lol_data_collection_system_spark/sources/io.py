@@ -5,8 +5,9 @@ Reference telemetry flows: append-only ratelimit CSV logs written per
 observation (`mysql_requesthistory_checking.py:89-97`) and re-parsed by
 globbing a directory (`monitor_gathering.py:24-31`); JSON result dumps
 (`find_recurrent_delta_across_n_games.py:203`, `match_modeling.py:313`).
-Spark: schema'd csv/json readers (a directory of files is an implicit
-union — X5) and declarative writers.
+Spark: a schema'd csv reader (a directory of files is an implicit
+union — X5); the CSV and JSON sinks are plain `df.write.csv`/`.json`
+calls at the caller.
 
 Match-store layout: `partitionBy(region, major_minor)` mirrors the
 reference's dominant filter axes (tier/semver/region —
@@ -40,11 +41,6 @@ def read_ratelimit_logs(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.csv(path, schema=RATELIMIT_LOG, header=False)
 
 
-def write_ratelimit_log(df: DataFrame, path: str, mode: str = "append") -> None:
-    """S8: telemetry CSV sink."""
-    df.write.mode(mode).csv(path)
-
-
 def major_minor(semver_col) -> "F.Column":
     """'8.11.1.123' → '8.11' — the version-prefix normalization every
     reference comparison uses (`utils.py:16-23`, P9)."""
@@ -68,10 +64,6 @@ def write_match_store(
         .partitionBy(region_col, "major_minor")
         .parquet(path)
     )
-
-
-def read_match_store(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def write_clustered(

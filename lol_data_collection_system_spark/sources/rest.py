@@ -9,9 +9,11 @@ classify 429s into service/method/app limits and honor Retry-After
 Spark-first redesign:
 - **Local token windows, partitioned budget.** Each fetch task gets a
   private sliding-window limiter with `1/parallelism` of the global
-  quota — no shared state, no locks, same aggregate ceiling. (The
-  reference's global-lock design is exactly what cannot scale past one
-  process.)
+  quota — no shared state, no locks, same aggregate ceiling. The split
+  happens in `parallel_fetch`, which fixes the partition count itself:
+  a caller's frame (an AQE-sized anti-join, say) has no partition count
+  known when `make_source` is written. (The reference's global-lock
+  design is exactly what cannot scale past one process.)
 - **Transport is injectable** (`Callable[[str], Response]`): tests and
   offline runs plug a fake; production plugs urllib/requests. No network
   library is imported here.
@@ -176,12 +178,25 @@ def parallel_fetch(
     url_col: str = "url",
 ) -> DataFrame:
     """Partition-parallel hydration via mapInPandas: each partition
-    builds its own RestSource (transport + scaled limiter) on the
-    executor — `make_source` must be picklable and is invoked once per
-    partition, so limiter state never crosses partitions."""
+    builds its own RestSource on the executor — `make_source` must be
+    picklable and is invoked once per partition, so limiter state never
+    crosses partitions.
+
+    `make_source` builds its limiter with the GLOBAL quota; the split is
+    made here. The URLs are repartitioned to n = `defaultParallelism`
+    partitions (AQE never coalesces an explicit `repartition(n)`), and
+    each partition swaps in a limiter with `scaled_limits(limits, n)`,
+    keeping the source's clock and sleeper. n partitions running at once
+    then stay under the global ceiling, except that a quota smaller than
+    n still grants each partition one request per window."""
+    n = urls_df.sparkSession.sparkContext.defaultParallelism
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         source = make_source()
+        full = source.limiter
+        source.limiter = SlidingWindowLimiter(
+            scaled_limits(full.limits, n), full.clock, full.sleeper
+        )
         for pdf in batches:
             out = {"url": [], "status": [], "body": []}
             for u in pdf[url_col]:
@@ -191,7 +206,7 @@ def parallel_fetch(
                 out["body"].append(body)
             yield pd.DataFrame(out)
 
-    return urls_df.mapInPandas(run, FETCH_SCHEMA)
+    return urls_df.repartition(n).mapInPandas(run, FETCH_SCHEMA)
 
 
 def hydrate_missing(

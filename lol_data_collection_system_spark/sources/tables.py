@@ -60,10 +60,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
     """Register every table as a temp view so queries can be declared in
     pure SQL (S2: `spark.sql(...)` over views — the reference's

@@ -3,7 +3,7 @@
 The reference's 'streaming' is polling loops + idempotent DB upserts
 coordinated by table locks; here the same semantics are declared:
 
-- `polling`    — poll-until-event completion detection + trigger loop (T1)
+- `polling`    — poll-until-event completion detection (T1)
 - `ratelimit`  — sliding-window request accounting vs quota (T5)
 - `upsert`     — two-phase latest-wins upsert + exactly-once claim (T3/T4)
 - `sessions`   — watermarked session windows for fight grouping (T8)
@@ -25,7 +25,7 @@ from .dedup import (
     near_dedup_stream,
 )
 from .heartbeat import HeartbeatListener, heartbeats_df, install_heartbeats
-from .polling import poll_until_event, start_polling_query
+from .polling import poll_until_event
 from .ratelimit import sliding_quota_counts
 from .rollup import (
     hourly_rollup_stream,
@@ -47,7 +47,6 @@ __all__ = [
     "heartbeats_df",
     "install_heartbeats",
     "poll_until_event",
-    "start_polling_query",
     "sliding_quota_counts",
     "streaming_sessions",
     "latest_wins_upsert_sink",

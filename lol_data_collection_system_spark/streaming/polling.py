@@ -22,7 +22,7 @@ detection is a per-key stateful operator (`applyInPandasWithState`):
   reclaimed without re-emitting.
 
 The polling *cadence* itself belongs to the trigger, not the operator:
-``start_polling_query`` wires the standard processingTime trigger (the
+the caller starts the query with a processingTime trigger (the
 reference's 5-minute sleep) so each micro-batch re-reads whatever new
 poll responses the source produced. State is checkpointed and partitioned
 by key — a million in-flight matches track horizontally, not in a driver
@@ -123,20 +123,3 @@ def poll_until_event(
         GroupStateTimeout.ProcessingTimeTimeout,
     )
 
-
-def start_polling_query(
-    completions: DataFrame,
-    sink,
-    checkpoint: str,
-    poll_interval: str = "5 minutes",
-):
-    """Start the poll loop: re-trigger every `poll_interval` (the
-    reference's fixed re-check cadence) and hand each micro-batch of
-    completion events to `sink(batch_df, batch_id)`."""
-    return (
-        completions.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=poll_interval)
-        .start()
-    )

@@ -163,6 +163,34 @@ def test_run_query_releases_what_the_registry_does_not_own(spark):
     assert not after - before - owned_rdds(spark)
 
 
+def test_released_cache_leaves_the_cache_manager(spark):
+    """lsh_pair_quality persists a frame while it builds. Releasing that
+    cache must also drop its cache-manager entry: otherwise the next
+    call's `persist()` reuses the entry, whose blocks are gone, caches
+    nothing and recomputes on every read."""
+    import __spark_entry__ as entry_mod
+
+    from lol_data_collection_system_spark import session
+
+    sf = SF_DIR
+    name = "lsh_pair_quality"
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    app = spark.sparkContext.applicationId
+
+    def registry_frames():
+        return sum(
+            len(session._frames(value))
+            for (slot_app, _), (value, _) in session._registry.items()
+            if slot_app == app
+        )
+
+    for call in range(2):
+        entries0, frames0 = cache.numCachedEntries(), registry_frames()
+        record, _ = session.run_query(spark, name, entry_mod.queries()[name], sf)
+        assert record["released"], call
+        assert cache.numCachedEntries() == entries0 + registry_frames() - frames0
+
+
 def test_registry_survives_a_release(spark, monkeypatch):
     """The connected-components rounds behind ("dedup_labels", sf) are
     checkpoints made while the registry built the key: releasing the

@@ -1,14 +1,19 @@
-"""Dead-code guard: every top-level function and class in the package,
-and every private constant, must be referenced somewhere — by the
-package itself, the query registry in ``__spark_entry__.py``, the
-tests, the tools, the benchmark (``perfbench/``, ``bench.py``). A
-reference is a loaded ``Name``, an ``Attribute`` or an imported name;
-assigning a name is not a use, and neither is being listed in
-``__all__`` (a string is not a use). Pure AST, no Spark."""
+"""Dead-code guard: every top-level function, class and constant in the
+package must be referenced somewhere — by the package itself, the query
+registry in ``__spark_entry__.py``, the tests, the tools, the benchmark
+(``perfbench/``, ``bench.py``). A reference is a loaded ``Name`` or an
+``Attribute``. Assigning a name is not a use, importing or re-exporting
+it is not a use, and neither is being listed in ``__all__`` (a string
+is not a use).
+
+A public function that only tests reference has no caller in the
+program; it must be the reference implementation of a SURVEY §2 row, so
+its name must appear in COVERAGE.md. Pure AST, no Spark."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -22,16 +27,12 @@ def _referenced(tree: ast.AST) -> set[str]:
             names.add(node.id)
         elif isinstance(node, ast.Attribute):
             names.add(node.attr)
-        elif isinstance(node, (ast.Import, ast.ImportFrom)):
-            names.update(a.name.rsplit(".", 1)[-1] for a in node.names)
     return names
 
 
 def _guarded(node: ast.stmt) -> list[str]:
     """Names a top-level statement defines that must have a reader:
-    functions and classes, and assigned constants when private. Public
-    constants are exempt — the declared schemas in ``schemas.py``
-    document the data model whether or not a query reads them."""
+    functions, classes and assigned constants (dunders excepted)."""
     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
         return [node.name]
     if isinstance(node, ast.Assign):
@@ -40,35 +41,64 @@ def _guarded(node: ast.stmt) -> list[str]:
         targets = [node.target]
     else:
         return []
-    return [
-        t.id
-        for t in targets
-        if isinstance(t, ast.Name)
-        and t.id.startswith("_")
-        and not t.id.endswith("__")
-    ]
+    return [t.id for t in targets if isinstance(t, ast.Name) and not t.id.endswith("__")]
 
 
-def unreferenced_definitions() -> list[str]:
-    defs: list[tuple[str, str]] = []
+def _scan() -> tuple[list[tuple[str, str, bool]], set[str], set[str]]:
+    """The package's definitions as ``(module, name, is_public_function)``,
+    the names the program references and the names the tests reference."""
+    defs: list[tuple[str, str, bool]] = []
     used: set[str] = set()
     for path in sorted(PACKAGE.rglob("*.py")):
         tree = ast.parse(path.read_text(), filename=str(path))
         module = ".".join(path.relative_to(ROOT).with_suffix("").parts)
-        defs.extend((module, name) for node in tree.body for name in _guarded(node))
+        for node in tree.body:
+            public_fn = isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ) and not node.name.startswith("_")
+            defs.extend((module, name, public_fn) for name in _guarded(node))
         used |= _referenced(tree)
     # Outside the package only files that mention a still-unreferenced
     # name can change the verdict; parsing just those keeps this fast.
-    others = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
-    for sub in ("tests", "tools", "perfbench"):
-        others.extend(sorted((ROOT / sub).rglob("*.py")))
-    for path in others:
-        pending = {name for _, name in defs if name not in used}
-        text = path.read_text()
-        if any(name in text for name in pending):
-            used |= _referenced(ast.parse(text, filename=str(path)))
-    return sorted(f"{m}.{name}" for m, name in defs if name not in used)
+    program = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    for sub in ("tools", "perfbench"):
+        program.extend(sorted((ROOT / sub).rglob("*.py")))
+
+    def fold(paths: list[Path], into: set[str]) -> None:
+        for path in paths:
+            known = used | into
+            pending = {name for _, name, _ in defs if name not in known}
+            text = path.read_text()
+            if any(name in text for name in pending):
+                into |= _referenced(ast.parse(text, filename=str(path)))
+
+    fold(program, used)
+    tested: set[str] = set()
+    fold(sorted((ROOT / "tests").rglob("*.py")), tested)
+    return defs, used, tested
+
+
+def unreferenced_definitions() -> list[str]:
+    defs, used, tested = _scan()
+    return sorted(f"{m}.{n}" for m, n, _ in defs if n not in used | tested)
+
+
+def uncovered_test_only_functions() -> list[str]:
+    defs, used, tested = _scan()
+    coverage = (ROOT / "COVERAGE.md").read_text()
+    return sorted(
+        f"{m}.{n}"
+        for m, n, public_fn in defs
+        if public_fn
+        and n not in used
+        and n in tested
+        and not re.search(rf"\b{re.escape(n)}\b", coverage)
+    )
 
 
 def test_every_definition_is_referenced():
     assert unreferenced_definitions() == []
+
+
+def test_every_test_only_function_is_named_in_coverage():
+    assert uncovered_test_only_functions() == []

@@ -1,6 +1,7 @@
 """Rate-limited REST source tests (T5/T7): sliding-window spacing with a
 fake clock, 429/404/5xx retry classification, and partition-parallel
-fetch through mapInPandas with per-partition limiter state."""
+fetch through mapInPandas with per-partition limiter state and a
+split of the global quota."""
 
 from __future__ import annotations
 
@@ -130,6 +131,45 @@ def test_parallel_fetch_map_in_pandas(spark):
     assert counts == {"ok": 50, "missing": 1}
     one = out.filter(F.col("url") == "doc/7").collect()[0]
     assert json.loads(one.body)["url"] == "doc/7"
+
+
+class _QuotaReportingSource(RestSource):
+    """Answers every URL with the quota its limiter runs under and the
+    partition that fetched it."""
+
+    def fetch(self, url):
+        from pyspark import TaskContext
+
+        return json.dumps(
+            {
+                "partition": TaskContext.get().partitionId(),
+                "quota": [l.max_requests for l in self.limiter.limits],
+            }
+        )
+
+
+_GLOBAL_QUOTA = [RateLimit(1000, 10.0), RateLimit(30, 1.0)]
+
+
+def _quota_source():
+    return _QuotaReportingSource(
+        _fake_transport, SlidingWindowLimiter(list(_GLOBAL_QUOTA))
+    )
+
+
+def test_parallel_fetch_splits_the_global_quota(spark):
+    """`make_source` holds the global quota; whatever the input's
+    partitioning, the partitions parallel_fetch runs together must not
+    exceed it."""
+    urls = spark.createDataFrame(
+        [(f"doc/{i}",) for i in range(40)], ["url"]
+    ).coalesce(1)
+    reports = [json.loads(r.body) for r in parallel_fetch(urls, _quota_source).collect()]
+    n_partitions = len({r["partition"] for r in reports})
+    assert n_partitions > 1
+    for r in reports:
+        for per, full in zip(r["quota"], _GLOBAL_QUOTA):
+            assert per * n_partitions <= full.max_requests
 
 
 def test_hydrate_missing_fetches_only_novel(spark):

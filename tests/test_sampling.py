@@ -10,7 +10,6 @@ from lol_data_collection_system_spark.operators.sampling import (
     deterministic_split,
     hash_sample,
     stratified_hash_sample,
-    weighted_mix,
 )
 
 
@@ -71,22 +70,6 @@ def test_stratified_rates(spark):
     # default rate 0.0 drops unlisted strata entirely
     only_a = stratified_hash_sample(df, "grp", "id", {"a": 0.5})
     assert only_a.filter(F.col("grp") == "b").count() == 0
-
-
-def test_weighted_mix_tags_and_rates(spark):
-    a = spark.range(4_000)
-    b = spark.range(4_000)
-    out = weighted_mix({"wiki": (a, 0.5), "web": (b, 0.1)}, "id", "m")
-    counts = {
-        r["mix_source"]: r["n"]
-        for r in out.groupBy("mix_source").agg(F.count("*").alias("n")).collect()
-    }
-    assert 0.45 * 4_000 < counts["wiki"] < 0.55 * 4_000
-    assert 0.07 * 4_000 < counts["web"] < 0.13 * 4_000
-    # per-source salts: same key draws independently in each source
-    wiki_ids = set(r[0] for r in out.filter(F.col("mix_source") == "wiki").select("id").collect())
-    web_ids = set(r[0] for r in out.filter(F.col("mix_source") == "web").select("id").collect())
-    assert web_ids - wiki_ids  # not a subset — independent draws
 
 
 # ---------------------------------------------------------------------------
