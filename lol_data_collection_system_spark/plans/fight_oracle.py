@@ -24,26 +24,22 @@ on ``(SELECT COUNT(*) FROM events)``, so the same static string works at
 sf0.001 (pytest) and sf0.01 (driver). Generation is cached behind a
 sidecar fingerprint of events.parquet (size + content md5 — mtime-free
 so the committed fixture stays fresh across checkouts, see
-``sources.cache.content_fingerprint``) and re-runs only when the
-testdata changes.
+``plans.fixtures.refresh_fixture``) and re-runs only when the testdata
+changes.
 """
 
 from __future__ import annotations
 
-import json
-import os
-from pathlib import Path
-
 from ..operators.fights import merge_fight_group
+from .fixtures import FIXTURE_DIR, refresh_fixture
 
-_REPO_ROOT = Path(__file__).resolve().parents[2]
-FIXTURE_DIR = _REPO_ROOT / "tests" / "fixtures"
 FIXTURE_PATH = FIXTURE_DIR / "fight_merge_oracle.parquet"
 _META_PATH = FIXTURE_DIR / "fight_merge_oracle.meta.json"
 
-#: sfs the fixture covers. sf0.1 is intentionally absent: the driver's
-#: correctness gate runs at sf0.01 and the O(events × kills) per-match
-#: enrichment loop is pure Python (~100× sf0.01 cost at sf0.1).
+#: sfs this fixture and the history_row fixture cover. sf0.1 is
+#: intentionally absent: the oracle hash gate runs at sf0.01
+#: and the O(events × kills) per-match enrichment loop is pure Python
+#: (~100× sf0.01 cost at sf0.1).
 DEFAULT_SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 
 ORACLE_FIGHT_MERGE = f"""
@@ -139,47 +135,23 @@ def python_reference_pipeline(kills: list[dict]) -> list[tuple]:
     return sorted(out)
 
 
-def _events_fingerprint(sf_dir: str) -> dict | None:
-    """Content fingerprint (size + md5) of events.parquet. Deliberately
-    NOT mtime: the committed fixture must stay fresh on a different
-    checkout/machine where the same bytes carry a different timestamp."""
-    from ..sources.cache import content_fingerprint
-
-    p = Path(sf_dir) / "events.parquet"
-    if not p.exists():
-        return None
-    return content_fingerprint(str(p))
-
-
 def ensure_fight_merge_fixture(sf_dirs: tuple[str, ...] = DEFAULT_SF_DIRS) -> str:
     """(Re)generate the fixture for every existing sf_dir whose
     events.parquet fingerprint changed; return the fixture path."""
+    return refresh_fixture(FIXTURE_PATH, _META_PATH, sf_dirs, _fight_merge_table)
+
+
+def _fight_merge_table(sf_dirs: list[str]):
     import duckdb
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from .domain_queries import _KILLS_SQL
-
-    meta: dict = {}
-    if _META_PATH.exists():
-        try:
-            meta = json.loads(_META_PATH.read_text())
-        except (json.JSONDecodeError, OSError):
-            meta = {}
-
-    live = {d: _events_fingerprint(d) for d in sf_dirs}
-    live = {d: fp for d, fp in live.items() if fp is not None}
-    fresh = FIXTURE_PATH.exists() and all(
-        meta.get(d) == fp for d, fp in live.items()
-    )
-    if fresh:
-        return str(FIXTURE_PATH)
 
     cols: dict[str, list] = {
         "match_id": [], "actor": [], "perspective": [], "ts_ms": [],
         "allies_s": [], "enemies_s": [], "victims_s": [], "n_src_events": [],
     }
-    for sf_dir in live:
+    for sf_dir in sf_dirs:
         con = duckdb.connect()
         con.execute(
             f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'"
@@ -201,8 +173,7 @@ def ensure_fight_merge_fixture(sf_dirs: tuple[str, ...] = DEFAULT_SF_DIRS) -> st
             cols["victims_s"].append(t[6])
             cols["n_src_events"].append(n_src)
 
-    FIXTURE_DIR.mkdir(parents=True, exist_ok=True)
-    table = pa.table(
+    return pa.table(
         {
             "match_id": pa.array(cols["match_id"], pa.int64()),
             "actor": pa.array(cols["actor"], pa.int64()),
@@ -214,8 +185,3 @@ def ensure_fight_merge_fixture(sf_dirs: tuple[str, ...] = DEFAULT_SF_DIRS) -> st
             "n_src_events": pa.array(cols["n_src_events"], pa.int64()),
         }
     )
-    tmp = FIXTURE_PATH.with_suffix(".tmp.parquet")
-    pq.write_table(table, tmp)
-    os.replace(tmp, FIXTURE_PATH)
-    _META_PATH.write_text(json.dumps(live, indent=1))
-    return str(FIXTURE_PATH)

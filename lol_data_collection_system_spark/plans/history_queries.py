@@ -21,9 +21,6 @@ integers — bit-identical across Spark, Python, and DuckDB.
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +28,8 @@ from ..operators.fights import merge_fight_group
 from ..session import shared
 from ..sources import load_table
 from . import history as history_plan
+from .fight_oracle import DEFAULT_SF_DIRS
+from .fixtures import FIXTURE_DIR, refresh_fixture
 
 N_ACCOUNTS = 20
 N_CHAMPS = 9
@@ -39,11 +38,8 @@ WEEK_MS = history_plan.WEEK_MS
 MAX_WEEKS = 3
 MAX_GAMES = 40
 
-_REPO_ROOT = Path(__file__).resolve().parents[2]
-FIXTURE_DIR = _REPO_ROOT / "tests" / "fixtures"
 FIXTURE_PATH = FIXTURE_DIR / "history_row_oracle.parquet"
 _META_PATH = FIXTURE_DIR / "history_row_oracle.meta.json"
-DEFAULT_SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
 
 #: per-game stat closed forms over g = event_id (all integer-valued —
 #: sums stay exact in double, so cross-engine means are bit-identical).
@@ -395,18 +391,6 @@ def oracle_account_row(account_id: int, entries: list[tuple[int, int]]) -> dict:
     return out
 
 
-def _events_fingerprint(sf_dir: str) -> dict | None:
-    """Content fingerprint (size + md5), NOT mtime — see
-    fight_oracle._events_fingerprint: the committed fixture must stay
-    fresh on a different checkout/machine with different timestamps."""
-    from ..sources.cache import content_fingerprint
-
-    p = Path(sf_dir) / "events.parquet"
-    if not p.exists():
-        return None
-    return content_fingerprint(str(p))
-
-
 ORACLE_HISTORY_ROW = f"""
 SELECT * EXCLUDE (n_src_events)
 FROM read_parquet('{FIXTURE_PATH}')
@@ -419,25 +403,15 @@ def ensure_history_row_fixture(
 ) -> str:
     """(Re)generate the fixture for every existing sf_dir whose
     events.parquet fingerprint changed; return the fixture path."""
+    return refresh_fixture(FIXTURE_PATH, _META_PATH, sf_dirs, _history_row_table)
+
+
+def _history_row_table(sf_dirs: list[str]):
     import duckdb
     import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    meta: dict = {}
-    if _META_PATH.exists():
-        try:
-            meta = json.loads(_META_PATH.read_text())
-        except (json.JSONDecodeError, OSError):
-            meta = {}
-    live = {d: _events_fingerprint(d) for d in sf_dirs}
-    live = {d: fp for d, fp in live.items() if fp is not None}
-    if FIXTURE_PATH.exists() and all(
-        meta.get(d) == fp for d, fp in live.items()
-    ):
-        return str(FIXTURE_PATH)
 
     rows: list[dict] = []
-    for sf_dir in live:
+    for sf_dir in sf_dirs:
         con = duckdb.connect()
         recs = con.execute(
             f"SELECT event_id, user_id % {N_ACCOUNTS}, epoch_ms(ts) "
@@ -453,7 +427,6 @@ def ensure_history_row_fixture(
             row["n_src_events"] = n_src
             rows.append(row)
 
-    FIXTURE_DIR.mkdir(parents=True, exist_ok=True)
     names = list(rows[0].keys())
     int_cols = {
         "account_id", "match_time_ms", "num_games",
@@ -464,7 +437,7 @@ def ensure_history_row_fixture(
         "n_src_events",
     }
     str_cols = {"reallane", "lane_priority"}
-    table = pa.table(
+    return pa.table(
         {
             n: pa.array(
                 [r[n] for r in rows],
@@ -474,6 +447,3 @@ def ensure_history_row_fixture(
             for n in names
         }
     )
-    pq.write_table(table, FIXTURE_PATH)
-    _META_PATH.write_text(json.dumps(live))
-    return str(FIXTURE_PATH)

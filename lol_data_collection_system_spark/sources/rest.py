@@ -183,13 +183,17 @@ def parallel_fetch(
     crosses partitions.
 
     `make_source` builds its limiter with the GLOBAL quota; the split is
-    made here. The URLs are repartitioned to n = `defaultParallelism`
-    partitions (AQE never coalesces an explicit `repartition(n)`), and
-    each partition swaps in a limiter with `scaled_limits(limits, n)`,
-    keeping the source's clock and sleeper. n partitions running at once
-    then stay under the global ceiling, except that a quota smaller than
-    n still grants each partition one request per window."""
-    n = urls_df.sparkSession.sparkContext.defaultParallelism
+    made here. The URLs are repartitioned to n partitions, n =
+    `defaultParallelism` capped at the smallest `max_requests` of the
+    global limits (read from one driver-side `make_source()`), so every
+    partition's share is at least one request (AQE never coalesces an
+    explicit `repartition(n)`). Each partition swaps in a limiter with
+    `scaled_limits(limits, n)`, keeping the source's clock and sleeper,
+    and n partitions running at once stay under the global ceiling."""
+    n = min(
+        [urls_df.sparkSession.sparkContext.defaultParallelism]
+        + [l.max_requests for l in make_source().limiter.limits]
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         source = make_source()

@@ -6,6 +6,7 @@ split of the global quota."""
 from __future__ import annotations
 
 import json
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -148,27 +149,36 @@ class _QuotaReportingSource(RestSource):
         )
 
 
-_GLOBAL_QUOTA = [RateLimit(1000, 10.0), RateLimit(30, 1.0)]
-
-
-def _quota_source():
+def _quota_source(quota):
     return _QuotaReportingSource(
-        _fake_transport, SlidingWindowLimiter(list(_GLOBAL_QUOTA))
+        _fake_transport, SlidingWindowLimiter(list(quota))
     )
 
 
-def test_parallel_fetch_splits_the_global_quota(spark):
+@pytest.mark.parametrize(
+    "quota",
+    [
+        [RateLimit(1000, 10.0), RateLimit(30, 1.0)],
+        # fewer requests per window than the session has cores
+        [RateLimit(2, 10.0)],
+    ],
+    ids=["above_cores", "below_cores"],
+)
+def test_parallel_fetch_splits_the_global_quota(spark, quota):
     """`make_source` holds the global quota; whatever the input's
     partitioning, the partitions parallel_fetch runs together must not
     exceed it."""
     urls = spark.createDataFrame(
         [(f"doc/{i}",) for i in range(40)], ["url"]
     ).coalesce(1)
-    reports = [json.loads(r.body) for r in parallel_fetch(urls, _quota_source).collect()]
+    reports = [
+        json.loads(r.body)
+        for r in parallel_fetch(urls, partial(_quota_source, quota)).collect()
+    ]
     n_partitions = len({r["partition"] for r in reports})
     assert n_partitions > 1
     for r in reports:
-        for per, full in zip(r["quota"], _GLOBAL_QUOTA):
+        for per, full in zip(r["quota"], quota):
             assert per * n_partitions <= full.max_requests
 
 

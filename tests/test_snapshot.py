@@ -506,8 +506,11 @@ def test_rollup_pruned_rewrite_preserves_string_partition_values(
     )
 
     def batch(n):
+        # 'a:b/c' is escaped in its directory name (a%3Ab%2Fc): the
+        # merge must find the stored partition under the writer's name
         return spark.createDataFrame(
-            [("0123", float(i)) for i in range(n)], "skey string, v double"
+            [(k, float(i)) for i in range(n) for k in ("0123", "a:b/c")],
+            "skey string, v double",
         )
 
     def partial(df):
@@ -519,9 +522,123 @@ def test_rollup_pruned_rewrite_preserves_string_partition_values(
         checkpoint_token="ck", partition_col="skey",
     )
     sink(batch(3), batch_id=0)
-    sink(batch(2), batch_id=1)  # touches the SAME '0123' partition
-    got = [(r["skey"], r["n"]) for r in read_rollup(spark, store).collect()]
-    assert got == [("0123", 5)]  # one group, verbatim key, merged count
+    sink(batch(2), batch_id=1)  # touches the SAME two partitions
+    got = sorted(
+        (r["skey"], r["n"]) for r in read_rollup(spark, store).collect()
+    )
+    # one group per key, verbatim keys, merged counts
+    assert got == [("0123", 5), ("a:b/c", 5)]
+
+
+def _hour_events(spark, hours, types_per_hour=1):
+    """One event per type for each of `types_per_hour` event types in
+    every hour of `hours` (offsets from 2024-01-01 00:00)."""
+    rows = [
+        (h * 1000 + t, h * 3600 + 60, float(t), f"t{t}")
+        for h in hours
+        for t in range(types_per_hour)
+    ]
+    return spark.createDataFrame(
+        rows, ["event_id", "offset_s", "value", "event_type"]
+    ).selectExpr(
+        "event_id",
+        "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, "
+        "offset_s) AS ts",
+        "value",
+        "event_type",
+    )
+
+
+def test_rollup_batch_reads_only_its_touched_partitions(spark, tmp_path):
+    """A batch that touches one hour of a 40-hour store must not list
+    the store: reading the version directory lists its 40 partition
+    directories with one Spark job of a task per directory (past 32).
+    Reading the touched directories by path keeps every job of the
+    batch small, whatever the store holds."""
+    from lol_data_collection_system_spark.streaming.rollup import (
+        HOURLY_KEYS,
+        HOURLY_MERGE,
+        finalize_hourly,
+        hourly_partial,
+        incremental_rollup_sink,
+        read_rollup,
+    )
+
+    n_hours = 40
+    store = str(tmp_path / "wide_store")
+    sink = incremental_rollup_sink(
+        store, hourly_partial, HOURLY_KEYS, HOURLY_MERGE,
+        checkpoint_token="ck", partition_col="hour_ms",
+    )
+    sink(_hour_events(spark, range(n_hours)), batch_id=0)
+
+    sc = spark.sparkContext
+    group = "rollup_one_touched_hour"
+    sc.setJobGroup(group, "one-hour batch on a 40-hour store")
+    try:
+        sink(_hour_events(spark, [7]), batch_id=1)
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    assert job_ids
+    for jid in job_ids:
+        stages = [
+            tracker.getStageInfo(s) for s in tracker.getJobInfo(jid).stageIds
+        ]
+        n_tasks = sum(s.numTasks for s in stages if s is not None)
+        assert n_tasks < n_hours, f"job {jid} ran {n_tasks} tasks"
+
+    got = finalize_hourly(read_rollup(spark, store))
+    assert got.count() == n_hours
+    assert got.filter("n_events = 2").count() == 1
+
+
+def test_rollup_writes_one_file_per_touched_partition(spark, tmp_path):
+    """The merge is clustered by the partition key inside its one
+    exchange, so each partition a batch writes holds one data file —
+    whatever the shuffle partition count, and with AQE's coalescing off."""
+    from pathlib import Path as _Path
+
+    from lol_data_collection_system_spark.sources.versioned import (
+        current_version,
+    )
+    from lol_data_collection_system_spark.streaming.rollup import (
+        HOURLY_KEYS,
+        HOURLY_MERGE,
+        hourly_partial,
+        incremental_rollup_sink,
+    )
+
+    def data_files(vdir):
+        return {
+            d.name: len(list(d.glob("part-*.parquet")))
+            for d in _Path(vdir).iterdir()
+            if d.is_dir() and d.name.startswith("hour_ms=")
+        }
+
+    conf = {
+        "spark.sql.shuffle.partitions": "7",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        store = str(tmp_path / "clustered_store")
+        sink = incremental_rollup_sink(
+            store, hourly_partial, HOURLY_KEYS, HOURLY_MERGE,
+            checkpoint_token="ck", partition_col="hour_ms",
+        )
+        sink(_hour_events(spark, range(3), types_per_hour=20), batch_id=0)
+        first = data_files(current_version(store)[0])
+        assert len(first) == 3 and set(first.values()) == {1}
+        sink(_hour_events(spark, [1, 4], types_per_hour=20), batch_id=1)
+        second = data_files(current_version(store)[0])
+        assert len(second) == 4 and set(second.values()) == {1}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_commit_version_detects_concurrent_commit(tmp_path):
