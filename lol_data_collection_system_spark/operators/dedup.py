@@ -1732,9 +1732,9 @@ def append_corpus_index(
     from pathlib import Path as _Path
 
     from ..sources.versioned import (
+        carry_forward,
         commit_version,
         current_version,
-        link_or_copy,
     )
 
     cur = current_version(path)
@@ -1861,18 +1861,11 @@ def append_corpus_index(
         )
 
     def writer(new_vdir: str) -> None:
-        # every existing subdir links forward whole (fp/shingles/bands/
-        # sets AND hot — a capped index's stop set must survive the
-        # append verbatim); data files only: writer-metadata (_SUCCESS,
-        # .crc) regenerates on append and must not alias old inodes
-        for src in sorted(p for p in _Path(vdir).iterdir() if p.is_dir()):
-            tgt = _Path(new_vdir) / src.name
-            tgt.mkdir(parents=True, exist_ok=True)
-            for f in src.iterdir():
-                if f.is_file() and not f.name.startswith(("_", ".")):
-                    link_or_copy(f, tgt / f.name)
         for sub, ddf in subs:
-            ddf.write.mode("append").parquet(str(_Path(new_vdir) / sub))
+            ddf.write.parquet(str(_Path(new_vdir) / sub))
+        # every other subdir links forward whole (hot included — a
+        # capped index's stop set must survive the append verbatim)
+        carry_forward(vdir, new_vdir, append=[sub for sub, _ in subs])
 
     commit_version(path, writer, meta, expect_current=vdir)
 

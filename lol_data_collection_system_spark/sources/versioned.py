@@ -35,6 +35,14 @@ each commit retains the immediately-superseded version and deletes only
 older generations, so a reader that resolved the pointer just before a
 swap still finds its version on disk through the next commit. Readers
 holding handles across MULTIPLE commits should copy or re-resolve.
+
+Append-grown stores (the hour rollup, the corpus index, the IVF store,
+tombstones, the privacy release gates) write only their delta into a
+new version and call `carry_forward` for the rest: unwritten subdirs
+hardlink forward, appended subdirs get the previous data files linked
+in beside the new ones, and any other written subdir replaces its
+predecessor. Which files count as data, the recursive walk and the
+cross-device fallback live here and nowhere else.
 """
 
 from __future__ import annotations
@@ -211,13 +219,14 @@ def append_tombstones(
         return False
 
     def writer(new_vdir: str) -> None:
-        for src in sorted(p for p in Path(vdir).iterdir() if p.is_dir()):
-            _link_tree(src, Path(new_vdir) / src.name)
-        fresh.write.mode("append").parquet(
-            str(Path(new_vdir) / _TOMBSTONES)
-        )
+        fresh.write.parquet(str(Path(new_vdir) / _TOMBSTONES))
         for sub, ddf in extra_subs or ():
-            ddf.write.mode("append").parquet(str(Path(new_vdir) / sub))
+            ddf.write.parquet(str(Path(new_vdir) / sub))
+        carry_forward(
+            vdir,
+            new_vdir,
+            append=(_TOMBSTONES, *(sub for sub, _ in extra_subs or ())),
+        )
 
     new_meta = dict(meta)
     new_meta["has_tombstones"] = True
@@ -233,7 +242,8 @@ def _link_tree(src, dst) -> None:
     directories (ADVICE r9: the flat-only carry silently omitted a
     partitioned layout's partition dirs from the new committed version
     — data loss, not a refusal). Writer metadata (_*/.*-prefixed files)
-    stays excluded, matching `data_files`."""
+    stays excluded, matching `data_files`, and a file the new version
+    already holds under the same name is kept."""
     srcp, dstp = Path(src), Path(dst)
     dstp.mkdir(parents=True, exist_ok=True)
     for entry in sorted(srcp.iterdir()):
@@ -241,13 +251,36 @@ def _link_tree(src, dst) -> None:
             continue
         if entry.is_dir():
             _link_tree(entry, dstp / entry.name)
-        else:
+        elif not (dstp / entry.name).exists():
             link_or_copy(entry, dstp / entry.name)
 
 
-def compact_version(
-    spark, root: str, max_files: int, target_files: int | None = None
-) -> bool:
+def carry_forward(prev_vdir, new_vdir, append=()) -> None:
+    """Carry the previous version's subdirs into a new version, after
+    its writer has written its own. Every subdir of ``prev_vdir`` that
+    the writer did not write is hardlinked forward whole (recursively —
+    nested ``k=v/`` partition dirs included). A written subdir named in
+    ``append`` gets the previous data files linked in beside the new
+    ones (an append-grown table: part names are task-UUID'd, so they
+    never collide); any other written subdir REPLACES its predecessor.
+    Data files only: writer metadata (_SUCCESS, .crc sidecars) is never
+    carried. ``prev_vdir=None`` (a store's first version) is a no-op.
+
+    This is the one carry rule of every append-grown store (rollup
+    partitions, corpus index, IVF store, tombstones, release gates):
+    O(file count) metadata ops, zero data copy, and the links keep the
+    inodes alive after the old version directory is garbage-collected,
+    so each committed version stays COMPLETE."""
+    if prev_vdir is None:
+        return
+    new = Path(new_vdir)
+    for src in sorted(p for p in Path(prev_vdir).iterdir() if p.is_dir()):
+        tgt = new / src.name
+        if src.name in append or not tgt.exists():
+            _link_tree(src, tgt)
+
+
+def compact_version(spark, root: str, max_files: int) -> bool:
     """Auto-compaction for APPEND-GROWN stores (VERDICT r8 #4): every
     hardlink-append (`dedup.append_corpus_index`, `streaming.serve.
     ivf_ingest_sink`) adds one part-file set per batch, and nothing
@@ -255,12 +288,12 @@ def compact_version(
     into tens of thousands of file opens. This watcher checks the
     CURRENT version's flat parquet subdirs; if any holds more than
     ``max_files`` data files, it commits ONE new version in which the
-    oversized subdirs are rewritten coalesced to ``target_files``
-    (default ``max(1, max_files // 4)``) and every other subdir is
-    hardlinked forward unchanged. Content is row-identical (a pure
-    parquet rewrite — no re-derivation, the store's meta is carried
-    verbatim); the pointer-swap protocol makes the compaction crash-
-    safe and the compare-and-swap refuses to bury a concurrent append.
+    oversized subdirs are rewritten coalesced to ``max(1, max_files //
+    4)`` files and every other subdir is hardlinked forward unchanged.
+    Content is row-identical (a pure parquet rewrite — no
+    re-derivation, the store's meta is carried verbatim); the
+    pointer-swap protocol makes the compaction crash-safe and the
+    compare-and-swap refuses to bury a concurrent append.
 
     Returns True iff a compaction version was committed. Only FLAT
     parquet subdirs (data files directly under ``{vdir}/{sub}/``) are
@@ -321,9 +354,7 @@ def compact_version(
     tombs = (
         spark.read.parquet(str(vpath / _TOMBSTONES)) if purging else None
     )
-    n_out = target_files if target_files is not None else max(
-        1, max_files // 4
-    )
+    n_out = max(1, max_files // 4)
 
     def writer(new_vdir: str) -> None:
         for d in subs:

@@ -1,25 +1,35 @@
-"""Streaming k-anonymous release gate (round 10): publish a stream of
-rows ONLY as their quasi-identifier groups reach size >= k — the online
-enforcement of the audit `validation.k_anonymity_profile` makes offline.
+"""Streaming privacy release gates (round 10): publish a stream of rows
+ONLY as their quasi-identifier groups satisfy a privacy criterion — the
+online enforcement of the audits `validation.k_anonymity_profile`,
+`l_diversity_profile` and `t_closeness_profile` make offline.
 
-A batch release can filter sub-k groups after the fact; a stream cannot
-wait for the corpus to finish. The gate quarantines rows whose
-CUMULATIVE quasi group (published ∪ quarantined ∪ this batch) is still
-below k and releases the whole group — quarantined backlog included —
-the moment it crosses. Group sizes only grow, so a published row can
-never retroactively violate: the final published set equals the batch
-filter "rows in groups of total size >= k" over the full input,
-regardless of batch boundaries (pinned by pytest).
+A batch release can filter violating groups after the fact; a stream
+cannot wait for the corpus to finish. Each gate quarantines rows whose
+CUMULATIVE quasi group (published ∪ quarantined ∪ this batch) does not
+yet pass and releases the whole group — quarantined backlog included —
+the moment it does. For k (group size) and l (distinct sensitive
+values) the measure only grows, so a published row can never
+retroactively violate and the final published set equals the batch
+filter over the full input, regardless of batch boundaries (pinned by
+pytest); t-closeness is release-time sound only (see its sink).
 
-Cost shape: per batch, the gate probes a per-group size side table
-(`gsizes` — one row per touched group per commit, folded by sum at
+The three gates share one skeleton, `_release_sink`: the version read,
+the within-batch id dedup, the broadcast-scoped seen probe, the pool
+(quarantine ∪ fresh) and its touched groups, the publish/quarantine
+split, the writer and the commit. A gate supplies only its side-table
+deltas — (quasi..., [_s,] n) count rows over the FRESH rows — and its
+decision over the cumulative side tables.
+
+Cost shape: per batch, the decision probes its side tables (one delta
+row per touched group or (group, value) per commit, folded by sum at
 probe time and physically merged by `compact_version`'s fold_sums
 mechanism), so the ingest path reads O(distinct groups), never the
 published rows. The replay-idempotency id probe is broadcast-scoped
 (semi-join of the stored ids against the broadcast batch — map-side
-columnar read, no corpus-sized shuffle; VERDICT r10 #4). Published
-rows hardlink forward (O(delta) writes); only the (sub-k,
-bounded-by-quarantined-groups) quarantine rewrites.
+columnar read, no corpus-sized shuffle; VERDICT r10 #4). Published rows
+and side-table rows append by hardlink (`versioned.carry_forward`,
+O(delta) writes); only the quarantine (the bounded backlog of open
+groups) rewrites.
 
 Replay correctness: idempotency is CONTENT-keyed on the id column —
 ids already published or quarantined anti-join out, so a replayed or
@@ -27,6 +37,8 @@ fresh-checkpoint-re-delivered batch commits nothing new.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -40,9 +52,7 @@ __all__ = [
 
 
 def read_released(spark, store_root: str) -> DataFrame:
-    """The published (k-anonymous) rows of a release-gate store."""
-    import os
-
+    """The published rows of a release-gate store."""
     from ..sources.versioned import current_version
 
     cur = current_version(store_root)
@@ -53,173 +63,165 @@ def read_released(spark, store_root: str) -> DataFrame:
     return spark.read.parquet(os.path.join(cur[0], "published"))
 
 
-def k_anon_release_sink(
-    store_root: str,
-    quasi_cols: list[str],
-    k: int,
-    id_col: str = "row_id",
-):
-    """foreachBatch body for the k-anonymous release gate. Store
-    layout: ``published`` (released rows, append-by-hardlink),
-    ``quarantine`` (sub-k rows, rewritten whole — bounded by the sub-k
-    group mass), ``gsizes`` ((quasi..., n) delta rows, folded by sum —
-    the probe side table)."""
-    import os
-    from pathlib import Path
+def _gk(quasi_cols: list[str]):
+    """NULL-safe group key (ADVICE r10): the audit contract says "NULL
+    quasi values form their own group" — groupBy already honors that,
+    but a plain equi-join on the quasi columns would never match a
+    NULL-keyed group, quarantining its rows forever. Joining on one
+    struct-of-quasi key column makes the match null-safe (Spark struct
+    equality compares NULL fields as equal), mirroring the
+    t_closeness_profile fix."""
+    return F.struct(*quasi_cols).alias("_gk")
 
+
+def _release_sink(store_root, quasi_cols, id_col, side_deltas, decide, meta):
+    """The foreachBatch body every release gate shares. Store layout:
+    ``published`` (released rows, append-by-hardlink), ``quarantine``
+    (held rows, rewritten whole — bounded by the open groups' mass) and
+    one append-grown side table per key of ``side_deltas(fresh)``: a
+    dict of (keys..., n) count frames over the batch's FRESH rows,
+    folded by sum at probe time and under `compact_version`.
+    ``decide(cum, touched)`` returns the ``_gk`` of the touched groups
+    that may publish; ``cum`` maps each side table to its cumulative
+    form (stored ∪ delta, or the delta alone on a store's first batch),
+    so it covers every row seen, published or not. ``meta`` is the
+    gate's parameters, recorded in every version's meta."""
     from ..sources.versioned import (
-        _link_tree,
+        carry_forward,
         commit_version,
         current_version,
-        data_files,
-        link_or_copy,
     )
-
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if not quasi_cols:
-        raise ValueError("k_anon_release_sink: no quasi columns")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         cur = current_version(store_root)
-        if cur is None:
-            prev_dir = None
-            quarantine = batch_df.limit(0)
-            gsizes = (
-                batch_df.limit(0)
-                .select(*quasi_cols)
-                .withColumn("n", F.lit(0).cast("bigint"))
-            )
-            seen = batch_df.limit(0).select(F.col(id_col))
-        else:
-            prev_dir, _meta = cur
-            quarantine = spark.read.parquet(
-                os.path.join(prev_dir, "quarantine")
-            )
-            gsizes = spark.read.parquet(os.path.join(prev_dir, "gsizes"))
-            seen = (
-                spark.read.parquet(os.path.join(prev_dir, "published"))
-                .select(F.col(id_col))
-                .unionByName(quarantine.select(F.col(id_col)))
-            )
+        prev_dir = None if cur is None else cur[0]
+
+        def stored(sub: str) -> DataFrame:
+            return spark.read.parquet(os.path.join(prev_dir, sub))
+
         # within-batch duplicate ids dedup BEFORE the seen probe (ADVICE
         # r10): a batch carrying the same id twice must not double-count
-        # toward k or publish duplicate rows (mirrors rtbf.deletion_sink's
-        # .distinct() on its request batch)
-        batch_rows = batch_df.dropDuplicates([id_col])
-        # seen-probe scoped by a BROADCAST of the batch's ids (VERDICT
-        # r10 #4): the naive batch.join(seen, left_anti) sort-merge-
-        # shuffles the ENTIRE published id column every micro-batch —
-        # O(corpus) shuffle on the ingest path. Flipping it — semi-join
-        # the stored ids against the broadcast batch, then anti-join
-        # the batch against that (≤|batch|-row) hit set — keeps both
-        # joins broadcast: the id column is read map-side (columnar,
-        # projection-pruned) and NOTHING corpus-sized ever shuffles.
-        # Same two-phase shape as delete_from_corpus_index's tombstone
-        # derivation; SCALING r11 measures the per-batch wall flat
-        # across 1×/3×/10× published volume.
-        already = seen.join(
-            F.broadcast(batch_rows.select(F.col(id_col))),
-            id_col,
-            "left_semi",
-        )
-        fresh = batch_rows.join(
-            F.broadcast(already), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
+        # toward the criterion or publish duplicate rows (mirrors
+        # rtbf.deletion_sink's .distinct() on its request batch)
+        fresh = batch_df.dropDuplicates([id_col])
+        if prev_dir is not None:
+            quarantine = stored("quarantine")
+            seen = (
+                stored("published")
+                .select(id_col)
+                .unionByName(quarantine.select(id_col))
+            )
+            # seen-probe scoped by a BROADCAST of the batch's ids
+            # (VERDICT r10 #4): the naive batch.join(seen, left_anti)
+            # sort-merge-shuffles the ENTIRE published id column every
+            # micro-batch — O(corpus) shuffle on the ingest path.
+            # Flipping it — semi-join the stored ids against the
+            # broadcast batch, then anti-join the batch against that
+            # (≤|batch|-row) hit set — keeps both joins broadcast: the
+            # id column is read map-side (columnar, projection-pruned)
+            # and NOTHING corpus-sized ever shuffles. Same two-phase
+            # shape as delete_from_corpus_index's tombstone derivation;
+            # SCALING r11 measures the per-batch wall flat across
+            # 1×/3×/10× published volume.
+            already = seen.join(
+                F.broadcast(fresh.select(id_col)), id_col, "left_semi"
+            )
+            fresh = fresh.join(F.broadcast(already), id_col, "left_anti")
+        fresh = fresh.localCheckpoint(eager=True)
         if not fresh.take(1):
-            # replayed or all-seen batch: group sizes only change with
-            # NEW rows, so no quarantined group can cross k either —
+            # replayed or all-seen batch: the side tables only change
+            # with NEW rows, so no quarantined group can pass either —
             # commit nothing (content-keyed idempotency)
             return
-        pool = quarantine.unionByName(fresh).localCheckpoint(eager=True)
-        # NULL-safe group key (ADVICE r10): the audit contract says
-        # "NULL quasi values form their own group" — groupBy already
-        # honors that, but a plain equi-join on the quasi columns would
-        # never match a NULL-keyed group, quarantining its rows forever
-        # even past k. Joining on one struct-of-quasi key column makes
-        # the match null-safe (Spark struct equality compares NULL
-        # fields as equal), mirroring the t_closeness_profile fix.
-        gk = F.struct(*[F.col(c) for c in quasi_cols]).alias("_gk")
-        pool_counts = (
-            pool.groupBy(*quasi_cols)
-            .agg(F.count(F.lit(1)).alias("_pn"))
-            .select(gk, "_pn")
+        pool = fresh
+        if prev_dir is not None:
+            pool = quarantine.unionByName(fresh).localCheckpoint(eager=True)
+        deltas = side_deltas(fresh)
+        cum = {
+            name: d if prev_dir is None else stored(name).unionByName(d)
+            for name, d in deltas.items()
+        }
+        ok = F.broadcast(
+            decide(cum, pool.select(_gk(quasi_cols)).distinct())
         )
-        # folded published sizes for ONLY the touched groups (broadcast
-        # semi-join prunes the side table before its one sum)
-        pub_counts = (
-            gsizes.select(gk, "n")
-            .join(
-                F.broadcast(pool_counts.select("_gk")),
-                "_gk",
-                "left_semi",
-            )
-            .groupBy("_gk")
-            .agg(F.sum("n").alias("_gn"))
-        )
-        ok = (
-            pool_counts.join(pub_counts, "_gk", "left")
-            .filter(
-                F.col("_pn") + F.coalesce(F.col("_gn"), F.lit(0))
-                >= F.lit(k)
-            )
-            .select("_gk")
-        )
-        pool_k = pool.select("*", gk)
+        pool_k = pool.select("*", _gk(quasi_cols))
         to_publish = (
-            pool_k.join(F.broadcast(ok), "_gk", "left_semi")
+            pool_k.join(ok, "_gk", "left_semi")
             .drop("_gk")
             .localCheckpoint(eager=True)
         )
-        new_quar = pool_k.join(
-            F.broadcast(ok), "_gk", "left_anti"
-        ).drop("_gk")
-        delta_sizes = to_publish.groupBy(*quasi_cols).agg(
-            F.count(F.lit(1)).cast("bigint").alias("n")
-        )
+        new_quar = pool_k.join(ok, "_gk", "left_anti").drop("_gk")
 
         def writer(vdir: str) -> None:
-            pub = Path(vdir) / "published"
-            to_publish.write.parquet(str(pub))
-            gs = Path(vdir) / "gsizes"
-            delta_sizes.write.parquet(str(gs))
-            if prev_dir is not None:
-                for sub, tgt in (("published", pub), ("gsizes", gs)):
-                    for f in data_files(Path(prev_dir) / sub):
-                        if not (tgt / f.name).exists():
-                            link_or_copy(f, tgt / f.name)
-                # any other subdir (pending tombstones etc.) carries
-                for src in Path(prev_dir).iterdir():
-                    if src.is_dir() and src.name not in (
-                        "published", "gsizes", "quarantine"
-                    ):
-                        _link_tree(src, Path(vdir) / src.name)
-            # quarantine REWRITES whole: it is the sub-k backlog,
-            # bounded by (k-1) rows per open group
-            new_quar.write.parquet(str(Path(vdir) / "quarantine"))
+            to_publish.write.parquet(os.path.join(vdir, "published"))
+            for name, d in deltas.items():
+                d.write.parquet(os.path.join(vdir, name))
+            new_quar.write.parquet(os.path.join(vdir, "quarantine"))
+            # published and the side tables append; the quarantine
+            # written above replaces its predecessor; any other subdir
+            # (pending tombstones etc.) carries whole
+            carry_forward(prev_dir, vdir, append=("published", *deltas))
 
-        prior_meta = {} if cur is None else dict(cur[1])
         commit_version(
             store_root,
             writer,
             {
-                **prior_meta,
+                **({} if cur is None else cur[1]),
                 "last_batch_id": int(batch_id),
-                "k": k,
-                "quasi_cols": list(quasi_cols),
+                **meta,
                 "fold_sums": {
-                    "gsizes": {
-                        "keys": list(quasi_cols),
+                    name: {
+                        "keys": [c for c in d.columns if c != "n"],
                         "sum_cols": ["n"],
                         "drop_zero": True,
                     }
+                    for name, d in deltas.items()
                 },
             },
             expect_current=prev_dir,
         )
 
     return sink
+
+
+def k_anon_release_sink(
+    store_root: str,
+    quasi_cols: list[str],
+    k: int,
+    id_col: str = "row_id",
+):
+    """foreachBatch body for the k-anonymous release gate: a row
+    publishes once its quasi group holds >= k rows seen so far. Side
+    table ``gsizes`` ((quasi..., n) rows counting EVERY seen row —
+    published, quarantined or fresh), so the decision is one keyed sum
+    over the touched groups."""
+    if k < 2:
+        raise ValueError(f"k must be >= 2, got {k}")
+    if not quasi_cols:
+        raise ValueError("k_anon_release_sink: no quasi columns")
+
+    def sides(fresh: DataFrame) -> dict:
+        n = F.count(F.lit(1)).alias("n")
+        return {"gsizes": fresh.groupBy(*quasi_cols).agg(n)}
+
+    def decide(cum: dict, touched: DataFrame) -> DataFrame:
+        # broadcast semi-join prunes the side table to the touched
+        # groups before its one sum
+        return (
+            cum["gsizes"]
+            .select(_gk(quasi_cols), "n")
+            .join(F.broadcast(touched), "_gk", "left_semi")
+            .groupBy("_gk")
+            .agg(F.sum("n").alias("_n"))
+            .filter(F.col("_n") >= F.lit(k))
+            .select("_gk")
+        )
+
+    return _release_sink(
+        store_root, quasi_cols, id_col, sides, decide,
+        {"k": k, "quasi_cols": list(quasi_cols)},
+    )
 
 
 def k_anon_release_stream(
@@ -261,75 +263,27 @@ def l_div_release_sink(
     distinct sensitive values over the full input" regardless of batch
     boundaries (pinned by pytest).
 
-    Store layout: ``published`` (hardlink-append), ``quarantine``
-    (rewritten whole, bounded by the sub-l group mass), ``svals``
-    ((quasi..., _s, n) delta rows over ALL SEEN rows, folded by sum via
-    `compact_version`'s fold_sums — the probe side table: the decision
-    reads O(open groups' value rows), never the published rows). The
-    replay probe and group joins are broadcast-scoped and null-safe
-    exactly as in `k_anon_release_sink`."""
-    import os
-    from pathlib import Path
-
-    from ..sources.versioned import (
-        _link_tree,
-        commit_version,
-        current_version,
-        data_files,
-        link_or_copy,
-    )
-
+    Side table ``svals`` ((quasi..., _s, n) rows over ALL SEEN rows):
+    the decision reads O(open groups' value rows), never the published
+    rows."""
     if l < 2:
         raise ValueError(f"l must be >= 2, got {l}")
     if not quasi_cols:
         raise ValueError("l_div_release_sink: no quasi columns")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cur = current_version(store_root)
-        sv_schema = lambda df: df.select(  # noqa: E731
-            *quasi_cols, F.col(sensitive_col).alias("_s")
-        ).withColumn("n", F.lit(0).cast("bigint"))
-        if cur is None:
-            prev_dir = None
-            quarantine = batch_df.limit(0)
-            svals = sv_schema(batch_df.limit(0))
-            seen = batch_df.limit(0).select(F.col(id_col))
-        else:
-            prev_dir, _meta = cur
-            quarantine = spark.read.parquet(
-                os.path.join(prev_dir, "quarantine")
-            )
-            svals = spark.read.parquet(os.path.join(prev_dir, "svals"))
-            seen = (
-                spark.read.parquet(os.path.join(prev_dir, "published"))
-                .select(F.col(id_col))
-                .unionByName(quarantine.select(F.col(id_col)))
-            )
-        batch_rows = batch_df.dropDuplicates([id_col])
-        already = seen.join(
-            F.broadcast(batch_rows.select(F.col(id_col))),
-            id_col,
-            "left_semi",
-        )
-        fresh = batch_rows.join(
-            F.broadcast(already), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
-        if not fresh.take(1):
-            return
-        pool = quarantine.unionByName(fresh).localCheckpoint(eager=True)
-        gk = F.struct(*[F.col(c) for c in quasi_cols])
-        delta_svals = fresh.groupBy(
-            *quasi_cols, F.col(sensitive_col).alias("_s")
-        ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        touched = pool.select(gk.alias("_gk")).distinct()
-        cum = (
-            svals.unionByName(delta_svals)
-            .select(gk.alias("_gk"), "_s")
+    def sides(fresh: DataFrame) -> dict:
+        return {
+            "svals": fresh.groupBy(
+                *quasi_cols, F.col(sensitive_col).alias("_s")
+            ).agg(F.count(F.lit(1)).alias("n"))
+        }
+
+    def decide(cum: dict, touched: DataFrame) -> DataFrame:
+        return (
+            cum["svals"]
+            .select(_gk(quasi_cols), "_s")
             .join(F.broadcast(touched), "_gk", "left_semi")
-        )
-        ok = (
-            cum.groupBy("_gk")
+            .groupBy("_gk")
             .agg(
                 (
                     F.count_distinct(F.col("_s"))
@@ -339,55 +293,12 @@ def l_div_release_sink(
             .filter(F.col("_d") >= F.lit(l))
             .select("_gk")
         )
-        pool_k = pool.select("*", gk.alias("_gk"))
-        to_publish = (
-            pool_k.join(F.broadcast(ok), "_gk", "left_semi")
-            .drop("_gk")
-            .localCheckpoint(eager=True)
-        )
-        new_quar = pool_k.join(
-            F.broadcast(ok), "_gk", "left_anti"
-        ).drop("_gk")
 
-        def writer(vdir: str) -> None:
-            pub = Path(vdir) / "published"
-            to_publish.write.parquet(str(pub))
-            sv = Path(vdir) / "svals"
-            delta_svals.write.parquet(str(sv))
-            if prev_dir is not None:
-                for sub, tgt in (("published", pub), ("svals", sv)):
-                    for f in data_files(Path(prev_dir) / sub):
-                        if not (tgt / f.name).exists():
-                            link_or_copy(f, tgt / f.name)
-                for src in Path(prev_dir).iterdir():
-                    if src.is_dir() and src.name not in (
-                        "published", "svals", "quarantine"
-                    ):
-                        _link_tree(src, Path(vdir) / src.name)
-            new_quar.write.parquet(str(Path(vdir) / "quarantine"))
-
-        prior_meta = {} if cur is None else dict(cur[1])
-        commit_version(
-            store_root,
-            writer,
-            {
-                **prior_meta,
-                "last_batch_id": int(batch_id),
-                "l": l,
-                "quasi_cols": list(quasi_cols),
-                "sensitive_col": sensitive_col,
-                "fold_sums": {
-                    "svals": {
-                        "keys": [*quasi_cols, "_s"],
-                        "sum_cols": ["n"],
-                        "drop_zero": True,
-                    }
-                },
-            },
-            expect_current=prev_dir,
-        )
-
-    return sink
+    return _release_sink(
+        store_root, quasi_cols, id_col, sides, decide,
+        {"l": l, "quasi_cols": list(quasi_cols),
+         "sensitive_col": sensitive_col},
+    )
 
 
 def t_close_release_sink(
@@ -419,76 +330,23 @@ def t_close_release_sink(
     a group whose distance is pulled under t by OTHER groups' ingest
     releases on the next batch, not never.
 
-    Store layout: ``published``/``quarantine`` as the other gates;
-    ``shist`` ((quasi..., _s, n) all-seen delta rows) and ``ghist``
-    ((_s, n) all-seen delta rows), both folded by sum — the probe
-    reads O(open groups' histogram rows) + O(|sensitive categories|)."""
-    import os
-    from pathlib import Path
-
-    from ..sources.versioned import (
-        _link_tree,
-        commit_version,
-        current_version,
-        data_files,
-        link_or_copy,
-    )
-
+    Side tables ``shist`` ((quasi..., _s, n) all-seen rows) and
+    ``ghist`` ((_s, n) all-seen rows) — the probe reads O(open groups'
+    histogram rows) + O(|sensitive categories|)."""
     if not 0 < t < 1:
         raise ValueError(f"t must be in (0, 1), got {t}")
     if not quasi_cols:
         raise ValueError("t_close_release_sink: no quasi columns")
     t_micros = round(t * 1_000_000)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cur = current_version(store_root)
-        if cur is None:
-            prev_dir = None
-            quarantine = batch_df.limit(0)
-            shist = (
-                batch_df.limit(0)
-                .select(*quasi_cols, F.col(sensitive_col).alias("_s"))
-                .withColumn("n", F.lit(0).cast("bigint"))
-            )
-            ghist = (
-                batch_df.limit(0)
-                .select(F.col(sensitive_col).alias("_s"))
-                .withColumn("n", F.lit(0).cast("bigint"))
-            )
-            seen = batch_df.limit(0).select(F.col(id_col))
-        else:
-            prev_dir, _meta = cur
-            quarantine = spark.read.parquet(
-                os.path.join(prev_dir, "quarantine")
-            )
-            shist = spark.read.parquet(os.path.join(prev_dir, "shist"))
-            ghist = spark.read.parquet(os.path.join(prev_dir, "ghist"))
-            seen = (
-                spark.read.parquet(os.path.join(prev_dir, "published"))
-                .select(F.col(id_col))
-                .unionByName(quarantine.select(F.col(id_col)))
-            )
-        batch_rows = batch_df.dropDuplicates([id_col])
-        already = seen.join(
-            F.broadcast(batch_rows.select(F.col(id_col))),
-            id_col,
-            "left_semi",
-        )
-        fresh = batch_rows.join(
-            F.broadcast(already), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
-        if not fresh.take(1):
-            return
-        pool = quarantine.unionByName(fresh).localCheckpoint(eager=True)
-        gk = F.struct(*[F.col(c) for c in quasi_cols])
-        delta_shist = fresh.groupBy(
-            *quasi_cols, F.col(sensitive_col).alias("_s")
-        ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        delta_ghist = fresh.groupBy(
-            F.col(sensitive_col).alias("_s")
-        ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        touched = pool.select(gk.alias("_gk")).distinct()
+    def sides(fresh: DataFrame) -> dict:
+        s, n = F.col(sensitive_col).alias("_s"), F.count(F.lit(1)).alias("n")
+        return {
+            "shist": fresh.groupBy(*quasi_cols, s).agg(n),
+            "ghist": fresh.groupBy(s).agg(n),
+        }
+
+    def decide(cum: dict, touched: DataFrame) -> DataFrame:
         # cumulative per-(open group, category) counts — probe pruned
         # to the open groups before its one sum. Checkpointed: it is
         # small (open groups × categories), feeds three consumers, and
@@ -496,8 +354,8 @@ def t_close_release_sink(
         # unambiguous (the _G/_sglob frames derive from the same fresh
         # scan otherwise).
         grp_hist = (
-            shist.unionByName(delta_shist)
-            .select(gk.alias("_gk"), "_s", "n")
+            cum["shist"]
+            .select(_gk(quasi_cols), "_s", "n")
             .join(F.broadcast(touched), "_gk", "left_semi")
             .groupBy("_gk", "_s")
             .agg(F.sum("n").alias("_cnt"))
@@ -505,7 +363,7 @@ def t_close_release_sink(
         )
         # cumulative global histogram + total (|categories| rows)
         gfold = (
-            ghist.unionByName(delta_ghist)
+            cum["ghist"]
             .groupBy("_s")
             .agg(F.sum("n").alias("_sglob"))
             .localCheckpoint(eager=True)
@@ -542,65 +400,13 @@ def t_close_release_sink(
         )
         num = F.col("_sumterm") + G * dec(F.col("_gv"))
         den = F.lit(2).cast("decimal(38,0)") * dec(F.col("_gv")) * G
-        ok = folded.filter(
+        return folded.filter(
             num * F.lit(1_000_000).cast("decimal(38,0)")
             <= F.lit(t_micros).cast("decimal(38,0)") * den
         ).select("_gk")
-        pool_k = pool.select("*", gk.alias("_gk"))
-        to_publish = (
-            pool_k.join(F.broadcast(ok), "_gk", "left_semi")
-            .drop("_gk")
-            .localCheckpoint(eager=True)
-        )
-        new_quar = pool_k.join(
-            F.broadcast(ok), "_gk", "left_anti"
-        ).drop("_gk")
 
-        def writer(vdir: str) -> None:
-            pub = Path(vdir) / "published"
-            to_publish.write.parquet(str(pub))
-            sh = Path(vdir) / "shist"
-            delta_shist.write.parquet(str(sh))
-            gdir = Path(vdir) / "ghist"
-            delta_ghist.write.parquet(str(gdir))
-            if prev_dir is not None:
-                for sub, tgt in (
-                    ("published", pub), ("shist", sh), ("ghist", gdir)
-                ):
-                    for f in data_files(Path(prev_dir) / sub):
-                        if not (tgt / f.name).exists():
-                            link_or_copy(f, tgt / f.name)
-                for src in Path(prev_dir).iterdir():
-                    if src.is_dir() and src.name not in (
-                        "published", "shist", "ghist", "quarantine"
-                    ):
-                        _link_tree(src, Path(vdir) / src.name)
-            new_quar.write.parquet(str(Path(vdir) / "quarantine"))
-
-        prior_meta = {} if cur is None else dict(cur[1])
-        commit_version(
-            store_root,
-            writer,
-            {
-                **prior_meta,
-                "last_batch_id": int(batch_id),
-                "t": float(t),
-                "quasi_cols": list(quasi_cols),
-                "sensitive_col": sensitive_col,
-                "fold_sums": {
-                    "shist": {
-                        "keys": [*quasi_cols, "_s"],
-                        "sum_cols": ["n"],
-                        "drop_zero": True,
-                    },
-                    "ghist": {
-                        "keys": ["_s"],
-                        "sum_cols": ["n"],
-                        "drop_zero": True,
-                    },
-                },
-            },
-            expect_current=prev_dir,
-        )
-
-    return sink
+    return _release_sink(
+        store_root, quasi_cols, id_col, sides, decide,
+        {"t": float(t), "quasi_cols": list(quasi_cols),
+         "sensitive_col": sensitive_col},
+    )

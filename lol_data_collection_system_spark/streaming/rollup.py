@@ -43,10 +43,10 @@ BY PATH (a read of the version directory would list every stored
 partition — past 32 directories Spark lists them with a job of one task
 each, so batch cost grew with the store), one exchange that clusters
 the merge by the key so each touched partition is written as ONE file,
-and hardlinks for every untouched partition directory into the new
-version. Without it each micro-batch re-reads and rewrites the whole
-store, O(all groups) once the group space grows with the data. State
-never holds raw rows.
+and `versioned.carry_forward` hardlinks every untouched partition
+directory into the new version. Without it each micro-batch re-reads
+and rewrites the whole store, O(all groups) once the group space grows
+with the data. State never holds raw rows.
 """
 
 from __future__ import annotations
@@ -57,38 +57,10 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.versioned import commit_version, current_version
+from ..sources.versioned import carry_forward, commit_version, current_version
 
 #: merge rule per state column: how two partials re-aggregate.
 MERGE_FNS = {"sum": F.sum, "max": F.max, "min": F.min}
-
-
-def _link_untouched_partitions(
-    src_vdir: str, dst_vdir: str, partition_col: str
-) -> None:
-    """Hardlink every ``{partition_col}=...`` directory of the previous
-    version that the new version did NOT rewrite — O(file count)
-    metadata ops, zero data copy, and the links keep the shared inodes
-    alive after the old version directory is garbage-collected. The
-    committed version stays COMPLETE (every partition present under one
-    version dir), so readers and the crash-safety argument are
-    unchanged. Cross-filesystem version roots degrade to copies
-    (`versioned.link_or_copy`) instead of failing mid-writer."""
-    from ..sources.versioned import link_or_copy
-
-    src, dst = Path(src_vdir), Path(dst_vdir)
-    prefix = f"{partition_col}="
-    for d in src.iterdir():
-        if not (d.is_dir() and d.name.startswith(prefix)):
-            continue
-        if (dst / d.name).exists():
-            continue  # rewritten by this batch
-        for f in d.rglob("*"):
-            if not f.is_file():
-                continue
-            tgt = dst / f.relative_to(src)
-            tgt.parent.mkdir(parents=True, exist_ok=True)
-            link_or_copy(f, tgt)
 
 
 def read_rollup(spark: SparkSession, store_path: str) -> DataFrame:
@@ -157,12 +129,12 @@ def incremental_rollup_sink(
     across `defaultParallelism` tasks so each touched partition is
     written as one file (a store's first version is written the same
     way), and a new version whose untouched partition directories are
-    HARDLINKED from the previous version (inode refcounts keep them
-    alive past the old version's cleanup; O(file count) metadata ops,
-    zero data copy — the filesystem analog of a manifest-based table
-    format reusing unchanged data files). The whole-version pointer-swap
-    crash safety is unchanged: the new version is complete before the
-    pointer moves."""
+    HARDLINKED from the previous version by `versioned.carry_forward`
+    (inode refcounts keep them alive past the old version's cleanup;
+    O(file count) metadata ops, zero data copy — the filesystem analog
+    of a manifest-based table format reusing unchanged data files). The
+    whole-version pointer-swap crash safety is unchanged: the new
+    version is complete before the pointer moves."""
     unknown = {k for k in merge_aggs.values()} - set(MERGE_FNS)
     if unknown:
         raise ValueError(f"unknown merge kinds: {sorted(unknown)}")
@@ -177,6 +149,7 @@ def incremental_rollup_sink(
         spark = batch_df.sparkSession
         cur = current_version(store_path)
         stored_token = None
+        prev_dir = cur[0] if cur is not None else None
         if cur is not None:
             meta = cur[1]
             stored_token = meta.get("checkpoint_token")
@@ -311,8 +284,7 @@ def incremental_rollup_sink(
             if partition_col is not None:
                 w = w.partitionBy(partition_col)
             w.parquet(vdir)
-            if partition_col is not None and cur is not None:
-                _link_untouched_partitions(cur[0], vdir, partition_col)
+            carry_forward(prev_dir, vdir)
 
         commit_version(
             store_path,
@@ -341,7 +313,7 @@ def incremental_rollup_sink(
             # the merge folded THIS `cur` — a concurrent commit in
             # between would be silently buried; raise instead (r8
             # single-writer enforcement)
-            expect_current=cur[0] if cur is not None else None,
+            expect_current=prev_dir,
         )
 
     return apply_batch

@@ -8,7 +8,11 @@ is not a use).
 
 A public function that only tests reference has no caller in the
 program; it must be the reference implementation of a SURVEY §2 row, so
-its name must appear in COVERAGE.md. Pure AST, no Spark."""
+its name must appear in COVERAGE.md.
+
+A second guard keeps the hardlink carry of versioned stores behind
+``sources/versioned.py``: no other package module calls ``os.link`` or
+names its internals. Pure AST, no Spark."""
 
 from __future__ import annotations
 
@@ -102,3 +106,43 @@ def test_every_definition_is_referenced():
 
 def test_every_test_only_function_is_named_in_coverage():
     assert uncovered_test_only_functions() == []
+
+
+#: the hardlink carry of versioned stores; only `sources/versioned.py`
+#: may name them — every other store calls `versioned.carry_forward`
+_CARRY_INTERNALS = {"link_or_copy", "_link_tree", "data_files"}
+
+
+def carry_policy_leaks() -> list[str]:
+    """Package modules other than ``sources/versioned.py`` that call
+    ``os.link`` or name a carry internal (load, attribute or import)."""
+    leaks: list[str] = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == PACKAGE / "sources" / "versioned.py":
+            continue
+        rel = path.relative_to(ROOT)
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+                if name == "link" and getattr(node.value, "id", None) == "os":
+                    leaks.append(f"{rel}:{node.lineno} os.link")
+                    continue
+            elif isinstance(node, ast.ImportFrom):
+                if node.module == "os" and any(
+                    a.name == "link" for a in node.names
+                ):
+                    leaks.append(f"{rel}:{node.lineno} os.link")
+                continue
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            if name in _CARRY_INTERNALS:
+                leaks.append(f"{rel}:{node.lineno} {name}")
+    return leaks
+
+
+def test_carry_policy_stays_in_versioned():
+    assert carry_policy_leaks() == []

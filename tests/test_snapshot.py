@@ -358,9 +358,10 @@ def test_rollup_sink_rejects_foreign_checkpoint(spark, tmp_path):
 def test_rollup_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
     """partition_col mode (VERDICT r7 #5): a batch touching only hour B
     must REWRITE hour B's partition and HARDLINK hour A's untouched
-    files from the previous version (same inodes — zero data copy), the
-    merged store must equal the full recompute, and a sink with a
-    mismatched layout must refuse loudly."""
+    data files from the previous version (same inodes — zero data copy;
+    writer metadata such as .crc sidecars is not carried), the merged
+    store must equal the full recompute, and a sink with a mismatched
+    layout must refuse loudly."""
     import os as _os
     from pathlib import Path as _Path
 
@@ -403,7 +404,7 @@ def test_rollup_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
         for d in _Path(vdir).iterdir():
             if d.is_dir() and d.name.startswith("hour_ms="):
                 out[d.name] = sorted(
-                    _os.stat(f).st_ino for f in d.rglob("*") if f.is_file()
+                    _os.stat(f).st_ino for f in d.rglob("part-*")
                 )
         return out
 
@@ -422,6 +423,7 @@ def test_rollup_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
     b_dir = max(inodes0, key=hval)
     assert inodes1[a_dir] == inodes0[a_dir]  # hardlinked, not rewritten
     assert not set(inodes1[b_dir]) & set(inodes0[b_dir])  # rewritten
+    assert not list((_Path(v1) / a_dir).rglob("*.crc"))  # data files only
 
     got = sorted(
         tuple(r) for r in finalize_hourly(read_rollup(spark, store)).collect()
@@ -639,6 +641,72 @@ def test_rollup_writes_one_file_per_touched_partition(spark, tmp_path):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def test_carry_forward_links_appends_and_replaces(tmp_path):
+    """`versioned.carry_forward`, the one carry rule of every
+    append-grown store, on a bare directory tree: unwritten subdirs
+    (nested ``k=v/`` partitions included) carry with the same inodes, an
+    ``append`` subdir holds the new files beside the old ones, a written
+    subdir not named in ``append`` is replaced, writer metadata (``_``/
+    ``.``-prefixed files) is never carried, and a first version
+    (``prev_vdir=None``) gets nothing."""
+    import os as _os
+    from pathlib import Path as _Path
+
+    from lol_data_collection_system_spark.sources.versioned import (
+        carry_forward,
+    )
+
+    prev = tmp_path / "v-prev"
+    files = {
+        "kept/part-0.parquet": "k0",
+        "kept/_SUCCESS": "",
+        "kept/.part-0.parquet.crc": "c",
+        "parted/h=1/part-1.parquet": "p1",
+        "parted/h=1/.part-1.parquet.crc": "c",
+        "parted/h=2/part-2.parquet": "p2",
+        "grown/part-old.parquet": "g0",
+        "grown/_SUCCESS": "",
+        "swapped/part-old.parquet": "s0",
+    }
+    for rel, text in files.items():
+        (prev / rel).parent.mkdir(parents=True, exist_ok=True)
+        (prev / rel).write_text(text)
+
+    new = tmp_path / "v-new"
+    for rel in ("grown/part-new.parquet", "swapped/part-new.parquet"):
+        (new / rel).parent.mkdir(parents=True, exist_ok=True)
+        (new / rel).write_text("fresh")
+    carry_forward(str(prev), str(new), append=("grown",))
+
+    def tree(root):
+        return {
+            str(f.relative_to(root))
+            for f in _Path(root).rglob("*")
+            if f.is_file()
+        }
+
+    assert tree(new) == {
+        "kept/part-0.parquet",
+        "parted/h=1/part-1.parquet",
+        "parted/h=2/part-2.parquet",
+        "grown/part-old.parquet",
+        "grown/part-new.parquet",
+        "swapped/part-new.parquet",
+    }
+    for rel in (
+        "kept/part-0.parquet",
+        "parted/h=1/part-1.parquet",
+        "parted/h=2/part-2.parquet",
+        "grown/part-old.parquet",
+    ):
+        assert _os.stat(new / rel).st_ino == _os.stat(prev / rel).st_ino
+
+    first = tmp_path / "v-first"
+    (first / "only").mkdir(parents=True)
+    carry_forward(None, str(first), append=("only",))
+    assert list(first.rglob("*")) == [first / "only"]
 
 
 def test_commit_version_detects_concurrent_commit(tmp_path):

@@ -422,7 +422,8 @@ def test_k_anon_release_gate_stream_equals_batch_filter(spark, tmp_path):
     sink(frame(batches[2]), 2)
     assert current_version(store)[0] == before
 
-    # published rows hardlink forward; gsizes folds under compaction
+    # published rows hardlink forward; gsizes (every seen row, the
+    # held c group included) folds under compaction
     from lol_data_collection_system_spark.sources.versioned import (
         compact_version,
     )
@@ -433,7 +434,7 @@ def test_k_anon_release_gate_stream_equals_batch_filter(spark, tmp_path):
     vdir, _ = current_version(store)
     gs = spark.read.parquet(str(_pl.Path(vdir) / "gsizes")).collect()
     assert {(r["seg"], r["band"], r["n"]) for r in gs} == {
-        ("b", 1, 3), ("a", 1, 3)
+        ("b", 1, 3), ("a", 1, 3), ("c", 2, 2)
     }
     assert {r["row_id"] for r in read_released(spark, store).collect()} \
         == want  # compaction content-neutral
@@ -466,37 +467,60 @@ def test_k_anon_release_gate_null_quasi_group_releases(spark, tmp_path):
     got = {r["row_id"] for r in read_released(spark, store).collect()}
     assert got == {1, 3, 5, 6}  # (NULL,NULL) released; (a,1),(NULL,7) held
     # a later batch's rows of the already-crossed NULL group release too
-    # (published gsizes probe must match the NULL key null-safely)
+    # (the gsizes probe must match the NULL key null-safely)
     sink(frame([(7, None, None)]), 3)
     got = {r["row_id"] for r in read_released(spark, store).collect()}
     assert got == {1, 3, 5, 6, 7}
 
 
-def test_k_anon_release_gate_dedups_within_batch_ids(spark, tmp_path):
-    """A micro-batch carrying the same id twice publishes the row once
-    and counts it ONCE toward k (ADVICE r10): duplicate delivery glue
-    must not inflate group sizes past the privacy threshold."""
+@pytest.mark.parametrize("gate", ["k", "l", "t"])
+def test_release_gate_dedups_within_batch_ids(spark, tmp_path, gate):
+    """A micro-batch carrying the same id more than once publishes the
+    row at most once and counts it ONCE toward the criterion (ADVICE
+    r10): duplicate delivery glue must not inflate a group past the
+    privacy threshold. The three gates share one skeleton, so each is
+    pinned; a replayed batch commits nothing."""
+    from lol_data_collection_system_spark.sources.versioned import (
+        current_version,
+    )
     from lol_data_collection_system_spark.streaming.privacy import (
         k_anon_release_sink,
+        l_div_release_sink,
         read_released,
+        t_close_release_sink,
     )
 
-    store = str(tmp_path / "gate_dup")
-    sink = k_anon_release_sink(store, ["seg"], k=3, id_col="row_id")
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "a"), (1, "a"), (2, "a")],
-        "row_id long, seg string",
-    )
-    sink(df, 0)
-    # 2 DISTINCT ids in group a: k=3 not reached — a double-counting
-    # gate would have published here
-    assert read_released(spark, store).count() == 0
-    sink(
-        spark.createDataFrame([(3, "a")], "row_id long, seg string"), 1
-    )
-    rel = read_released(spark, store).collect()
-    assert sorted(r["row_id"] for r in rel) == [1, 2, 3]
-    assert len(rel) == 3  # id 1 published exactly once
+    store = str(tmp_path / f"gate_dup_{gate}")
+    sink = {
+        "k": lambda: k_anon_release_sink(store, ["seg"], k=3),
+        "l": lambda: l_div_release_sink(
+            store, ["seg"], l=3, sensitive_col="s"
+        ),
+        "t": lambda: t_close_release_sink(
+            store, ["seg"], t=0.3, sensitive_col="s"
+        ),
+    }[gate]()
+
+    def frame(rs):
+        return spark.createDataFrame(rs, "row_id long, seg string, s string")
+
+    def released():
+        ids = [r["row_id"] for r in read_released(spark, store).collect()]
+        assert len(ids) == len(set(ids))  # no id published twice
+        return set(ids)
+
+    # id 1 three times with two sensitive values: counted as delivered,
+    # group a would reach 3 rows (k) or 3 values (l) in this batch
+    sink(frame([(1, "a", "x"), (1, "a", "y"), (1, "a", "x"),
+                (2, "a", "z")]), 0)
+    # one group is the whole population, so t passes at once
+    assert released() == ({1, 2} if gate == "t" else set())
+    sink(frame([(3, "a", "w")]), 1)
+    assert released() == {1, 2, 3}
+
+    before = current_version(store)[0]
+    sink(frame([(3, "a", "w")]), 1)  # replay: content-keyed no-op
+    assert current_version(store)[0] == before
 
 
 def test_l_div_release_gate_stream_equals_batch_filter(spark, tmp_path):
