@@ -14,10 +14,10 @@ Spark-first redesign:
 - μ/σ come from ONE aggregate pass and are folded into the projection as
   literals (a driver-side collect of 2 rows, then broadcast by constant
   folding) — no second shuffle.
-- Scoring runs as a scalar `pandas_udf`: Arrow batches in, NumPy math,
-  Arrow out — the 10-100× path over row-at-a-time Python. The stub model
-  is a fixed-weight linear scorer in integer space (deterministic,
-  oracle-reproducible); a real model swaps `_score_batch`.
+- The fixed-weight linear scorer is one integer SQL expression
+  (deterministic, oracle-reproducible). The MLP scorer runs as a scalar
+  `pandas_udf`: Arrow batches in, NumPy math, Arrow out — the 10-100×
+  path over row-at-a-time Python.
 """
 
 from __future__ import annotations
@@ -98,25 +98,16 @@ def normalize_columns(
     return df.crossJoin(F.broadcast(stats)).select(*exprs)
 
 
-def linear_score_udf(weights: dict[str, int], bias: int = 0):
-    """Deterministic stand-in for model inference: integer-weight linear
-    score over feature columns, as a scalar pandas_udf (Arrow batches,
-    vectorized NumPy ops). Integer space keeps Spark and any SQL oracle
-    bit-identical. Swap the body for `model.predict` to serve a real
-    model — the Arrow plumbing is the point.
+def linear_score(weights: dict[str, int], bias: int = 0):
+    """Integer-weight linear score over feature columns, as one bigint
+    SQL expression: `bias + Σ weight·col`. Integer space keeps Spark and
+    any SQL oracle bit-identical, and Catalyst sees the whole sum.
     """
-    names = sorted(weights)
-
-    @pandas_udf("bigint")
-    def score(*cols: pd.Series) -> pd.Series:
-        total = None
-        for name, s in zip(names, cols):
-            term = s.astype("int64") * weights[name]
-            total = term if total is None else total + term
-        return total + bias
+    terms = [F.col(n).cast("bigint") * w for n, w in sorted(weights.items())]
+    total = sum(terms, F.lit(bias).cast("bigint"))
 
     def apply(df: DataFrame, alias: str = "score") -> DataFrame:
-        return df.withColumn(alias, score(*[F.col(n) for n in names]))
+        return df.withColumn(alias, total)
 
     return apply
 
@@ -130,11 +121,11 @@ def mlp_score_udf(
     """Real batch model inference over Arrow: a numpy MLP (one tanh
     hidden layer, sigmoid output) whose weights ship inside the UDF
     closure — cloudpickled once per executor, applied per Arrow batch.
-    This replaces `linear_score_udf`'s stand-in with the actual shape of
-    the reference's model scoring (`proto_data_analysis.py:826-831`
-    calls Keras `predict_proba` over a feature matrix; the sandbox has
-    no TF, but the serving path — broadcast weights, vectorized batch
-    math, no per-row Python — is exactly this).
+    This is the actual shape of the reference's model scoring
+    (`proto_data_analysis.py:826-831` calls Keras `predict_proba` over a
+    feature matrix; the sandbox has no TF, but the serving path —
+    broadcast weights, vectorized batch math, no per-row Python — is
+    exactly this).
 
     Determinism contract (so a SQL oracle can unroll the network):
     - accumulate each dot product LEFT-TO-RIGHT per term (`b + w1*x1 +

@@ -3,23 +3,33 @@
 Reference: `create_champion_lane_mapping` (`utils.py:419-480`) assigns
 JUNGLE → SUPPORT → TOP → BOTTOM → MID per team by repeated argmax/argmin
 over the *remaining* candidates — each pick removes its winner from the
-pool, so later picks depend on earlier ones. That sequential dependence
-is what makes this a grouped `applyInPandas` rather than five independent
-window-rank queries: a plain `row_number()` per metric could hand two
-roles to the same candidate.
+pool, so later picks depend on earlier ones. A plain `row_number()` per
+metric could hand two roles to the same candidate.
 
-Scale: one Arrow batch per group (a team = 5 rows in the reference;
-bounded in general), shuffled once on the group key; the Python fold per
-group is O(roles × candidates).
+One Catalyst plan instead. Rule i (1-based) orders a group by: prefilter
+hit first (when the rule has a prefilter), then its metric with NULLs
+last, then `id_col` ascending. The first row of that order that is still
+unassigned is exactly the rule's pick — "the best prefiltered candidate,
+falling back to all remaining". At most i−1 rows are assigned before
+rule i runs, so its pick is among the top i of its order. The plan takes
+every rule's `row_number()` over one exchange on the group key, collects
+per group only the rows ranked inside their rule's bound, and folds the
+rules over that list with one SQL `aggregate` expression; no row crosses
+into a Python worker. `assign_group` is the same fold in plain Python,
+the reference the tests compare against.
+
+Scale: for k rules a group's fold input is O(k²) rows, whatever the
+group size; the group itself is only ranked, never held as a whole.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
+from operator import or_
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -32,7 +42,40 @@ class RoleRule:
     role: str
     metric: str
     ascending: bool = False
-    prefilter: str | None = None  # pandas query string
+    prefilter: str | None = None  # Spark SQL predicate; NULL is no hit
+
+
+def assign_group(
+    rows: list[dict],
+    rules: list[RoleRule],
+    id_col: str,
+    remainder_role: str | None = None,
+) -> list[tuple[object, str]]:
+    """The elimination sequence over one group's rows, as (id, role)
+    picks in rule order. Each row carries a rule's prefilter value under
+    the predicate's text as key (True is a hit). NULL metrics sort last;
+    ties break on `id_col` ascending — Python's `max` keeps the first of
+    equals, so a stable sort on the id reproduces deterministic picks. If
+    `remainder_role` is set, the last unassigned candidate gets it (the
+    reference's "midlaner remains", `utils.py:473`)."""
+    remaining = sorted(rows, key=lambda r: r[id_col])
+    picks: list[tuple[object, str]] = []
+    for rule in rules:
+        if not remaining:
+            break
+        pool = remaining
+        if rule.prefilter:
+            pool = [r for r in remaining if r[rule.prefilter] is True] or remaining
+        valued = [r for r in pool if r[rule.metric] is not None]
+        ordered = sorted(
+            valued, key=lambda r: r[rule.metric], reverse=not rule.ascending
+        ) + [r for r in pool if r[rule.metric] is None]
+        winner = ordered[0]
+        picks.append((winner[id_col], rule.role))
+        remaining = [r for r in remaining if r is not winner]
+    if remainder_role is not None and len(remaining) == 1:
+        picks.append((remaining[0][id_col], remainder_role))
+    return picks
 
 
 def assign_roles(
@@ -41,49 +84,59 @@ def assign_roles(
     rules: list[RoleRule],
     id_col: str,
     remainder_role: str | None = None,
-    tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Per group, run the elimination sequence and return
-    (group_cols..., id_col, role).
+    (group_cols..., id_col, role) — `assign_group` as one plan.
 
-    Ties break on `tiebreak_col` ascending (defaults to `id_col`) —
-    Python's `max` keeps the first of equals, so an explicit stable sort
-    reproduces deterministic picks. If `remainder_role` is set, the last
-    unassigned candidate gets it (the reference's "midlaner remains",
-    `utils.py:473`).
-    """
-    tb = tiebreak_col or id_col
-    out_fields = [df.schema[c] for c in group_cols]
-    out_fields.append(df.schema[id_col])
-    out_fields.append(T.StructField("role", T.StringType()))
-    schema = T.StructType(out_fields)
+    `id_col` must be unique within a group. `remainder_role` applies only
+    to groups of exactly len(rules)+1 rows, so the last rule's bound
+    widens by one to keep all of such a group."""
+    k = len(rules)
+    by_group = Window.partitionBy(*group_cols)
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        remaining = pdf.sort_values(tb, kind="mergesort")
-        picks: list[tuple[object, str]] = []
-        for rule in rules:
-            if remaining.empty:
-                break
-            pool = remaining
-            if rule.prefilter:
-                narrowed = remaining.query(rule.prefilter)
-                if not narrowed.empty:
-                    pool = narrowed
-            ordered = pool.sort_values(
-                rule.metric, ascending=rule.ascending, kind="mergesort"
-            )
-            winner = ordered.iloc[0]
-            picks.append((winner[id_col], rule.role))
-            remaining = remaining[remaining[id_col] != winner[id_col]]
-        if remainder_role is not None and len(remaining) == 1:
-            picks.append((remaining.iloc[0][id_col], remainder_role))
-        head = pdf.iloc[0]
-        return pd.DataFrame(
-            {
-                **{c: [head[c]] * len(picks) for c in group_cols},
-                id_col: [p[0] for p in picks],
-                "role": [p[1] for p in picks],
-            }
-        )
+    def rank(rule: RoleRule):
+        metric = F.col(rule.metric)
+        keys = [
+            metric.asc_nulls_last() if rule.ascending else metric.desc_nulls_last(),
+            F.col(id_col).asc(),
+        ]
+        if rule.prefilter:
+            keys.insert(0, F.when(F.expr(rule.prefilter), 0).otherwise(1))
+        return F.row_number().over(by_group.orderBy(*keys))
 
-    return df.groupBy(*group_cols).applyInPandas(run_group, schema)
+    ranked = df.select(
+        *group_cols, id_col, *[rank(r).alias(f"_r{i}") for i, r in enumerate(rules)]
+    )
+    bounds = list(range(1, k + 1))
+    roles = [rule.role for rule in rules]
+    steps = f"{k - 1}"
+    if remainder_role is not None:
+        bounds[-1] += 1
+        roles.append(remainder_role)
+        steps = f"IF(_n = {k + 1}, {k}, {k - 1})"
+    keep = reduce(or_, [F.col(f"_r{i}") <= b for i, b in enumerate(bounds)])
+    # the remainder step ranks the one candidate left 0
+    cand = F.struct(
+        F.col(id_col).alias("id"),
+        F.array(*[f"_r{i}" for i in range(k)], F.lit(0)).alias("r"),
+    )
+    grouped = ranked.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.collect_list(F.when(keep, cand)).alias("_c"),
+    )
+    # step i appends the free candidate of lowest rank i; NULL once none is left
+    id_type = df.schema[id_col].dataType.simpleString()
+    picks = (
+        f"aggregate(sequence(0, {steps}), cast(array() AS array<{id_type}>), "
+        f"(acc, i) -> concat(acc, array(array_min(transform("
+        f"filter(_c, c -> NOT array_contains(acc, c.id)), "
+        f"c -> named_struct('r', c.r[i], 'id', c.id))).id)))"
+    )
+    out = grouped.select(
+        *group_cols, F.posexplode(F.expr(picks)).alias("_j", id_col)
+    )
+    return out.where(F.col(id_col).isNotNull()).select(
+        *group_cols,
+        id_col,
+        F.array(*map(F.lit, roles))[F.col("_j")].alias("role"),
+    )

@@ -40,8 +40,8 @@ def synthetic_kills(spark: SparkSession, sf_dir: str) -> DataFrame:
     victim, assists). Victim ≠ killer is forced so self-kills (which the
     reference's data model cannot produce) don't arise. Served from the
     S15 parquet materialization (rebuilt when events.parquet changes),
-    shared per session: the fight pipeline reads it on both sides of its
-    interval self-join, and every fight query reads it."""
+    shared per session: the fight enrichment reads it on both sides of
+    its interval self-join."""
 
     def build() -> DataFrame:
         events = load_table(spark, sf_dir, "events")
@@ -103,11 +103,21 @@ _PERSP_SQL = f"""
 # ---------------------------------------------------------------------------
 # Fight enrichment (declarative stages 1-2) — oracle-gated
 # ---------------------------------------------------------------------------
+def fight_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every actor's kill/death perspective rows grown by the ±ENRICH_MS
+    enrichment, shared per session: the three fight queries read it, so
+    its interval self-join over the kills runs once."""
+
+    def build() -> DataFrame:
+        kills = synthetic_kills(spark, sf_dir)
+        persp = fight_ops.kill_death_perspectives(kills)
+        return fight_ops.enrich_adjacent_sets(persp, kills, ENRICH_MS)
+
+    return shared(spark, ("fight_enriched", sf_dir), build)
+
+
 def q_fight_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    kills = synthetic_kills(spark, sf_dir)
-    persp = fight_ops.kill_death_perspectives(kills)
-    enriched = fight_ops.enrich_adjacent_sets(persp, kills, ENRICH_MS)
-    return enriched.select(
+    return fight_enriched(spark, sf_dir).select(
         "match_id",
         "actor",
         "perspective",
@@ -159,8 +169,7 @@ FROM agg
 # exact check in tests/test_fights.py vs a pure-Python reference fold.
 # ---------------------------------------------------------------------------
 def q_fight_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    kills = synthetic_kills(spark, sf_dir)
-    merged = fight_ops.parse_fights(kills, window_ms=ENRICH_MS, horizon_ms=MERGE_MS)
+    merged = fight_ops.subset_merge(fight_enriched(spark, sf_dir), MERGE_MS)
     return merged.select(
         "match_id",
         "actor",
@@ -176,10 +185,7 @@ def q_fight_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Outcome bucketing (A10) over the oracle-checked enrichment stage
 # ---------------------------------------------------------------------------
 def q_fight_outcome_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    kills = synthetic_kills(spark, sf_dir)
-    persp = fight_ops.kill_death_perspectives(kills)
-    enriched = fight_ops.enrich_adjacent_sets(persp, kills, ENRICH_MS)
-    return fight_ops.outcome_buckets(enriched, ["actor"])
+    return fight_ops.outcome_buckets(fight_enriched(spark, sf_dir), ["actor"])
 
 
 _BUCKET_CASE = """

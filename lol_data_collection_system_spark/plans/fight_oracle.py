@@ -10,12 +10,12 @@ into a parquet fixture, and the oracle SQL selects from that fixture.
 Independence chain: the Python pipeline here shares no Spark code — kills
 come from DuckDB running the same `_KILLS_SQL` the other fight oracles
 use, the perspective/enrichment stages are plain Python loops, and the
-fold (`operators.fights.merge_fight_group`, a pure-Python function that
-`applyInPandas` also calls per group) is unit-pinned by the behavioral
+fold (`operators.fights.merge_fight_group`, the pure-Python reference
+of the SQL fold in `subset_merge`) is unit-pinned by the behavioral
 tests in `tests/test_fights.py`. What the driver's hash check then proves
-is that the distributed pipeline — grouping, per-group ordering, the
-sparse-group JVM bypass, the Arrow boundary — reproduces the sequential
-reference semantics on the full sf0.01 table.
+is that the distributed pipeline — the shared enrichment, grouping,
+per-group ordering, the SQL fold — reproduces the sequential reference
+semantics on the full sf0.01 table.
 
 Scale-factor dispatch: one fixture file carries rows for every generated
 sf, keyed by ``n_src_events`` (COUNT(*) of the source events table — the

@@ -11,10 +11,10 @@ Per (match, team), sequential elimination:
   5. MID     — the remaining candidate.
 
 The position tallies are a declarative aggregation (boolean-sum per
-participant); only the elimination itself is a grouped applyInPandas
-(`roles.assign_roles`) because each pick constrains the next. Python's
-`max`/`min` keep the first of equals in participants-array order — the
-tiebreak column reproduces that deterministically.
+participant); the elimination, where each pick constrains the next, is
+`roles.assign_roles`: per-rule ranks and one SQL fold, no Python worker.
+Python's `max`/`min` keep the first of equals in participants-array
+order — ties on `participant_id` reproduce that deterministically.
 """
 
 from __future__ import annotations
@@ -72,7 +72,6 @@ def champion_lane_mapping(
         LANE_RULES,
         "participant_id",
         remainder_role="MID",
-        tiebreak_col="participant_id",
     )
     return assigned.join(
         cand.select("match_id", "participant_id", "champion_id"),

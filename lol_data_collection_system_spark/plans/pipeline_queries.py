@@ -134,7 +134,7 @@ def q_order_feature_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         numeric=["o_custkey"],
     )
-    scorer = feat_ops.linear_score_udf(SCORE_WEIGHTS, SCORE_BIAS)
+    scorer = feat_ops.linear_score(SCORE_WEIGHTS, SCORE_BIAS)
     return scorer(fm, "score").select(
         "o_orderkey",
         "o_orderstatus_f",

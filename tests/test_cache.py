@@ -89,7 +89,7 @@ def _persisted_rdds(spark) -> set[int]:
 
 @pytest.mark.parametrize(
     "name, key",
-    [("fight_enrichment", "kills"), ("bpe_merge_table", "bpe_merges")],
+    [("fight_enrichment", "fight_enriched"), ("bpe_merge_table", "bpe_merges")],
     ids=["fight_enrichment", "bpe_merge_table"],
 )
 def test_shared_registry_lifetime(spark, name, key):
@@ -142,7 +142,7 @@ def test_run_query_record_schema(spark):
     )
     assert record["jobs"]["exec"]
     assert set(record["shared"]) == {"built", "hit"}
-    assert ("kills", sf) in record["shared"]["built"] + record["shared"]["hit"]
+    assert ("fight_enriched", sf) in record["shared"]["built"] + record["shared"]["hit"]
     assert all(isinstance(i, int) for i in record["released"])
 
 

@@ -196,6 +196,35 @@ def test_fight_merge_fixture_oracle(spark):
     assert spark_rows == oracle_rows
 
 
+def test_fight_queries_share_one_enrichment(spark):
+    """The three fight queries read one session-shared enriched frame:
+    run through `run_query` after a `reset`, the first builds
+    ("fight_enriched", sf), the other two hit it, and every result still
+    equals its oracle."""
+    import __spark_entry__ as entry_mod
+    from test_oracle_parity import _duck
+    from verify_local import _canon, _values_equal
+
+    from lol_data_collection_system_spark import session
+
+    key = ("fight_enriched", SF_DIR)
+    queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    session.reset(spark)
+    builds0, hits0 = session.builds[key], session.hits[key]
+    try:
+        for name in ("fight_enrichment", "fight_merge", "fight_outcome_buckets"):
+            record, got = session.run_query(
+                spark, name, queries[name], SF_DIR, sink="pandas"
+            )
+            tag = "built" if name == "fight_enrichment" else "hit"
+            assert key in record["shared"][tag], (name, record["shared"])
+            assert _values_equal(_canon(got), _canon(_duck(oracles[name]))), name
+        assert session.builds[key] - builds0 == 1
+        assert session.hits[key] - hits0 == 2
+    finally:
+        session.reset(spark)
+
+
 def test_fight_merge_fixture_regenerates_when_stale(tmp_path, monkeypatch):
     """Fingerprint miss (meta absent) must trigger regeneration rather
     than serving a stale fixture."""
