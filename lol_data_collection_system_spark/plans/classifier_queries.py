@@ -24,8 +24,6 @@ aggregation per round, the spark.ml LogisticRegression shape).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -597,24 +595,13 @@ FROM placed,
     )
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "quality_classifier_weights": q_quality_classifier_weights,
-    "quality_classifier_scores": q_quality_classifier_scores,
-    "quality_classifier_eval": q_quality_classifier_eval,
-    "quality_weighted_sample": q_quality_weighted_sample,
-    "source_capped_docs": q_source_capped_docs,
-    "classifier_cv_eval": q_classifier_cv_eval,
-    "curriculum_pack": q_curriculum_pack,
-    "classifier_calibration": q_classifier_calibration,
-}
-
-ORACLES: dict[str, str] = {
-    "quality_classifier_weights": _weights_oracle(),
-    "quality_classifier_scores": _scores_oracle(),
-    "quality_classifier_eval": _eval_oracle(),
-    "quality_weighted_sample": _weighted_sample_oracle(),
-    "source_capped_docs": _source_cap_oracle(),
-    "classifier_cv_eval": _cv_oracle(),
-    "curriculum_pack": _curriculum_pack_oracle(),
-    "classifier_calibration": _calibration_oracle(),
+REGISTRY = {
+    "quality_classifier_weights": (q_quality_classifier_weights, _weights_oracle()),
+    "quality_classifier_scores": (q_quality_classifier_scores, _scores_oracle()),
+    "quality_classifier_eval": (q_quality_classifier_eval, _eval_oracle()),
+    "quality_weighted_sample": (q_quality_weighted_sample, _weighted_sample_oracle()),
+    "source_capped_docs": (q_source_capped_docs, _source_cap_oracle()),
+    "classifier_cv_eval": (q_classifier_cv_eval, _cv_oracle()),
+    "curriculum_pack": (q_curriculum_pack, _curriculum_pack_oracle()),
+    "classifier_calibration": (q_classifier_calibration, _calibration_oracle()),
 }

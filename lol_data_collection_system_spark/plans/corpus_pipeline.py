@@ -340,11 +340,7 @@ FROM assigned GROUP BY split
 """
 
 
-QUERIES = {
-    "corpus_funnel": q_corpus_funnel,
-    "corpus_funnel_scrubbed": q_corpus_funnel_scrubbed,
-}
-ORACLES = {
-    "corpus_funnel": _funnel_oracle(),
-    "corpus_funnel_scrubbed": _funnel_oracle(scrubbed=True),
+REGISTRY = {
+    "corpus_funnel": (q_corpus_funnel, _funnel_oracle()),
+    "corpus_funnel_scrubbed": (q_corpus_funnel_scrubbed, _funnel_oracle(scrubbed=True)),
 }

@@ -9,8 +9,6 @@ lockstep.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -4522,11 +4520,11 @@ N_SHARDS = 8
 
 
 def _knn_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (KNN_K, ANN_BITS) kNN graph as an S15 parquet materialization
-    (the `domain_queries.synthetic_kills` pattern): SEVEN queries consume
-    this identical frame (the graph itself, pagerank, label propagation,
-    walks, skip-grams, triangles, outliers), so the bucketed self-join +
-    top-k window runs once per dataset instead of once per query.
+    """The (KNN_K, ANN_BITS) kNN graph as an S15 parquet materialization:
+    SEVEN queries consume this identical frame (the graph itself,
+    pagerank, label propagation, walks, skip-grams, triangles, outliers),
+    so the bucketed self-join + top-k window runs once per dataset
+    instead of once per query.
     Fingerprint-guarded on embeddings.parquet; no TTL (read-only data)."""
     import os as _os
 
@@ -6374,238 +6372,143 @@ FROM c{LP_ITERS}"""
     )
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "doc_token_stats": q_doc_token_stats,
-    "doc_chunks": q_doc_chunks,
-    "doc_quality_by_source": q_doc_quality_by_source,
-    "lang_id_confusion": q_lang_id_confusion,
-    "doc_fingerprint_dups": q_doc_fingerprint_dups,
-    "winnow_signatures": q_winnow_signatures,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "ngram_jaccard_capped": q_ngram_jaccard_capped,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "minhash_lsh_capped": q_minhash_lsh_capped,
-    "simhash_docs": q_simhash_docs,
-    "simhash_near_dup": q_simhash_near_dup,
-    "embedding_near_dup": q_embedding_near_dup,
-    "embedding_topk": q_embedding_topk,
-    "embedding_ann_topk": q_embedding_ann_topk,
-    "embedding_ivf_topk": q_embedding_ivf_topk,
-    "embedding_ivf_trained_topk": q_embedding_ivf_trained_topk,
-    "ivf_stored_topk": q_ivf_stored_topk,
-    "pq_stored_topk": q_pq_stored_topk,
-    "embedding_ivf_probe_topk": q_embedding_ivf_probe_topk,
-    "embedding_bucket_sizes": q_embedding_bucket_sizes,
-    "embedding_quantize": q_embedding_quantize,
-    "doc_lm_scores": q_doc_lm_scores,
-    "semantic_near_dup": q_semantic_near_dup,
-    "semantic_near_dup_derived": q_semantic_near_dup_derived,
-    "temperature_mix_rates": q_temperature_mix_rates,
-    "temperature_mix_sample": q_temperature_mix_sample,
-    "dedup_components": q_dedup_components,
-    "corpus_train_split": q_corpus_train_split,
-    "stratified_doc_sample": q_stratified_doc_sample,
-    "doc_quality_filter": q_doc_quality_filter,
-    "train_test_contamination": q_train_test_contamination,
-    "pack_sequences": q_pack_sequences,
-    "doc_repetition_signals": q_doc_repetition_signals,
-    "vocab_top_terms": q_vocab_top_terms,
-    "span_dup_stats": q_span_dup_stats,
-    "repeated_substring_spans": q_repeated_substring_spans,
-    "repeated_spans_bridged": q_repeated_spans_bridged,
-    "doc_tfidf_top_terms": q_doc_tfidf_top_terms,
-    "bm25_search": q_bm25_search,
-    "doc_token_entropy": q_doc_token_entropy,
-    "frequent_terms": q_frequent_terms,
-    "weighted_doc_sample": q_weighted_doc_sample,
-    "corpus_diff_summary": q_corpus_diff_summary,
-    "leakage_safe_split": q_leakage_safe_split,
-    "embedding_cluster_stats": q_embedding_cluster_stats,
-    "embedding_kmeans": q_embedding_kmeans,
-    "token_budget_plan": q_token_budget_plan,
-    "minhash_calibration": q_minhash_calibration,
-    "lsh_plan_eval": q_lsh_plan_eval,
-    "span_scrubbed_docs": q_span_scrubbed_docs,
-    "lm_score_buckets": q_lm_score_buckets,
-    "component_canonicals": q_component_canonicals,
-    "lsh_pair_quality": q_lsh_pair_quality,
-    "corpus_datasheet": q_corpus_datasheet,
-    "contrastive_negatives": q_contrastive_negatives,
-    "embedding_pq_topk": q_embedding_pq_topk,
-    "pq_trained_topk": q_pq_trained_topk,
-    "embedding_ivfpq_topk": q_embedding_ivfpq_topk,
-    "ivfpq_stored_topk": q_ivfpq_stored_topk,
-    "ivf_batch_serve": q_ivf_batch_serve,
-    "ivf_incremental_serve": q_ivf_incremental_serve,
-    "ivf_appended_store_serve": q_ivf_appended_store_serve,
-    "ivfadc_refine_serve": q_ivfadc_refine_serve,
-    "ivfadc_stream_serve": q_ivfadc_stream_serve,
-    "ivfadc_recall_eval": q_ivfadc_recall_eval,
-    "pq_distortion_report": q_pq_distortion_report,
-    "ivf_nprobe_recall_sweep": q_ivf_nprobe_recall_sweep,
-    "delete_propagation": q_delete_propagation,
-    "doc_text_scrub": q_doc_text_scrub,
-    "nfc_normalized_docs": q_nfc_normalized_docs,
-    "pii_scan": q_pii_scan,
-    "pii_redacted_docs": q_pii_redacted_docs,
-    "incremental_dedup": q_incremental_dedup,
-    "incremental_dedup_stored": q_incremental_dedup_stored,
-    "capped_index_append_classify": q_capped_index_append_classify,
-    "serving_funnel": q_serving_funnel,
-    "serving_funnel_deleted": q_serving_funnel_deleted,
-    "ivf_cell_skew_profile": q_ivf_cell_skew_profile,
-    "soft_dedup_weights": q_soft_dedup_weights,
-    "knn_graph": q_knn_graph,
-    "containment_pairs": q_containment_pairs,
-    "shard_manifest": q_shard_manifest,
-    "bpe_merge_table": q_bpe_merge_table,
-    "bpe_segmented_docs": q_bpe_segmented_docs,
-    "fertility_window_psi": q_fertility_window_psi,
-    "doc_novelty_scores": q_doc_novelty_scores,
-    "line_dup_stats": q_line_dup_stats,
-    "remove_dup_lines": q_remove_dup_lines,
-    "bigram_lm_scores": q_bigram_lm_scores,
-    "cross_source_dup_matrix": q_cross_source_dup_matrix,
-    "pagerank_scores": q_pagerank_scores,
-    "knn_label_propagation": q_knn_label_propagation,
-    "embedding_outlier_scores": q_embedding_outlier_scores,
-    "knn_random_walks": q_knn_random_walks,
-    "walk_skipgram_pairs": q_walk_skipgram_pairs,
-    "html_stripped_docs": q_html_stripped_docs,
-    "doc_lang_mix": q_doc_lang_mix,
-    "cos_sim_histogram": q_cos_sim_histogram,
-    "capped_token_budget_plan": q_capped_token_budget_plan,
-    "embedding_pca_components": q_embedding_pca_components,
-    "embedding_pca_scores": q_embedding_pca_scores,
-    "cdc_chunk_dups": q_cdc_chunk_dups,
-    "source_drift_psi": q_source_drift_psi,
-    "bpe_fertility_by_source": q_bpe_fertility_by_source,
-    "embedding_drift_psi": q_embedding_drift_psi,
-    "knn_triangle_stats": q_knn_triangle_stats,
-    "term_pmi_pairs": q_term_pmi_pairs,
-    "cms_frequency_estimates": q_cms_frequency_estimates,
-    "ann_recall_eval": q_ann_recall_eval,
-}
-
-ORACLES: dict[str, str] = {
-    "doc_token_stats": ORACLE_DOC_TOKEN_STATS,
-    "doc_chunks": _chunk_oracle(),
-    "doc_quality_by_source": ORACLE_DOC_QUALITY_BY_SOURCE,
-    "lang_id_confusion": _lang_id_oracle(),
-    "doc_fingerprint_dups": ORACLE_DOC_FINGERPRINT_DUPS,
-    "winnow_signatures": ORACLE_WINNOW_SIGNATURES,
-    "ngram_jaccard_pairs": ORACLE_NGRAM_JACCARD_PAIRS,
-    "ngram_jaccard_capped": ORACLE_NGRAM_JACCARD_CAPPED,
-    "minhash_lsh_pairs": _minhash_oracle(),
-    "minhash_lsh_capped": _minhash_oracle(capped=True),
-    "simhash_docs": _simhash_oracle(),
-    "simhash_near_dup": _simhash_nd_oracle(),
-    "embedding_near_dup": ORACLE_EMBEDDING_NEAR_DUP,
-    "embedding_topk": ORACLE_EMBEDDING_TOPK,
-    "embedding_ann_topk": ORACLE_EMBEDDING_ANN_TOPK,
-    "embedding_ivf_topk": ORACLE_EMBEDDING_IVF_TOPK,
-    "embedding_ivf_trained_topk": _ivf_trained_oracle(),
+REGISTRY = {
+    "doc_token_stats": (q_doc_token_stats, ORACLE_DOC_TOKEN_STATS),
+    "doc_chunks": (q_doc_chunks, _chunk_oracle()),
+    "doc_quality_by_source": (q_doc_quality_by_source, ORACLE_DOC_QUALITY_BY_SOURCE),
+    "lang_id_confusion": (q_lang_id_confusion, _lang_id_oracle()),
+    "doc_fingerprint_dups": (q_doc_fingerprint_dups, ORACLE_DOC_FINGERPRINT_DUPS),
+    "winnow_signatures": (q_winnow_signatures, ORACLE_WINNOW_SIGNATURES),
+    "ngram_jaccard_pairs": (q_ngram_jaccard_pairs, ORACLE_NGRAM_JACCARD_PAIRS),
+    "ngram_jaccard_capped": (q_ngram_jaccard_capped, ORACLE_NGRAM_JACCARD_CAPPED),
+    "minhash_lsh_pairs": (q_minhash_lsh_pairs, _minhash_oracle()),
+    "minhash_lsh_capped": (q_minhash_lsh_capped, _minhash_oracle(capped=True)),
+    "simhash_docs": (q_simhash_docs, _simhash_oracle()),
+    "simhash_near_dup": (q_simhash_near_dup, _simhash_nd_oracle()),
+    "embedding_near_dup": (q_embedding_near_dup, ORACLE_EMBEDDING_NEAR_DUP),
+    "embedding_topk": (q_embedding_topk, ORACLE_EMBEDDING_TOPK),
+    "embedding_ann_topk": (q_embedding_ann_topk, ORACLE_EMBEDDING_ANN_TOPK),
+    "embedding_ivf_topk": (q_embedding_ivf_topk, ORACLE_EMBEDDING_IVF_TOPK),
+    "embedding_ivf_trained_topk": (q_embedding_ivf_trained_topk, _ivf_trained_oracle()),
     # the stored-index twins deliberately share their in-plan twins'
     # oracles: hash-identical output from the persisted path IS the gate
-    "ivf_stored_topk": _ivf_trained_oracle(),
-    "pq_stored_topk": _pq_oracle(),
-    "embedding_ivf_probe_topk": ORACLE_EMBEDDING_IVF_PROBE_TOPK,
-    "embedding_bucket_sizes": ORACLE_EMBEDDING_BUCKET_SIZES,
-    "embedding_quantize": ORACLE_EMBEDDING_QUANTIZE,
-    "doc_lm_scores": ORACLE_DOC_LM_SCORES,
-    "semantic_near_dup": _semantic_near_dup_oracle(),
-    "semantic_near_dup_derived": _semantic_near_dup_oracle(
+    "ivf_stored_topk": (q_ivf_stored_topk, _ivf_trained_oracle()),
+    "pq_stored_topk": (q_pq_stored_topk, _pq_oracle()),
+    "embedding_ivf_probe_topk": (
+        q_embedding_ivf_probe_topk, ORACLE_EMBEDDING_IVF_PROBE_TOPK
+    ),
+    "embedding_bucket_sizes": (q_embedding_bucket_sizes, ORACLE_EMBEDDING_BUCKET_SIZES),
+    "embedding_quantize": (q_embedding_quantize, ORACLE_EMBEDDING_QUANTIZE),
+    "doc_lm_scores": (q_doc_lm_scores, ORACLE_DOC_LM_SCORES),
+    "semantic_near_dup": (q_semantic_near_dup, _semantic_near_dup_oracle()),
+    "semantic_near_dup_derived": (
+        q_semantic_near_dup_derived,
+        _semantic_near_dup_oracle(
         k=_SEMDEDUP_DERIVED_K_SQL
     ),
-    "temperature_mix_rates": ORACLE_TEMPERATURE_MIX_RATES,
-    "temperature_mix_sample": ORACLE_TEMPERATURE_MIX_SAMPLE,
-    "dedup_components": ORACLE_DEDUP_COMPONENTS,
-    "corpus_train_split": _split_oracle(),
-    "stratified_doc_sample": _stratified_oracle(),
-    "doc_quality_filter": _quality_filter_oracle(),
-    "train_test_contamination": _contamination_oracle(),
-    "pack_sequences": ORACLE_PACK_SEQUENCES,
-    "doc_repetition_signals": _repetition_oracle(),
-    "vocab_top_terms": ORACLE_VOCAB_TOP_TERMS,
-    "span_dup_stats": ORACLE_SPAN_DUP_STATS,
-    "repeated_substring_spans": ORACLE_REPEATED_SUBSTRING_SPANS,
-    "repeated_spans_bridged": _repeated_spans_oracle(gap=REP_BRIDGE_GAP),
-    "doc_tfidf_top_terms": ORACLE_DOC_TFIDF_TOP_TERMS,
-    "bm25_search": _bm25_oracle(),
-    "doc_token_entropy": ORACLE_DOC_TOKEN_ENTROPY,
-    "frequent_terms": ORACLE_FREQUENT_TERMS,
-    "weighted_doc_sample": ORACLE_WEIGHTED_DOC_SAMPLE,
-    "corpus_diff_summary": ORACLE_CORPUS_DIFF_SUMMARY,
-    "leakage_safe_split": _leakage_split_oracle(),
-    "embedding_cluster_stats": ORACLE_EMBEDDING_CLUSTER_STATS,
-    "embedding_kmeans": _kmeans_oracle(),
-    "token_budget_plan": ORACLE_TOKEN_BUDGET_PLAN,
-    "minhash_calibration": _minhash_calibration_oracle(),
-    "lsh_plan_eval": _lsh_plan_oracle(),
-    "span_scrubbed_docs": ORACLE_SPAN_SCRUBBED_DOCS,
-    "lm_score_buckets": _lm_buckets_oracle(),
-    "component_canonicals": ORACLE_COMPONENT_CANONICALS,
-    "lsh_pair_quality": _lsh_pair_quality_oracle(),
-    "corpus_datasheet": _datasheet_oracle(),
-    "contrastive_negatives": ORACLE_CONTRASTIVE_NEGATIVES,
-    "embedding_pq_topk": _pq_oracle(),
-    "pq_trained_topk": _pq_trained_oracle(),
-    "embedding_ivfpq_topk": _ivfpq_oracle(),
+    ),
+    "temperature_mix_rates": (q_temperature_mix_rates, ORACLE_TEMPERATURE_MIX_RATES),
+    "temperature_mix_sample": (q_temperature_mix_sample, ORACLE_TEMPERATURE_MIX_SAMPLE),
+    "dedup_components": (q_dedup_components, ORACLE_DEDUP_COMPONENTS),
+    "corpus_train_split": (q_corpus_train_split, _split_oracle()),
+    "stratified_doc_sample": (q_stratified_doc_sample, _stratified_oracle()),
+    "doc_quality_filter": (q_doc_quality_filter, _quality_filter_oracle()),
+    "train_test_contamination": (q_train_test_contamination, _contamination_oracle()),
+    "pack_sequences": (q_pack_sequences, ORACLE_PACK_SEQUENCES),
+    "doc_repetition_signals": (q_doc_repetition_signals, _repetition_oracle()),
+    "vocab_top_terms": (q_vocab_top_terms, ORACLE_VOCAB_TOP_TERMS),
+    "span_dup_stats": (q_span_dup_stats, ORACLE_SPAN_DUP_STATS),
+    "repeated_substring_spans": (
+        q_repeated_substring_spans, ORACLE_REPEATED_SUBSTRING_SPANS
+    ),
+    "repeated_spans_bridged": (
+        q_repeated_spans_bridged, _repeated_spans_oracle(gap=REP_BRIDGE_GAP)
+    ),
+    "doc_tfidf_top_terms": (q_doc_tfidf_top_terms, ORACLE_DOC_TFIDF_TOP_TERMS),
+    "bm25_search": (q_bm25_search, _bm25_oracle()),
+    "doc_token_entropy": (q_doc_token_entropy, ORACLE_DOC_TOKEN_ENTROPY),
+    "frequent_terms": (q_frequent_terms, ORACLE_FREQUENT_TERMS),
+    "weighted_doc_sample": (q_weighted_doc_sample, ORACLE_WEIGHTED_DOC_SAMPLE),
+    "corpus_diff_summary": (q_corpus_diff_summary, ORACLE_CORPUS_DIFF_SUMMARY),
+    "leakage_safe_split": (q_leakage_safe_split, _leakage_split_oracle()),
+    "embedding_cluster_stats": (
+        q_embedding_cluster_stats, ORACLE_EMBEDDING_CLUSTER_STATS
+    ),
+    "embedding_kmeans": (q_embedding_kmeans, _kmeans_oracle()),
+    "token_budget_plan": (q_token_budget_plan, ORACLE_TOKEN_BUDGET_PLAN),
+    "minhash_calibration": (q_minhash_calibration, _minhash_calibration_oracle()),
+    "lsh_plan_eval": (q_lsh_plan_eval, _lsh_plan_oracle()),
+    "span_scrubbed_docs": (q_span_scrubbed_docs, ORACLE_SPAN_SCRUBBED_DOCS),
+    "lm_score_buckets": (q_lm_score_buckets, _lm_buckets_oracle()),
+    "component_canonicals": (q_component_canonicals, ORACLE_COMPONENT_CANONICALS),
+    "lsh_pair_quality": (q_lsh_pair_quality, _lsh_pair_quality_oracle()),
+    "corpus_datasheet": (q_corpus_datasheet, _datasheet_oracle()),
+    "contrastive_negatives": (q_contrastive_negatives, ORACLE_CONTRASTIVE_NEGATIVES),
+    "embedding_pq_topk": (q_embedding_pq_topk, _pq_oracle()),
+    "pq_trained_topk": (q_pq_trained_topk, _pq_trained_oracle()),
+    "embedding_ivfpq_topk": (q_embedding_ivfpq_topk, _ivfpq_oracle()),
     # fully-stored IVFADC twin shares the in-plan oracle: training is
     # deterministic, so hash-identity IS the stored-serving gate
-    "ivfpq_stored_topk": _ivfpq_oracle(),
-    "ivf_batch_serve": _ivf_serve_oracle(),
-    "ivf_incremental_serve": _ivf_incremental_oracle(),
-    "ivf_appended_store_serve": _ivf_incremental_oracle(),
-    "ivfadc_refine_serve": _ivfadc_refine_oracle(),
-    "ivfadc_stream_serve": _ivfadc_refine_oracle(),
-    "ivfadc_recall_eval": _ivfadc_recall_oracle(),
-    "pq_distortion_report": _pq_distortion_oracle(),
-    "ivf_nprobe_recall_sweep": _ivf_nprobe_sweep_oracle(),
-    "delete_propagation": ORACLE_DELETE_PROPAGATION,
-    "doc_text_scrub": ORACLE_DOC_TEXT_SCRUB,
-    "nfc_normalized_docs": ORACLE_NFC_NORMALIZED_DOCS,
-    "pii_scan": _pii_scan_oracle(),
-    "pii_redacted_docs": _pii_redacted_oracle(),
-    "incremental_dedup": _incremental_oracle(),
+    "ivfpq_stored_topk": (q_ivfpq_stored_topk, _ivfpq_oracle()),
+    "ivf_batch_serve": (q_ivf_batch_serve, _ivf_serve_oracle()),
+    "ivf_incremental_serve": (q_ivf_incremental_serve, _ivf_incremental_oracle()),
+    "ivf_appended_store_serve": (q_ivf_appended_store_serve, _ivf_incremental_oracle()),
+    "ivfadc_refine_serve": (q_ivfadc_refine_serve, _ivfadc_refine_oracle()),
+    "ivfadc_stream_serve": (q_ivfadc_stream_serve, _ivfadc_refine_oracle()),
+    "ivfadc_recall_eval": (q_ivfadc_recall_eval, _ivfadc_recall_oracle()),
+    "pq_distortion_report": (q_pq_distortion_report, _pq_distortion_oracle()),
+    "ivf_nprobe_recall_sweep": (q_ivf_nprobe_recall_sweep, _ivf_nprobe_sweep_oracle()),
+    "delete_propagation": (q_delete_propagation, ORACLE_DELETE_PROPAGATION),
+    "doc_text_scrub": (q_doc_text_scrub, ORACLE_DOC_TEXT_SCRUB),
+    "nfc_normalized_docs": (q_nfc_normalized_docs, ORACLE_NFC_NORMALIZED_DOCS),
+    "pii_scan": (q_pii_scan, _pii_scan_oracle()),
+    "pii_redacted_docs": (q_pii_redacted_docs, _pii_redacted_oracle()),
+    "incremental_dedup": (q_incremental_dedup, _incremental_oracle()),
     # stored-index twin deliberately shares the in-plan oracle (the
     # ivf_stored_topk pattern): hash-identity IS the gate
-    "incremental_dedup_stored": _incremental_oracle(),
-    "capped_index_append_classify": _capped_append_oracle(),
-    "serving_funnel": _serving_oracle(),
-    "serving_funnel_deleted": _deleted_funnel_oracle(),
-    "ivf_cell_skew_profile": _ivf_cell_skew_oracle(),
-    "soft_dedup_weights": ORACLE_SOFT_DEDUP_WEIGHTS,
-    "knn_graph": _knn_graph_oracle(),
-    "containment_pairs": ORACLE_CONTAINMENT_PAIRS,
-    "shard_manifest": ORACLE_SHARD_MANIFEST,
-    "bpe_merge_table": _bpe_merge_oracle(),
-    "bpe_segmented_docs": _bpe_segmented_oracle(),
-    "doc_novelty_scores": ORACLE_DOC_NOVELTY_SCORES,
-    "line_dup_stats": ORACLE_LINE_DUP_STATS,
-    "remove_dup_lines": ORACLE_REMOVE_DUP_LINES,
-    "bigram_lm_scores": _bigram_lm_oracle(),
-    "cross_source_dup_matrix": ORACLE_CROSS_SOURCE_DUP_MATRIX,
-    "pagerank_scores": _pagerank_oracle(),
-    "knn_label_propagation": _label_prop_oracle(),
-    "embedding_outlier_scores": _outlier_oracle(),
-    "knn_random_walks": _walks_oracle(),
-    "walk_skipgram_pairs": _skipgram_oracle(),
-    "html_stripped_docs": ORACLE_HTML_STRIPPED_DOCS,
-    "doc_lang_mix": _lang_mix_oracle(),
-    "cos_sim_histogram": ORACLE_COS_SIM_HISTOGRAM.format(
+    "incremental_dedup_stored": (q_incremental_dedup_stored, _incremental_oracle()),
+    "capped_index_append_classify": (
+        q_capped_index_append_classify, _capped_append_oracle()
+    ),
+    "serving_funnel": (q_serving_funnel, _serving_oracle()),
+    "serving_funnel_deleted": (q_serving_funnel_deleted, _deleted_funnel_oracle()),
+    "ivf_cell_skew_profile": (q_ivf_cell_skew_profile, _ivf_cell_skew_oracle()),
+    "soft_dedup_weights": (q_soft_dedup_weights, ORACLE_SOFT_DEDUP_WEIGHTS),
+    "knn_graph": (q_knn_graph, _knn_graph_oracle()),
+    "containment_pairs": (q_containment_pairs, ORACLE_CONTAINMENT_PAIRS),
+    "shard_manifest": (q_shard_manifest, ORACLE_SHARD_MANIFEST),
+    "bpe_merge_table": (q_bpe_merge_table, _bpe_merge_oracle()),
+    "bpe_segmented_docs": (q_bpe_segmented_docs, _bpe_segmented_oracle()),
+    "fertility_window_psi": (q_fertility_window_psi, _fertility_window_psi_oracle()),
+    "doc_novelty_scores": (q_doc_novelty_scores, ORACLE_DOC_NOVELTY_SCORES),
+    "line_dup_stats": (q_line_dup_stats, ORACLE_LINE_DUP_STATS),
+    "remove_dup_lines": (q_remove_dup_lines, ORACLE_REMOVE_DUP_LINES),
+    "bigram_lm_scores": (q_bigram_lm_scores, _bigram_lm_oracle()),
+    "cross_source_dup_matrix": (
+        q_cross_source_dup_matrix, ORACLE_CROSS_SOURCE_DUP_MATRIX
+    ),
+    "pagerank_scores": (q_pagerank_scores, _pagerank_oracle()),
+    "knn_label_propagation": (q_knn_label_propagation, _label_prop_oracle()),
+    "embedding_outlier_scores": (q_embedding_outlier_scores, _outlier_oracle()),
+    "knn_random_walks": (q_knn_random_walks, _walks_oracle()),
+    "walk_skipgram_pairs": (q_walk_skipgram_pairs, _skipgram_oracle()),
+    "html_stripped_docs": (q_html_stripped_docs, ORACLE_HTML_STRIPPED_DOCS),
+    "doc_lang_mix": (q_doc_lang_mix, _lang_mix_oracle()),
+    "cos_sim_histogram": (
+        q_cos_sim_histogram,
+        ORACLE_COS_SIM_HISTOGRAM.format(
         bucket_sql=_bucket_sql("embedding", LSH_BITS), cos_sql=_COS_SQL
     ),
-    "capped_token_budget_plan": _capped_budget_oracle(),
-    "embedding_pca_components": _pca_components_oracle(),
-    "embedding_pca_scores": _pca_scores_oracle(),
-    "cdc_chunk_dups": ORACLE_CDC_CHUNK_DUPS,
-    "source_drift_psi": _psi_oracle(),
-    "bpe_fertility_by_source": _bpe_fertility_oracle(),
-    "fertility_window_psi": _fertility_window_psi_oracle(),
-    "embedding_drift_psi": _embedding_drift_oracle(),
-    "knn_triangle_stats": _triangle_oracle(),
-    "term_pmi_pairs": ORACLE_TERM_PMI_PAIRS,
-    "cms_frequency_estimates": _cms_oracle(),
-    "ann_recall_eval": _ann_recall_oracle(),
+    ),
+    "capped_token_budget_plan": (q_capped_token_budget_plan, _capped_budget_oracle()),
+    "embedding_pca_components": (q_embedding_pca_components, _pca_components_oracle()),
+    "embedding_pca_scores": (q_embedding_pca_scores, _pca_scores_oracle()),
+    "cdc_chunk_dups": (q_cdc_chunk_dups, ORACLE_CDC_CHUNK_DUPS),
+    "source_drift_psi": (q_source_drift_psi, _psi_oracle()),
+    "bpe_fertility_by_source": (q_bpe_fertility_by_source, _bpe_fertility_oracle()),
+    "embedding_drift_psi": (q_embedding_drift_psi, _embedding_drift_oracle()),
+    "knn_triangle_stats": (q_knn_triangle_stats, _triangle_oracle()),
+    "term_pmi_pairs": (q_term_pmi_pairs, ORACLE_TERM_PMI_PAIRS),
+    "cms_frequency_estimates": (q_cms_frequency_estimates, _cms_oracle()),
+    "ann_recall_eval": (q_ann_recall_eval, _ann_recall_oracle()),
 }

@@ -15,18 +15,14 @@ also pytest-verified in tests/test_fights.py).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-import os
 
 from ..operators import fights as fight_ops
 from ..operators import roles as role_ops
 from ..session import shared
-from ..sources import load_table, materialize_summary
-from ..sources.cache import summary_path
+from ..sources import load_table
+from .fight_oracle import fight_merge_oracle
 
 N_MATCHES = 25
 VICTIM_MOD = 150
@@ -38,10 +34,9 @@ MERGE_MS = 30_000
 def synthetic_kills(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map `events` onto the kill-event shape: (match_id, ts_ms, killer,
     victim, assists). Victim ≠ killer is forced so self-kills (which the
-    reference's data model cannot produce) don't arise. Served from the
-    S15 parquet materialization (rebuilt when events.parquet changes),
-    shared per session: the fight enrichment reads it on both sides of
-    its interval self-join."""
+    reference's data model cannot produce) don't arise. Shared per
+    session: the fight enrichment reads it on both sides of its interval
+    self-join."""
 
     def build() -> DataFrame:
         events = load_table(spark, sf_dir, "events")
@@ -59,19 +54,7 @@ def synthetic_kills(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array().cast("array<long>").alias("assists"),
         )
 
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    return shared(
-        spark,
-        ("kills", sf_dir),
-        lambda: materialize_summary(
-            spark,
-            summary_path(f"kills_{sf_name}.parquet"),
-            build,
-            sources=[os.path.join(sf_dir, "events.parquet")],
-            ttl_s=None,  # fingerprint-guarded; the source table has no decay
-            fingerprint="listing",  # O(file count) serve-path staleness
-        ),
-    )
+    return shared(spark, ("kills", sf_dir), build)
 
 
 _KILLS_SQL = f"""
@@ -382,23 +365,11 @@ FROM pts GROUP BY 1, 2
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "fight_enrichment": q_fight_enrichment,
-    "fight_merge": q_fight_merge,
-    "fight_outcome_buckets": q_fight_outcome_buckets,
-    "role_assignment": q_role_assignment,
-    "session_window_stats": q_session_window_stats,
-    "geo_zone_counts": q_geo_zone_counts,
-}
-
-ORACLES: dict[str, str] = {
-    "fight_enrichment": ORACLE_FIGHT_ENRICHMENT,
-    # fight_merge: added dynamically by __spark_entry__.oracle_sql() — the
-    # order-dependent fold's value oracle is a fixture materialized from an
-    # independent pure-Python port (plans/fight_oracle.py), regenerated on
-    # testdata change; also exact-checked in tests/test_fights.py.
-    "fight_outcome_buckets": ORACLE_FIGHT_OUTCOME_BUCKETS,
-    "role_assignment": ORACLE_ROLE_ASSIGNMENT,
-    "session_window_stats": ORACLE_SESSION_WINDOW_STATS,
-    "geo_zone_counts": ORACLE_GEO_ZONE_COUNTS,
+REGISTRY = {
+    "fight_enrichment": (q_fight_enrichment, ORACLE_FIGHT_ENRICHMENT),
+    "fight_merge": (q_fight_merge, fight_merge_oracle),
+    "fight_outcome_buckets": (q_fight_outcome_buckets, ORACLE_FIGHT_OUTCOME_BUCKETS),
+    "role_assignment": (q_role_assignment, ORACLE_ROLE_ASSIGNMENT),
+    "session_window_stats": (q_session_window_stats, ORACLE_SESSION_WINDOW_STATS),
+    "geo_zone_counts": (q_geo_zone_counts, ORACLE_GEO_ZONE_COUNTS),
 }

@@ -141,6 +141,13 @@ def ensure_fight_merge_fixture(sf_dirs: tuple[str, ...] = DEFAULT_SF_DIRS) -> st
     return refresh_fixture(FIXTURE_PATH, _META_PATH, sf_dirs, _fight_merge_table)
 
 
+def fight_merge_oracle() -> str:
+    """``fight_merge``'s registered oracle: refresh the fixture, return
+    the SQL that selects from it."""
+    ensure_fight_merge_fixture()
+    return ORACLE_FIGHT_MERGE
+
+
 def _fight_merge_table(sf_dirs: list[str]):
     import duckdb
     import pyarrow as pa

@@ -406,6 +406,13 @@ def ensure_history_row_fixture(
     return refresh_fixture(FIXTURE_PATH, _META_PATH, sf_dirs, _history_row_table)
 
 
+def history_row_oracle() -> str:
+    """``history_row``'s registered oracle: refresh the fixture, return
+    the SQL that selects from it."""
+    ensure_history_row_fixture()
+    return ORACLE_HISTORY_ROW
+
+
 def _history_row_table(sf_dirs: list[str]):
     import duckdb
     import pyarrow as pa

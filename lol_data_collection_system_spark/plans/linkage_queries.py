@@ -10,8 +10,6 @@ feed from the same tables, so the linkage output is fully hash-gated.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -228,14 +226,8 @@ FROM feed GROUP BY c_custkey
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "fuzzy_part_linkage": q_fuzzy_part_linkage,
-    "name_resolution_clusters": q_name_resolution_clusters,
-    "customer_golden_records": q_customer_golden_records,
-}
-
-ORACLES: dict[str, str] = {
-    "fuzzy_part_linkage": _linkage_oracle(),
-    "name_resolution_clusters": _resolution_oracle(),
-    "customer_golden_records": _golden_oracle(),
+REGISTRY = {
+    "fuzzy_part_linkage": (q_fuzzy_part_linkage, _linkage_oracle()),
+    "name_resolution_clusters": (q_name_resolution_clusters, _resolution_oracle()),
+    "customer_golden_records": (q_customer_golden_records, _golden_oracle()),
 }

@@ -12,8 +12,6 @@ doubles (IEEE ops on identical inputs are correctly rounded).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -735,36 +733,20 @@ LEFT JOIN ah_comp c ON c.node = r.rep
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "media_decode_features": q_media_decode_features,
-    "audio_near_dup": q_audio_near_dup,
-    "media_near_dup": q_media_near_dup,
-    "media_png_near_dup": q_media_png_near_dup,
-    "media_golden_assets": q_media_golden_assets,
-    "media_near_dedup_kept": q_media_near_dedup_kept,
-    "media_near_dup_wide": q_media_near_dup_wide,
-    "media_funnel": q_media_funnel,
-    "media_frame_sample": q_media_frame_sample,
-    "media_resized_stats": q_media_resized_stats,
-    "order_feature_scores": q_order_feature_scores,
-    "order_mlp_scores": q_order_mlp_scores,
-    "normalized_order_price": q_normalized_order_price,
-}
-
-ORACLES: dict[str, str] = {
-    "media_decode_features": ORACLE_MEDIA_DECODE_FEATURES,
-    "audio_near_dup": _audio_near_dup_oracle(),
-    "media_near_dup": ORACLE_MEDIA_NEAR_DUP,
-    "media_png_near_dup": ORACLE_MEDIA_NEAR_DUP,
-    "media_golden_assets": ORACLE_MEDIA_GOLDEN_ASSETS,
-    "media_near_dedup_kept": ORACLE_MEDIA_NEAR_DEDUP_KEPT,
+REGISTRY = {
+    "media_decode_features": (q_media_decode_features, ORACLE_MEDIA_DECODE_FEATURES),
+    "audio_near_dup": (q_audio_near_dup, _audio_near_dup_oracle()),
+    "media_near_dup": (q_media_near_dup, ORACLE_MEDIA_NEAR_DUP),
+    "media_png_near_dup": (q_media_png_near_dup, ORACLE_MEDIA_NEAR_DUP),
+    "media_golden_assets": (q_media_golden_assets, ORACLE_MEDIA_GOLDEN_ASSETS),
+    "media_near_dedup_kept": (q_media_near_dedup_kept, ORACLE_MEDIA_NEAR_DEDUP_KEPT),
     # the wide path shares the 64-bit oracle: the closed form keys only
     # on image width at either fingerprint size
-    "media_near_dup_wide": ORACLE_MEDIA_NEAR_DUP,
-    "media_funnel": ORACLE_MEDIA_FUNNEL,
-    "media_frame_sample": ORACLE_MEDIA_FRAME_SAMPLE,
-    "media_resized_stats": ORACLE_MEDIA_RESIZED_STATS,
-    "order_feature_scores": ORACLE_ORDER_FEATURE_SCORES,
-    "order_mlp_scores": _mlp_oracle(),
-    "normalized_order_price": ORACLE_NORMALIZED_ORDER_PRICE,
+    "media_near_dup_wide": (q_media_near_dup_wide, ORACLE_MEDIA_NEAR_DUP),
+    "media_funnel": (q_media_funnel, ORACLE_MEDIA_FUNNEL),
+    "media_frame_sample": (q_media_frame_sample, ORACLE_MEDIA_FRAME_SAMPLE),
+    "media_resized_stats": (q_media_resized_stats, ORACLE_MEDIA_RESIZED_STATS),
+    "order_feature_scores": (q_order_feature_scores, ORACLE_ORDER_FEATURE_SCORES),
+    "order_mlp_scores": (q_order_mlp_scores, _mlp_oracle()),
+    "normalized_order_price": (q_normalized_order_price, ORACLE_NORMALIZED_ORDER_PRICE),
 }

@@ -9,8 +9,6 @@ filter geometry, sign matrices) as the Spark implementation.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -497,24 +495,13 @@ ORDER BY position LIMIT {INTERLEAVE_HEAD}
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dsir_doc_weights": q_dsir_doc_weights,
-    "dsir_sample": q_dsir_sample,
-    "bloom_blocklist_confusion": q_bloom_blocklist_confusion,
-    "embedding_rp_topk": q_embedding_rp_topk,
-    "embedding_rp_recall": q_embedding_rp_recall,
-    "bloom_decontamination": q_bloom_decontamination,
-    "embedding_kcenter": q_embedding_kcenter,
-    "interleaved_mix_order": q_interleaved_mix_order,
-}
-
-ORACLES: dict[str, str] = {
-    "dsir_doc_weights": _dsir_weights_oracle(),
-    "dsir_sample": _dsir_sample_oracle(),
-    "bloom_blocklist_confusion": _bloom_oracle(),
-    "embedding_rp_topk": _rp_topk_oracle(),
-    "embedding_rp_recall": _rp_recall_oracle(),
-    "bloom_decontamination": _decon_oracle(),
-    "embedding_kcenter": _kcenter_oracle(),
-    "interleaved_mix_order": _interleave_oracle(),
+REGISTRY = {
+    "dsir_doc_weights": (q_dsir_doc_weights, _dsir_weights_oracle()),
+    "dsir_sample": (q_dsir_sample, _dsir_sample_oracle()),
+    "bloom_blocklist_confusion": (q_bloom_blocklist_confusion, _bloom_oracle()),
+    "embedding_rp_topk": (q_embedding_rp_topk, _rp_topk_oracle()),
+    "embedding_rp_recall": (q_embedding_rp_recall, _rp_recall_oracle()),
+    "bloom_decontamination": (q_bloom_decontamination, _decon_oracle()),
+    "embedding_kcenter": (q_embedding_kcenter, _kcenter_oracle()),
+    "interleaved_mix_order": (q_interleaved_mix_order, _interleave_oracle()),
 }

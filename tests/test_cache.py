@@ -58,25 +58,26 @@ def test_materialize_summary_no_sources_ttl_only(spark, tmp_path):
     assert os.path.exists(path)
 
 
-def test_synthetic_kills_materializes(spark, tmp_path, monkeypatch):
-    """The fight pipeline's kills summary goes through the S15 cache."""
+def test_synthetic_kills_is_shared(spark, tmp_path, monkeypatch):
+    """The fight pipeline's kills frame is built once per session and
+    held in memory by the registry; nothing is written to the summary
+    cache (no later session reads it)."""
+    from lol_data_collection_system_spark import session
     from lol_data_collection_system_spark.plans import domain_queries as dq
-    from lol_data_collection_system_spark.session import reset
     from lol_data_collection_system_spark.sources import cache
 
     monkeypatch.setattr(cache, "SUMMARY_CACHE_DIR", str(tmp_path))
-    reset(spark)
+    session.reset(spark)
     try:
-        sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-        kills = dq.synthetic_kills(spark, sf)
-        n = kills.count()
-        assert n > 0
-        sf_name = os.path.basename(sf.rstrip("/"))
-        assert os.path.exists(str(tmp_path / f"kills_{sf_name}.parquet"))
-        # shared handle: same object second time
-        assert dq.synthetic_kills(spark, sf) is kills
+        built = session.builds[("kills", SF_DIR)]
+        kills = dq.synthetic_kills(spark, SF_DIR)
+        assert kills.count() > 0
+        # shared handle: same object second time, built once
+        assert dq.synthetic_kills(spark, SF_DIR) is kills
+        assert session.builds[("kills", SF_DIR)] == built + 1
+        assert list(tmp_path.iterdir()) == []
     finally:
-        reset(spark)
+        session.reset(spark)
 
 
 def _persisted_rdds(spark) -> set[int]:

@@ -7,6 +7,8 @@ plan shape."""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
 import pytest
@@ -112,6 +114,22 @@ def test_media_near_dup_joins_on_bands(spark):
     assert "band_idx" in flat and "band_val" in flat
     assert "CartesianProduct" not in flat
     assert "shiftrightunsigned" in flat.lower()
+
+
+def test_registry_contract_is_pinned():
+    """The behaviour contract, pinned without Spark: the md5 of the
+    sorted query names and of the sorted ``(name, SQL)`` pairs of the
+    SQL-text oracles (``_ORACLES``, every oracle but the two fixture
+    ones). A deliberate oracle edit or a new query updates these pins,
+    with a CHANGES.md line that says which and why."""
+
+    def digest(value) -> str:
+        return hashlib.md5(json.dumps(value).encode()).hexdigest()
+
+    assert digest(sorted(entry_mod.queries())) == "e47bd7bf8e734d304bf6f7351a3f8495"
+    assert digest(sorted(entry_mod._ORACLES.items())) == (
+        "0b7dbf26b065b982ed9c43ea8fc66af6"
+    )
 
 
 def test_entry_queries_all_plannable(spark):
