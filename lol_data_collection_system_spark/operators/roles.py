@@ -96,10 +96,9 @@ def assign_roles(
 
     def rank(rule: RoleRule):
         metric = F.col(rule.metric)
-        keys = [
-            metric.asc_nulls_last() if rule.ascending else metric.desc_nulls_last(),
-            F.col(id_col).asc(),
-        ]
+        keys = [metric.asc_nulls_last() if rule.ascending else metric.desc_nulls_last()]
+        if rule.metric != id_col:  # the id is the tie-break, once
+            keys.append(F.col(id_col).asc())
         if rule.prefilter:
             keys.insert(0, F.when(F.expr(rule.prefilter), 0).otherwise(1))
         return F.row_number().over(by_group.orderBy(*keys))

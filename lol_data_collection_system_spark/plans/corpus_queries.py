@@ -20,7 +20,7 @@ from ..operators import sketches as sketch_ops
 from ..operators import text as text_ops
 from ..session import shared
 from ..sources import load_table
-from ..sources.cache import summary_path
+from ..sources.cache import materialize_summary, refresh_stored, summary_path
 
 SHINGLE_K = 3
 MINHASH_N = 16
@@ -1986,8 +1986,6 @@ WHERE rank <= {TOPK}
 def _ivf_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    from ..sources import materialize_summary
-
     sf_name = _os.path.basename(sf_dir.rstrip("/"))
 
     def build() -> DataFrame:
@@ -2005,8 +2003,6 @@ def _ivf_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         build,
         sources=[_os.path.join(sf_dir, "embeddings.parquet")],
-        ttl_s=None,
-        fingerprint="listing",  # O(file count) serve-path staleness
     )
 
 
@@ -2025,8 +2021,6 @@ def q_ivf_stored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_codebook_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    from ..sources import materialize_summary
-
     sf_name = _os.path.basename(sf_dir.rstrip("/"))
 
     def build() -> DataFrame:
@@ -2043,8 +2037,6 @@ def _pq_codebook_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         build,
         sources=[_os.path.join(sf_dir, "embeddings.parquet")],
-        ttl_s=None,
-        fingerprint="listing",  # O(file count) serve-path staleness
     )
 
 
@@ -2217,8 +2209,6 @@ WHERE rank <= {TOPK}
 def _ivf_centroids_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    from ..sources import materialize_summary
-
     sf_name = _os.path.basename(sf_dir.rstrip("/"))
 
     def build() -> DataFrame:
@@ -2235,41 +2225,41 @@ def _ivf_centroids_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         build,
         sources=[_os.path.join(sf_dir, "embeddings.parquet")],
-        ttl_s=None,
-        fingerprint="listing",  # O(file count) serve-path staleness
+    )
+
+
+def _ivf_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding − its trained IVF centroid): the one residual
+    derivation behind the stored residual codebooks and code table. The
+    assignment + centroids come from one in-plan Lloyd fit
+    (deterministic, so independent rebuilds of the stored artifacts stay
+    mutually consistent)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    assigned, cents = sim_ops.kmeans_fit(
+        emb, k=IVF_TRAINED_K, iters=IVF_TRAINED_ITERS
+    )
+    return assigned.join(F.broadcast(cents), "cid").select(
+        "vec_id",
+        F.zip_with(
+            F.col("embedding"),
+            F.col("cvec"),
+            lambda a, b: a.cast("double") - b,
+        ).alias("embedding"),
     )
 
 
 def _ivfpq_books_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residual PQ codebooks as a persisted artifact. The build derives
-    assignment + centroids in-plan (deterministic, so independent
-    rebuilds of the three artifacts stay mutually consistent) and seeds
-    codebooks from the first `PQ_CENTROIDS` residuals — exactly what
-    `ivf_pq_topk` does when `codebooks=None`."""
+    """Residual PQ codebooks as a persisted artifact, seeded from the
+    first `PQ_CENTROIDS` residuals — exactly what `ivf_pq_topk` does
+    when `codebooks=None`."""
     import os as _os
-
-    from pyspark.sql import functions as _F
-
-    from ..sources import materialize_summary
 
     sf_name = _os.path.basename(sf_dir.rstrip("/"))
 
     def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        # one shared Lloyd fit (r11) — same values as the two loops
-        assigned, cents = sim_ops.kmeans_fit(
-            emb, k=IVF_TRAINED_K, iters=IVF_TRAINED_ITERS
-        )
-        res = assigned.join(_F.broadcast(cents), "cid").select(
-            "vec_id",
-            _F.zip_with(
-                _F.col("embedding"),
-                _F.col("cvec"),
-                lambda a, b: a.cast("double") - b,
-            ).alias("embedding"),
-        )
         return sim_ops.pq_codebooks(
-            res, PQ_SUBSPACES, PQ_SUB_DIM, PQ_CENTROIDS
+            _ivf_residuals(spark, sf_dir), PQ_SUBSPACES, PQ_SUB_DIM,
+            PQ_CENTROIDS,
         )
 
     return materialize_summary(
@@ -2280,8 +2270,6 @@ def _ivfpq_books_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         build,
         sources=[_os.path.join(sf_dir, "embeddings.parquet")],
-        ttl_s=None,
-        fingerprint="listing",
     )
 
 
@@ -2395,32 +2383,16 @@ REFINE_R = 20
 def _ivfadc_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored PQ CODE TABLE (id, codes) over RESIDUALS — the
     artifact that makes ADC scans read m ints/vector instead of the
-    vector. Build recipe identical to `_ivfpq_books_cached`'s residual
-    derivation so codes, codebooks, assignment, and centroids stay
+    vector. It encodes the `_ivf_residuals` that `_ivfpq_books_cached`
+    trains on, so codes, codebooks, assignment, and centroids stay
     mutually consistent across independent rebuilds (training is
     deterministic end to end)."""
     import os as _os
 
-    from pyspark.sql import functions as _F
-
-    from ..sources import materialize_summary
-
     sf_name = _os.path.basename(sf_dir.rstrip("/"))
 
     def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings")
-        # one shared Lloyd fit (r11) — same values as the two loops
-        assigned, cents = sim_ops.kmeans_fit(
-            emb, k=IVF_TRAINED_K, iters=IVF_TRAINED_ITERS
-        )
-        res = assigned.join(_F.broadcast(cents), "cid").select(
-            "vec_id",
-            _F.zip_with(
-                _F.col("embedding"),
-                _F.col("cvec"),
-                lambda a, b: a.cast("double") - b,
-            ).alias("embedding"),
-        )
+        res = _ivf_residuals(spark, sf_dir)
         books = sim_ops.pq_codebooks(
             res, PQ_SUBSPACES, PQ_SUB_DIM, PQ_CENTROIDS
         )
@@ -2434,8 +2406,6 @@ def _ivfadc_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         build,
         sources=[_os.path.join(sf_dir, "embeddings.parquet")],
-        ttl_s=None,
-        fingerprint="listing",
     )
 
 
@@ -2801,23 +2771,8 @@ def q_pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrain trigger when corpus drift pushes distortion up. The oracle
     re-derives training, residuals, codeword choice, and the exact
     decimal error fold from first principles."""
-    from pyspark.sql import functions as _F
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned = sim_ops.kmeans_assign(
-        emb, k=IVF_TRAINED_K, iters=IVF_TRAINED_ITERS, keep_vec=True
-    )
-    cents = _ivf_centroids_cached(spark, sf_dir)
-    res = assigned.join(_F.broadcast(cents), "cid").select(
-        "vec_id",
-        _F.zip_with(
-            _F.col("embedding"),
-            _F.col("cvec"),
-            lambda a, b: a.cast("double") - b,
-        ).alias("embedding"),
-    )
     return sim_ops.pq_distortion_report(
-        res,
+        _ivf_residuals(spark, sf_dir),
         _ivfpq_books_cached(spark, sf_dir),
         _ivfadc_codes_cached(spark, sf_dir),
         PQ_SUBSPACES,
@@ -3099,10 +3054,6 @@ def q_ivf_appended_store_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery is content-neutral end to end (appended vectors land in
     exactly the cells a full in-plan merge puts them, independent of
     the batch split and of how many compactions fired)."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
     from ..streaming.serve import read_ivf_index
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3126,32 +3077,16 @@ def _ivf_appended_store_cached(spark: SparkSession, sf_dir: str) -> str:
     `ivf_ingest_sink` (hardlink-appends + a mid-ingest compaction).
     Returns the store path. Shared by `ivf_appended_store_serve` and
     `ivf_cell_skew_profile` (round 10) — one store, two audits."""
-    import json as _json
     import os as _os
     import shutil as _shutil
 
-    from ..sources.cache import listing_fingerprint
-    from ..sources.versioned import commit_version, current_version
+    from ..sources.versioned import commit_version
     from ..streaming.serve import ivf_ingest_sink
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % INCR_DELTA_MOD != 9)
-    delta = emb.filter(F.col("vec_id") % INCR_DELTA_MOD == 9)
-    sf_name = _os.path.basename(sf_dir.rstrip("/"))
-    # every derivation param in the path so a constant change can never
-    # serve a store appended under the old ones
-    path = summary_path(
-        f"ivf_store_{sf_name}_k{IVF_TRAINED_K}i{IVF_TRAINED_ITERS}"
-        f"m{INCR_DELTA_MOD}",
-    )
-    fp_now = listing_fingerprint(_os.path.join(sf_dir, "embeddings.parquet"))
-    sidecar = path + ".src.json"
-    stale = True
-    try:
-        stale = _json.loads(open(sidecar).read()) != fp_now
-    except (OSError, ValueError):
-        pass
-    if stale or current_version(path) is None:
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        base = emb.filter(F.col("vec_id") % INCR_DELTA_MOD != 9)
+        delta = emb.filter(F.col("vec_id") % INCR_DELTA_MOD == 9)
         _shutil.rmtree(path, ignore_errors=True)
         # seed version: the base cohort's LLOYD assignment (training
         # output), exactly what the in-plan twin unions the delta onto
@@ -3171,9 +3106,18 @@ def _ivf_appended_store_cached(spark: SparkSession, sf_dir: str) -> str:
         for j in range(3):
             # three disjoint micro-batches covering vec_id % 10 == 9
             sink(delta.filter(F.col("vec_id") % 30 == 10 * j + 9), j)
-        with open(sidecar, "w") as f:
-            _json.dump(fp_now, f)
-    return path
+
+    sf_name = _os.path.basename(sf_dir.rstrip("/"))
+    # every derivation param in the path so a constant change can never
+    # serve a store appended under the old ones
+    return refresh_stored(
+        summary_path(
+            f"ivf_store_{sf_name}_k{IVF_TRAINED_K}i{IVF_TRAINED_ITERS}"
+            f"m{INCR_DELTA_MOD}",
+        ),
+        build,
+        sources=[_os.path.join(sf_dir, "embeddings.parquet")],
+    )
 
 
 def q_ivf_cell_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3848,41 +3792,27 @@ def q_incremental_dedup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     recrawl = docs.filter((did % 7 == 0) & (did % 5 != 0)).select(
         (did + RECRAWL_OFFSET).alias("doc_id"), "text"
     )
-    from ..sources.versioned import current_version
 
-    sf_name = _os.path.basename(sf_dir.rstrip("/"))
-    # derivation params in the path so a later constant change can never
-    # serve an index trained under the old ones (review finding r7)
-    path = summary_path(
-        # every derivation param in the path, incl. the persisted band
-        # geometry (r8) — a constant change can never serve a stale index
-        f"corpus_index_{sf_name}_k{SHINGLE_K}cap{SHINGLE_MAX_DF}"
-        f"b{MINHASH_N}x{MINHASH_BAND}",
-    )
-    # Rebuild when documents.parquet changed. Listing fingerprint
-    # (relative names + sizes + count), NOT a content md5: the md5 was
-    # a full single-threaded read of the corpus on EVERY serve-path
-    # call — at 100 TB that is the whole table before the first query,
-    # where listing the part files is one directory scan (VERDICT r7
-    # #1; SCALING.md "stored-index freshness" probe).
-    import json as _json
-
-    from ..sources.cache import listing_fingerprint
-
-    fp_now = listing_fingerprint(_os.path.join(sf_dir, "documents.parquet"))
-    sidecar = path + ".src.json"
-    stale = True
-    try:
-        stale = _json.loads(open(sidecar).read()) != fp_now
-    except (OSError, ValueError):
-        pass
-    if stale or current_version(path) is None:
+    def build(path: str) -> None:
         dedup_ops.write_corpus_index(
             corpus, path, "doc_id", "text", SHINGLE_K, SHINGLE_MAX_DF,
             bands=(MINHASH_N, MINHASH_BAND),  # serve-time bands stored
         )
-        with open(sidecar, "w") as f:
-            _json.dump(fp_now, f)
+
+    sf_name = _os.path.basename(sf_dir.rstrip("/"))
+    # Rebuilt when documents.parquet's listing changes (relative names +
+    # sizes + count, never a content read: SCALING.md "stored-index
+    # freshness" probe).
+    path = refresh_stored(
+        # every derivation param in the path, incl. the persisted band
+        # geometry (r8) — a constant change can never serve a stale index
+        summary_path(
+            f"corpus_index_{sf_name}_k{SHINGLE_K}cap{SHINGLE_MAX_DF}"
+            f"b{MINHASH_N}x{MINHASH_BAND}",
+        ),
+        build,
+        sources=[_os.path.join(sf_dir, "documents.parquet")],
+    )
     return dedup_ops.incremental_dedup(
         corpus,
         fresh.unionByName(recrawl),
@@ -4051,11 +3981,8 @@ def q_capped_index_append_classify(
     so the hash gate proves the drift-guarded append serves bit-
     identically to the full rebuild, including the near-dup tier over
     rows that only exist via the append path."""
-    import json as _json
     import os as _os
-
-    from ..sources.cache import listing_fingerprint
-    from ..sources.versioned import current_version
+    import shutil as _shutil
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     did = F.col("doc_id")
@@ -4078,29 +4005,23 @@ def q_capped_index_append_classify(
     )
     delta = fresh_nat.unionByName(recrawl).unionByName(near)
 
-    sf_name = _os.path.basename(sf_dir.rstrip("/"))
-    path = summary_path(
-        f"capped_index_{sf_name}_k{SHINGLE_K}cap{SHINGLE_MAX_DF}"
-        f"b{MINHASH_N}x{MINHASH_BAND}m{_M_TOKENS}",
-    )
-    fp_now = listing_fingerprint(_os.path.join(sf_dir, "documents.parquet"))
-    sidecar = path + ".src.json"
-    stale = True
-    try:
-        stale = _json.loads(open(sidecar).read()) != fp_now
-    except (OSError, ValueError):
-        pass
-    if stale or current_version(path) is None:
-        import shutil as _shutil
-
+    def build(path: str) -> None:
         _shutil.rmtree(path, ignore_errors=True)
         dedup_ops.write_corpus_index(
             corpus, path, "doc_id", "text", SHINGLE_K, SHINGLE_MAX_DF,
             bands=(MINHASH_N, MINHASH_BAND), sets=True,
         )
         dedup_ops.append_corpus_index(spark, path, m)
-        with open(sidecar, "w") as f:
-            _json.dump(fp_now, f)
+
+    sf_name = _os.path.basename(sf_dir.rstrip("/"))
+    path = refresh_stored(
+        summary_path(
+            f"capped_index_{sf_name}_k{SHINGLE_K}cap{SHINGLE_MAX_DF}"
+            f"b{MINHASH_N}x{MINHASH_BAND}m{_M_TOKENS}",
+        ),
+        build,
+        sources=[_os.path.join(sf_dir, "documents.parquet")],
+    )
     return dedup_ops.incremental_dedup(
         None,
         delta,
@@ -4279,13 +4200,11 @@ def q_serving_funnel_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd rounds, and the serve — the hash gate proves deletion-by-
     tombstone serves bit-identically to first-principles recomputation
     over the logically purged stores."""
-    import json as _json
     import os as _os
     import shutil as _shutil
 
     from ..operators import validation as validation_ops
-    from ..sources.cache import listing_fingerprint
-    from ..sources.versioned import commit_version, current_version
+    from ..sources.versioned import commit_version
     from ..streaming.serve import delete_from_ivf_store, read_ivf_index
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -4307,28 +4226,25 @@ def q_serving_funnel_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sf_name = _os.path.basename(sf_dir.rstrip("/"))
-    fp_now = listing_fingerprint(_os.path.join(sf_dir, "documents.parquet"))
+    docs_src = _os.path.join(sf_dir, "documents.parquet")
 
     # -- corpus index: build, then tombstone the expanded delete-set --
-    cpath = summary_path(
-        f"corpus_index_del_{sf_name}_k{SHINGLE_K}cap{SHINGLE_MAX_DF}"
-        f"b{MINHASH_N}x{MINHASH_BAND}d{DELETE_MOD}",
-    )
-    sidecar = cpath + ".src.json"
-    stale = True
-    try:
-        stale = _json.loads(open(sidecar).read()) != fp_now
-    except (OSError, ValueError):
-        pass
-    if stale or current_version(cpath) is None:
-        _shutil.rmtree(cpath, ignore_errors=True)
+    def build_corpus(path: str) -> None:
+        _shutil.rmtree(path, ignore_errors=True)
         dedup_ops.write_corpus_index(
-            corpus, cpath, "doc_id", "text", SHINGLE_K, SHINGLE_MAX_DF,
+            corpus, path, "doc_id", "text", SHINGLE_K, SHINGLE_MAX_DF,
             bands=(MINHASH_N, MINHASH_BAND),
         )
-        dedup_ops.delete_from_corpus_index(spark, cpath, dels)
-        with open(sidecar, "w") as f:
-            _json.dump(fp_now, f)
+        dedup_ops.delete_from_corpus_index(spark, path, dels)
+
+    cpath = refresh_stored(
+        summary_path(
+            f"corpus_index_del_{sf_name}_k{SHINGLE_K}cap{SHINGLE_MAX_DF}"
+            f"b{MINHASH_N}x{MINHASH_BAND}d{DELETE_MOD}",
+        ),
+        build_corpus,
+        sources=[docs_src],
+    )
     inc = dedup_ops.incremental_dedup(
         None,
         delta,
@@ -4346,30 +4262,24 @@ def q_serving_funnel_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
 
     # -- IVF store: seed with the trained assignment, tombstone, serve --
-    emb_fp = listing_fingerprint(
-        _os.path.join(sf_dir, "embeddings.parquet")
-    )
-    vpath = summary_path(
-        f"ivf_store_del_{sf_name}_k{IVF_TRAINED_K}i{IVF_TRAINED_ITERS}"
-        f"d{DELETE_MOD}",
-    )
-    vsidecar = vpath + ".src.json"
-    vstale = True
-    try:
-        vstale = _json.loads(open(vsidecar).read()) != [fp_now, emb_fp]
-    except (OSError, ValueError):
-        pass
-    if vstale or current_version(vpath) is None:
-        _shutil.rmtree(vpath, ignore_errors=True)
+    def build_ivf(path: str) -> None:
+        _shutil.rmtree(path, ignore_errors=True)
         seed = _ivf_index_cached(spark, sf_dir)
 
         def writer(vdir: str) -> None:
             seed.write.parquet(_os.path.join(vdir, "index"))
 
-        commit_version(vpath, writer, {"last_batch_id": -1})
-        delete_from_ivf_store(spark, vpath, dels)
-        with open(vsidecar, "w") as f:
-            _json.dump([fp_now, emb_fp], f)
+        commit_version(path, writer, {"last_batch_id": -1})
+        delete_from_ivf_store(spark, path, dels)
+
+    vpath = refresh_stored(
+        summary_path(
+            f"ivf_store_del_{sf_name}_k{IVF_TRAINED_K}i{IVF_TRAINED_ITERS}"
+            f"d{DELETE_MOD}",
+        ),
+        build_ivf,
+        sources=[docs_src, _os.path.join(sf_dir, "embeddings.parquet")],
+    )
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < SERVE_N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
@@ -4528,8 +4438,6 @@ def _knn_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fingerprint-guarded on embeddings.parquet; no TTL (read-only data)."""
     import os as _os
 
-    from ..sources import materialize_summary
-
     sf_name = _os.path.basename(sf_dir.rstrip("/"))
 
     def build() -> DataFrame:
@@ -4541,8 +4449,6 @@ def _knn_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         summary_path(f"knn_edges_{sf_name}.parquet"),
         build,
         sources=[_os.path.join(sf_dir, "embeddings.parquet")],
-        ttl_s=None,
-        fingerprint="listing",  # O(file count) serve-path staleness
     )
 
 

@@ -170,8 +170,8 @@ def q_history_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats_availability (entries, base, means, streaks, fights, lanes,
     # availability all re-join them): sharing them per session replaces
     # ~70 re-scans of the source table with one materialization per
-    # frame — the "match store" frames a real deployment would
-    # checkpoint once (cf. domain_queries' materialize_summary for kills).
+    # frame — the "match store" frames a real deployment would store
+    # once across sessions (`sources.cache.materialize_summary`).
     anchors, matchlist, matches, participants, lane_map, kills = shared(
         spark,
         ("history_inputs", sf_dir),

@@ -134,7 +134,8 @@ def shared(spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
     For inputs several queries consume within a session (the kill
     events, the shingle frame): returning the same handles lets Spark's
     cache serve every consumer from one materialization. Artifacts
-    reused across sessions belong in `sources.materialize_summary`."""
+    reused across sessions belong in `sources.cache.refresh_stored`
+    (parquet summaries through `materialize_summary`)."""
     slot = (spark.sparkContext.applicationId, key)
     if slot in _registry:
         hits[key] += 1

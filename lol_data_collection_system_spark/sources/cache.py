@@ -6,10 +6,13 @@ The Spark-native equivalent of "cache an expensive summary" is a
 materialized table: build the DataFrame once, write it as parquet, and
 serve subsequent reads from the materialization until it goes stale.
 
-Freshness here is two-dimensional, both checked at read time:
-- a TTL (the reference's memcached expiry), and
-- source fingerprints (size+mtime of the input files the summary was
-  derived from) — a summary must never outlive a change to its inputs,
+`refresh_stored` is the one freshness protocol for every artifact reused
+across sessions — the parquet summaries of `materialize_summary` and the
+versioned stores the stored-index queries build. An artifact is fresh
+when it exists and its ``{path}.meta.json`` sidecar is both
+- younger than a TTL (the reference's memcached expiry), and
+- records the current `listing_fingerprint` of every source it was
+  derived from — an artifact must never outlive a change to its inputs,
   which a pure TTL cannot guarantee.
 
 At cluster scale this is the standard summary-table pattern: the parquet
@@ -32,24 +35,23 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Root of the materialized summaries: ``.summary_cache`` at the checkout
-#: root, or ``$SPARK_GRAFT_SUMMARY_CACHE`` (read-only checkouts,
-#: deployments, isolated runs).
-SUMMARY_CACHE_DIR = os.environ.get(
-    "SPARK_GRAFT_SUMMARY_CACHE",
-    str(Path(__file__).resolve().parents[2] / ".summary_cache"),
-)
-
 
 def summary_path(name: str) -> str:
-    """Path of the materialization ``name`` under `SUMMARY_CACHE_DIR`."""
-    return os.path.join(SUMMARY_CACHE_DIR, name)
+    """Path of the artifact ``name`` under the cache root:
+    ``$SPARK_GRAFT_SUMMARY_CACHE`` when set (read-only checkouts,
+    deployments, isolated runs), else ``.summary_cache`` at the checkout
+    root. Read at call time, so a root set after import is honoured."""
+    root = os.environ.get(
+        "SPARK_GRAFT_SUMMARY_CACHE",
+        str(Path(__file__).resolve().parents[2] / ".summary_cache"),
+    )
+    return os.path.join(root, name)
 
 
 def content_fingerprint(path: str) -> dict:
     """{"size", "md5"} of one file — the checkout-portable fingerprint
-    (mtime-free; the same bytes match on any machine). Shared by the
-    fixture oracles and the stored-index staleness sidecars."""
+    (mtime-free; the same bytes match on any machine), for the committed
+    fixtures of the fixture oracles."""
     import hashlib
 
     h = hashlib.md5()
@@ -94,45 +96,47 @@ def listing_fingerprint(path: str) -> dict:
     return {"n_files": len(entries), "entries": entries}
 
 
-def _fingerprints(sources: Sequence[str], mode: str = "stat") -> dict:
-    """One fingerprint per source. ``mode="stat"``: size+mtime — BY
-    DESIGN for TTL caches: the cache and its sources live on one
-    machine, a touch/rewrite should invalidate, and stat() is O(1).
-    Not checkout-portable (use `content_fingerprint` for committed
-    fixtures). ``mode="listing"``: `listing_fingerprint` — mtime-free
-    and O(file count), for persisted serving artifacts whose sources
-    may be directory-sized tables."""
-    out: dict[str, dict] = {}
-    for s in sources:
-        if mode == "listing":
-            out[str(s)] = listing_fingerprint(str(s))
-            continue
-        p = Path(s)
-        if p.exists():
-            st = p.stat()
-            out[str(s)] = {"size": st.st_size, "mtime": st.st_mtime}
-        else:
-            out[str(s)] = {"missing": True}
-    return out
+def _fingerprints(sources: Sequence[str]) -> dict:
+    return {str(s): listing_fingerprint(str(s)) for s in sources}
 
 
-def _is_fresh(
-    meta_path: Path,
-    sources: Sequence[str],
-    ttl_s: float | None,
-    mode: str = "stat",
-) -> bool:
-    if not meta_path.exists():
+def _is_fresh(path: str, sources: Sequence[str], ttl_s: float | None) -> bool:
+    if not os.path.exists(path):
         return False
     try:
-        meta = json.loads(meta_path.read_text())
+        meta = json.loads(Path(f"{path}.meta.json").read_text())
     except (json.JSONDecodeError, OSError):
         return False
     if ttl_s is not None and time.time() - meta.get("created_at", 0) > ttl_s:
         return False
-    # a mode change invalidates (old-shape fingerprints never compare
-    # equal to new-shape ones — rebuild once, then settle)
-    return meta.get("sources") == _fingerprints(sources, mode)
+    return meta.get("sources") == _fingerprints(sources)
+
+
+def refresh_stored(
+    path: str,
+    build: Callable[[str], None],
+    sources: Sequence[str] = (),
+    ttl_s: float | None = None,
+) -> str:
+    """Return `path`, first running ``build(path)`` unless the artifact
+    there is fresh: it exists, its ``{path}.meta.json`` sidecar is
+    younger than `ttl_s` (None = no expiry), and the sidecar records the
+    current `listing_fingerprint` of every entry in `sources`.
+
+    The fingerprints are taken BEFORE the build (an input that changes
+    mid-build leaves a stale sidecar, so the next call rebuilds — never
+    the reverse). The sidecar is removed before `build` runs and written
+    only after it returns, so an interrupted build is rebuilt on the next
+    call instead of served."""
+    if _is_fresh(path, sources, ttl_s):
+        return path
+    fps = _fingerprints(sources)
+    meta = Path(f"{path}.meta.json")
+    meta.unlink(missing_ok=True)
+    meta.parent.mkdir(parents=True, exist_ok=True)
+    build(path)
+    meta.write_text(json.dumps({"created_at": time.time(), "sources": fps}))
+    return path
 
 
 def materialize_summary(
@@ -140,70 +144,22 @@ def materialize_summary(
     path: str,
     build: Callable[[], DataFrame],
     sources: Sequence[str] = (),
-    ttl_s: float | None = 3600.0,
-    fingerprint: str = "stat",
-    refresh: "Callable[[DataFrame, dict, dict], DataFrame | None] | None" = None,
+    ttl_s: float | None = None,
 ) -> DataFrame:
-    """Return the summary at `path`, rebuilding via `build()` when stale.
+    """The summary `build()` returns, materialized as parquet at `path`
+    and refreshed by `refresh_stored`. The returned frame is a plain
+    parquet read of the materialization — lazily planned, prunable,
+    shareable across sessions."""
 
-    Fresh = the materialization exists, is younger than `ttl_s` (None =
-    no expiry), and every entry in `sources` still matches the
-    fingerprint it had at build time: ``fingerprint="stat"`` (default,
-    size+mtime — TTL-cache semantics) or ``"listing"`` (relative
-    names+sizes+count via `listing_fingerprint` — the O(file count)
-    serve-path mode for persisted indexes over directory-sized tables).
-    The returned frame is a plain parquet read of the materialization —
-    lazily planned, prunable, shareable across sessions.
-
-    ``refresh`` (VERDICT r9 stretch #8 — bounded-staleness refresh):
-    when a PRIOR materialization exists but went stale, ``refresh(
-    old_summary_df, old_source_fps, new_source_fps)`` may produce the
-    refreshed summary INCREMENTALLY — the fingerprint dicts are the
-    delta ledger (listing mode records relative part names + sizes, so
-    appended files are exactly the keys present in new and absent in
-    old), and an algebraic summary folds the delta in via its merge
-    functions (`streaming/rollup.HOURLY_MERGE`'s mechanism) instead of
-    recomputing the world. Return None to decline (falls back to the
-    full ``build()``, e.g. when files were REWRITTEN rather than
-    appended). The refreshed frame must equal a full recompute — that
-    is the caller's contract, pinned for the rollup shape in
-    tests/test_cache.py.
-    """
-    if fingerprint not in ("stat", "listing"):
-        raise ValueError(f"unknown fingerprint mode {fingerprint!r}")
-    path_p = Path(path)
-    meta_path = path_p.with_suffix(path_p.suffix + ".meta.json")
-    if not _is_fresh(meta_path, sources, ttl_s, fingerprint):
-        fps = _fingerprints(sources, fingerprint)  # BEFORE building: if an
-        # input changes mid-build the next read sees a stale fingerprint
-        # and rebuilds, never the reverse
-        new_df = None
-        if refresh is not None and path_p.exists() and meta_path.exists():
-            try:
-                old_fps = json.loads(meta_path.read_text()).get(
-                    "sources", {}
-                )
-            except (json.JSONDecodeError, OSError):
-                old_fps = None
-            if old_fps is not None:
-                new_df = refresh(
-                    spark.read.parquet(str(path_p)), old_fps, fps
-                )
-        if new_df is None:
-            new_df = build()
-        tmp = path_p.parent / f".{path_p.name}.tmp-{uuid.uuid4().hex[:8]}"
-        path_p.parent.mkdir(parents=True, exist_ok=True)
-        # the tmp write EXECUTES any refresh read of the old
-        # materialization before the old path is touched
-        new_df.write.mode("overwrite").parquet(str(tmp))
-        if path_p.exists():
-            shutil.rmtree(path_p, ignore_errors=True)
+    def write(dest: str) -> None:
+        p = Path(dest)
+        tmp = p.parent / f".{p.name}.tmp-{uuid.uuid4().hex[:8]}"
+        build().write.mode("overwrite").parquet(str(tmp))
+        shutil.rmtree(p, ignore_errors=True)
         try:
-            os.rename(tmp, path_p)
-            meta_path.write_text(
-                json.dumps({"created_at": time.time(), "sources": fps})
-            )
+            os.rename(tmp, p)
         except OSError:
             # concurrent writer won the rename — use theirs
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(str(path_p))
+
+    return spark.read.parquet(refresh_stored(path, write, sources, ttl_s))

@@ -58,7 +58,7 @@ def _read_manifest(root: Path) -> dict | None:
         return None
 
 
-def _is_fresh(manifest: dict | None, ttl_s: float | None) -> bool:
+def _within_ttl(manifest: dict | None, ttl_s: float | None) -> bool:
     if manifest is None:
         return False
     if ttl_s is None:
@@ -84,7 +84,7 @@ def create_snapshot(
     (`t.join()` to wait) — the reference's threaded pg_dump.
     """
     root = Path(path)
-    if _is_fresh(_read_manifest(root), ttl_s):
+    if _within_ttl(_read_manifest(root), ttl_s):
         return {"status": "exists", "path": str(root)}
 
     if not blocking:
@@ -127,7 +127,7 @@ def snapshot_status(path: str, ttl_s: float | None = SNAPSHOT_TTL_S) -> dict:
     )
     return {
         "exists": True,
-        "fresh": _is_fresh(manifest, ttl_s),
+        "fresh": _within_ttl(manifest, ttl_s),
         "bytes": total,
         "tables": manifest.get("tables", {}),
     }
@@ -149,7 +149,7 @@ def load_snapshot(
         raise FileNotFoundError(
             f"no committed snapshot at {path} (missing {_MANIFEST})"
         )
-    if not _is_fresh(manifest, ttl_s):
+    if not _within_ttl(manifest, ttl_s):
         raise ValueError(f"snapshot at {path} is older than ttl_s={ttl_s}")
     return {
         name: spark.read.parquet(str(root / name))

@@ -33,7 +33,7 @@ def test_materialize_summary_caches_and_invalidates(spark, tmp_path):
     assert sorted(map(tuple, out2.collect())) == [(1, "a"), (2, "b")]
     assert builds["n"] == 1
 
-    # source content change (size+mtime fingerprint) → rebuild
+    # source content change (a single file's listing: size+mtime) → rebuild
     time.sleep(0.01)
     src.write_text("v2 longer")
     materialize_summary(spark, path, build, sources=[str(src)])
@@ -58,15 +58,62 @@ def test_materialize_summary_no_sources_ttl_only(spark, tmp_path):
     assert os.path.exists(path)
 
 
+def test_materialize_summary_rebuilds_a_deleted_directory(spark, tmp_path):
+    """A sidecar whose materialization is gone is not fresh: the call
+    rebuilds and serves the rows instead of reading a missing path."""
+    import shutil
+
+    path = str(tmp_path / "gone.parquet")
+    builds = {"n": 0}
+
+    def build():
+        builds["n"] += 1
+        return spark.createDataFrame([(1, "a")], ["k", "v"])
+
+    materialize_summary(spark, path, build)
+    shutil.rmtree(path)
+    assert os.path.exists(path + ".meta.json")
+    out = materialize_summary(spark, path, build)
+    assert [tuple(r) for r in out.collect()] == [(1, "a")]
+    assert builds["n"] == 2
+
+
+def test_refresh_stored_rebuilds_after_an_interrupted_build(tmp_path):
+    """A rebuild that dies after touching its directory leaves no
+    sidecar (the old one is removed before the build runs), so the next
+    call rebuilds instead of serving the partial artifact."""
+    from lol_data_collection_system_spark.sources.cache import refresh_stored
+
+    path = str(tmp_path / "store")
+    src = tmp_path / "src.txt"
+    src.write_text("v1")
+    calls = []
+
+    def build(p: str) -> None:
+        calls.append(p)
+        os.makedirs(p, exist_ok=True)
+        if len(calls) == 2:
+            raise RuntimeError("interrupted")
+
+    assert refresh_stored(path, build, sources=[str(src)]) == path
+    src.write_text("v2 longer")
+    with pytest.raises(RuntimeError):
+        refresh_stored(path, build, sources=[str(src)])
+    assert os.path.isdir(path) and not os.path.exists(path + ".meta.json")
+    refresh_stored(path, build, sources=[str(src)])
+    assert len(calls) == 3
+    refresh_stored(path, build, sources=[str(src)])  # fresh: no build
+    assert len(calls) == 3
+
+
 def test_synthetic_kills_is_shared(spark, tmp_path, monkeypatch):
     """The fight pipeline's kills frame is built once per session and
     held in memory by the registry; nothing is written to the summary
     cache (no later session reads it)."""
     from lol_data_collection_system_spark import session
     from lol_data_collection_system_spark.plans import domain_queries as dq
-    from lol_data_collection_system_spark.sources import cache
 
-    monkeypatch.setattr(cache, "SUMMARY_CACHE_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_SUMMARY_CACHE", str(tmp_path))
     session.reset(spark)
     try:
         built = session.builds[("kills", SF_DIR)]
@@ -295,8 +342,8 @@ def test_listing_fingerprint_is_mtime_free_and_o_file_count(tmp_path):
 
 
 def test_materialize_summary_listing_mode(spark, tmp_path):
-    """fingerprint='listing' over a DIRECTORY source: an mtime touch
-    must NOT rebuild (stat mode would); a part-listing change must."""
+    """The listing fingerprint over a DIRECTORY source: an mtime touch
+    must NOT rebuild; a part-listing change must."""
     import os
     import time
 
@@ -314,7 +361,7 @@ def test_materialize_summary_listing_mode(spark, tmp_path):
         builds["n"] += 1
         return spark.range(2)
 
-    kw = dict(sources=[str(src)], ttl_s=None, fingerprint="listing")
+    kw = dict(sources=[str(src)], ttl_s=None)
     materialize_summary(spark, path, build, **kw)
     past = time.time() - 5000
     os.utime(src / "part-0", (past, past))
@@ -323,107 +370,3 @@ def test_materialize_summary_listing_mode(spark, tmp_path):
     (src / "part-1").write_bytes(b"6")  # the listing changed
     materialize_summary(spark, path, build, **kw)
     assert builds["n"] == 2
-
-
-def test_materialize_summary_incremental_refresh_equals_recompute(
-    spark, tmp_path
-):
-    """VERDICT r9 stretch #8: a stale cache with a `refresh` hook folds
-    ONLY the appended delta into the old summary via the rollup-merge
-    mechanism, and the refreshed materialization equals a full
-    recompute; a REWRITE (not an append) declines to the full build."""
-    from pyspark.sql import functions as F
-
-    from lol_data_collection_system_spark.sources.cache import (
-        materialize_summary,
-    )
-    from lol_data_collection_system_spark.streaming.rollup import (
-        hourly_partial,
-    )
-
-    src = tmp_path / "events_tbl"
-    rows0 = [
-        (1, "click", "2024-01-01 10:05:00", 10.0),
-        (2, "click", "2024-01-01 10:15:00", 20.0),
-        (3, "view", "2024-01-01 11:05:00", 5.0),
-    ]
-    rows1 = [
-        (4, "click", "2024-01-01 10:45:00", 7.0),
-        (5, "buy", "2024-01-01 12:01:00", 99.0),
-    ]
-
-    def ev_frame(rows):
-        return spark.createDataFrame(
-            rows, ["event_id", "event_type", "ts_s", "value"]
-        ).select(
-            "event_id", "event_type",
-            F.col("ts_s").cast("timestamp").alias("ts"), "value",
-        )
-
-    ev_frame(rows0).coalesce(1).write.mode("overwrite").parquet(str(src))
-
-    path = str(tmp_path / "hourly_states.parquet")
-    builds = {"n": 0}
-    refreshed_reads: list = []
-
-    def build():
-        builds["n"] += 1
-        return hourly_partial(spark.read.parquet(str(src)))
-
-    def refresh(old_df, old_fps, new_fps):
-        old_entries = old_fps[str(src)]["entries"]
-        new_entries = new_fps[str(src)]["entries"]
-        if not set(old_entries) <= set(new_entries) or any(
-            old_entries[f] != new_entries[f] for f in old_entries
-        ):
-            return None  # rewritten, not appended: decline to full build
-        fresh = sorted(set(new_entries) - set(old_entries))
-        refreshed_reads.append(fresh)
-        delta = hourly_partial(
-            spark.read.parquet(*[str(src / f) for f in fresh])
-        )
-        # algebraic merge, HOURLY_MERGE semantics: union + re-agg
-        return old_df.unionByName(delta).groupBy(
-            "hour_ms", "event_type"
-        ).agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("_sum_value").alias("_sum_value"),
-            F.max("_max_value").alias("_max_value"),
-            F.min("_first_event").alias("_first_event"),
-        )
-
-    kw = dict(
-        sources=[str(src)], ttl_s=None, fingerprint="listing",
-        refresh=refresh,
-    )
-    materialize_summary(spark, path, build, **kw)
-    assert builds["n"] == 1 and refreshed_reads == []
-
-    # append a delta part file (new names: the listing diff IS the delta)
-    ev_frame(rows1).coalesce(1).write.mode("append").parquet(str(src))
-    got = {
-        (r["hour_ms"], r["event_type"]): (
-            r["n_events"], float(r["_sum_value"]), r["_first_event"]
-        )
-        for r in materialize_summary(spark, path, build, **kw).collect()
-    }
-    assert builds["n"] == 1  # the cache miss cost the DELTA, not a build
-    assert len(refreshed_reads) == 1 and refreshed_reads[0]
-    want = {
-        (r["hour_ms"], r["event_type"]): (
-            r["n_events"], float(r["_sum_value"]), r["_first_event"]
-        )
-        for r in hourly_partial(spark.read.parquet(str(src))).collect()
-    }
-    assert got == want  # refreshed summary == full recompute
-
-    # a rewrite (old part files replaced) declines to the full build
-    ev_frame(rows0 + rows1).coalesce(1).write.mode("overwrite").parquet(
-        str(src)
-    )
-    got2 = {
-        (r["hour_ms"], r["event_type"]): r["n_events"]
-        for r in materialize_summary(spark, path, build, **kw).collect()
-    }
-    assert builds["n"] == 2  # declined -> full rebuild
-    assert got2 == {k: v[0] for k, v in want.items()}

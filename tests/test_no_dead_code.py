@@ -10,9 +10,11 @@ A public function that only tests reference has no caller in the
 program; it must be the reference implementation of a SURVEY §2 row, so
 its name must appear in COVERAGE.md.
 
-A second guard keeps the hardlink carry of versioned stores behind
-``sources/versioned.py``: no other package module calls ``os.link`` or
-names its internals. Pure AST, no Spark."""
+Two more guards keep a policy behind its owner module: the hardlink
+carry of versioned stores behind ``sources/versioned.py`` (no other
+package module calls ``os.link`` or names its internals), and the
+freshness decision of stored artifacts behind ``sources/cache.py``.
+Pure AST, no Spark."""
 
 from __future__ import annotations
 
@@ -108,41 +110,43 @@ def test_every_test_only_function_is_named_in_coverage():
     assert uncovered_test_only_functions() == []
 
 
-#: the hardlink carry of versioned stores; only `sources/versioned.py`
-#: may name them — every other store calls `versioned.carry_forward`
-_CARRY_INTERNALS = {"link_or_copy", "_link_tree", "data_files"}
+#: owner module -> the names only it may use. ``os.link`` and the
+#: hardlink carry belong to `sources/versioned.py` (every other store
+#: calls `versioned.carry_forward`); the freshness decision belongs to
+#: `sources/cache.py` (every other artifact calls `cache.refresh_stored`).
+_OWNED = {
+    "sources/versioned.py": {"os.link", "link_or_copy", "_link_tree", "data_files"},
+    "sources/cache.py": {"listing_fingerprint", "_fingerprints", "_is_fresh"},
+}
 
 
-def carry_policy_leaks() -> list[str]:
-    """Package modules other than ``sources/versioned.py`` that call
-    ``os.link`` or name a carry internal (load, attribute or import)."""
+def policy_leaks(owner: str) -> list[str]:
+    """Package modules other than `owner` that name one of its owned
+    names: a load, an attribute (``mod.name``) or an import."""
+    owned = _OWNED[owner]
     leaks: list[str] = []
     for path in sorted(PACKAGE.rglob("*.py")):
-        if path == PACKAGE / "sources" / "versioned.py":
+        if path == PACKAGE / owner:
             continue
         rel = path.relative_to(ROOT)
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
             if isinstance(node, ast.Name):
-                name = node.id
+                names = {node.id}
             elif isinstance(node, ast.Attribute):
-                name = node.attr
-                if name == "link" and getattr(node.value, "id", None) == "os":
-                    leaks.append(f"{rel}:{node.lineno} os.link")
-                    continue
+                names = {node.attr, f"{getattr(node.value, 'id', '')}.{node.attr}"}
             elif isinstance(node, ast.ImportFrom):
-                if node.module == "os" and any(
-                    a.name == "link" for a in node.names
-                ):
-                    leaks.append(f"{rel}:{node.lineno} os.link")
-                continue
+                names = {f"{node.module}.{a.name}" for a in node.names}
             elif isinstance(node, ast.alias):
-                name = node.name.rsplit(".", 1)[-1]
+                names = {node.name.rsplit(".", 1)[-1]}
             else:
                 continue
-            if name in _CARRY_INTERNALS:
-                leaks.append(f"{rel}:{node.lineno} {name}")
+            leaks.extend(f"{rel}:{node.lineno} {n}" for n in sorted(names & owned))
     return leaks
 
 
 def test_carry_policy_stays_in_versioned():
-    assert carry_policy_leaks() == []
+    assert policy_leaks("sources/versioned.py") == []
+
+
+def test_freshness_policy_stays_in_cache():
+    assert policy_leaks("sources/cache.py") == []

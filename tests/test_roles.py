@@ -7,6 +7,7 @@ stage."""
 from __future__ import annotations
 
 import random
+import re
 from collections import Counter
 
 import pytest
@@ -104,3 +105,10 @@ def test_role_assignment_plan_has_no_python_stage(spark):
         assert node not in plan, plan
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange hashpartitioning") == 1, plan
+    # no window orders by one key twice (the "earliest" rule's metric is
+    # the id, which is also every rule's tie-break)
+    orders = re.findall(r"Window \[.*\], \[[^\]]*\], \[([^\]]*)\]", final)
+    assert orders, plan
+    for order in orders:
+        keys = [re.sub(r" (ASC|DESC) NULLS (FIRST|LAST)$", "", k) for k in order.split(", ")]
+        assert len(keys) == len(set(keys)), order
